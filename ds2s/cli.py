@@ -173,9 +173,9 @@ def cmd_query(args: argparse.Namespace) -> None:
                 for term in tok.findall(word.lower()):
                     rows.append((qid, i, term))
                     i += 1
-    # queries_df coalesces the tiny batch to one partition — a raw
-    # createDataFrame spreads ~100 rows over defaultParallelism tasks and
-    # inflates every timed run with empty-task scheduling overhead
+    # queries_df holds the batch as a local relation: the engine reads it
+    # in the driver, and a per-query filter of it folds into the relation,
+    # so neither the batch nor one query's slice of it costs a Spark job
     qdf = queries_df(spark, rows=rows)
     n_q = len({r[0] for r in rows}) or 1
     runs = max(args.runs, 1)
@@ -191,8 +191,6 @@ def cmd_query(args: argparse.Namespace) -> None:
         return out, time.perf_counter() - t0
 
     if args.per_query:
-        qdf = qdf.persist()
-        qdf.count()
         out = []
         for qid in sorted({r[0] for r in rows}):
             one = qdf.filter(f"qid = {qid}")
@@ -211,7 +209,6 @@ def cmd_query(args: argparse.Namespace) -> None:
                 "algo": args.algo,
                 "k": args.k,
             }), file=sys.stderr)
-        qdf.unpersist()
         dt = None
     else:
         walls = []

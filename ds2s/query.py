@@ -10,10 +10,13 @@ declarative Spark plans:
 - ``and_count`` / ``or_count`` — boolean ops returning match counts
   (ds2i's and_query/or_query report counts, SURVEY.md §2.4).
 
-Physical notes: the lexicon join is broadcast (small dim); the postings
-join shuffles on term_id (partition-prunable once the block layout lands);
-the per-query top-k is a window row_number at small qid-cardinality —
-Spark's TakeOrderedAndProject handles the single-query serving path.
+Physical notes: each operator reads the batch's distinct terms off the
+query frame first (a ``queries_df`` frame is a local relation, so this runs
+no Spark job), then coalesces the query side to one partition.  The
+lexicon is pruned to those terms (``term IN (...)``, predicate-pushed) and
+only that pruned lexicon is broadcast, never the whole dictionary; the
+postings join shuffles on term_id; the per-query top-k is a window
+row_number at small qid-cardinality.
 
 Semantics frozen here (SURVEY.md §7.5 / FIXTURES.md F3):
 - duplicate query terms = duplicate cursors (each occurrence scores);
@@ -23,6 +26,7 @@ Semantics frozen here (SURVEY.md §7.5 / FIXTURES.md F3):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -34,13 +38,15 @@ from .queryset import queries_rows
 def queries_df(spark, rows=None) -> DataFrame:
     """(qid, ord, term) — duplicates kept, ord = in-query position.
 
-    Coalesced to one partition per ~4k rows: createDataFrame otherwise
-    spreads a 20-row reference batch over defaultParallelism partitions,
-    and every serve call then schedules that many near-empty tasks just
-    to read the batch."""
+    Built from pandas through Arrow, so the batch is a local relation held
+    in the query plan itself, not a Python RDD: projections and filters of
+    it fold into the relation, and collecting it (serving's cursor
+    resolve, the exact operators' term read, the CLI's per-query split)
+    runs no Spark job.  Operators that aggregate over the batch coalesce
+    it to one partition themselves (``_batch``)."""
     rows = rows if rows is not None else queries_rows()
-    df = spark.createDataFrame(rows, schema="qid int, ord int, term string")
-    return df.coalesce(max(1, len(rows) // 4096 + 1))
+    pdf = pd.DataFrame(rows, columns=["qid", "ord", "term"])
+    return spark.createDataFrame(pdf, schema="qid int, ord int, term string")
 
 
 def bm25_score_col(scorer: Scorer, n_docs: int, avg_len: float) -> Column:
@@ -66,27 +72,43 @@ def bm25_score_col(scorer: Scorer, n_docs: int, avg_len: float) -> Column:
     return idf * w_d
 
 
-def _with_ids(idx: InvertedIndex, qdf: DataFrame) -> DataFrame:
+def _batch(qdf: DataFrame) -> tuple[DataFrame, list[str]]:
+    """(one-partition query frame, the batch's distinct terms).
+
+    The terms are read off the RAW frame — free for a local relation,
+    where an aggregate or a coalesced frame would cost a job — and the
+    frame is coalesced once, where each operator starts: a local relation
+    spans up to defaultParallelism partitions, and every distinct/groupBy
+    over it would otherwise plan an exchange of near-empty tasks."""
+    terms = sorted({r["term"] for r in qdf.select("term").collect()})
+    return qdf.coalesce(1), terms
+
+
+def _with_ids(idx: InvertedIndex, qdf: DataFrame, terms: list[str]) -> DataFrame:
     """Resolve query-term strings → term_id via the lexicon (the tiny
     query side joins the dictionary; the 100 M-row tf table carries only
     term_id — its term-string column would dominate every shuffle's bytes
-    for zero information).  Unknown terms drop out here (OR ignores them;
-    AND counts its requirement on the RAW qdf, so they still empty the
-    conjunction).  Under cfg.dedupe_query_terms each (qid, term) keeps
+    for zero information).  The lexicon is pruned to the batch's ``terms``
+    by a pushed ``term IN`` scan filter and only that pruned lexicon is
+    broadcast — the serving path's lookup (ServingIndex._resolve_cursors)
+    reads the same pruned slice.  Unknown terms drop out here (OR ignores
+    them; AND counts its requirement on the RAW qdf, so they still empty
+    the conjunction).  Under cfg.dedupe_query_terms each (qid, term) keeps
     ONE cursor row, so a repeated query term scores once — mirrored by
     the serving path's weight collapse in ServingIndex._resolve_cursors
     (the knob was previously declared but unread: round-5 review)."""
     if idx.cfg.dedupe_query_terms:
         qdf = qdf.dropDuplicates(["qid", "term"])
-    return qdf.join(idx.lexicon.select("term", "term_id"), "term")
+    lex = idx.lexicon.filter(F.col("term").isin(terms)).select("term", "term_id")
+    return qdf.join(F.broadcast(lex), "term")
 
 
-def _scored(idx: InvertedIndex, qdf: DataFrame) -> DataFrame:
+def _scored(idx: InvertedIndex, qdf: DataFrame, terms: list[str]) -> DataFrame:
     """(qid, doc_id, score): per-doc summed BM25 over matched query cursors."""
     scorer = idx.cfg.scorer
     # len rides inside tf (ds2s.invert.build_tf) — no sizes join
     hits = (
-        _with_ids(idx, qdf)
+        _with_ids(idx, qdf, terms)
         .join(idx.tf.select("term_id", "doc_id", "tf", "len", "df"), "term_id")
         .withColumn("contrib", bm25_score_col(scorer, idx.n_docs, idx.avg_len))
     )
@@ -110,17 +132,17 @@ def ranked_or_topk(
     idx: InvertedIndex, qdf: DataFrame, k: int = 10, rank_round: int | None = 6
 ) -> DataFrame:
     """Exhaustive BM25 disjunctive top-k ([U] ds2i/queries.cpp or family)."""
-    return _topk(_scored(idx, qdf), k, rank_round)
+    return _topk(_scored(idx, *_batch(qdf)), k, rank_round)
 
 
-def _and_docs(idx: InvertedIndex, qdf: DataFrame) -> DataFrame:
+def _and_docs(idx: InvertedIndex, qdf: DataFrame, terms: list[str]) -> DataFrame:
     """(qid, doc_id) conjunction membership.
 
     A doc matches iff it contains every DISTINCT query term; a term absent
     from the lexicon makes the conjunction empty (SURVEY.md §2.3)."""
     need = qdf.groupBy("qid").agg(F.countDistinct("term").alias("n_need"))
     matched = (
-        _with_ids(idx, qdf.select("qid", "term").distinct())
+        _with_ids(idx, qdf.select("qid", "term").distinct(), terms)
         .join(idx.tf.select("term_id", "doc_id"), "term_id")
         .groupBy("qid", "doc_id")
         .agg(F.count("*").alias("n_have"))
@@ -136,16 +158,18 @@ def ranked_and_topk(
     idx: InvertedIndex, qdf: DataFrame, k: int = 10, rank_round: int | None = 6
 ) -> DataFrame:
     """BM25 conjunctive top-k: score all cursors, keep AND members only."""
-    members = _and_docs(idx, qdf)
-    scored = _scored(idx, qdf).join(members, ["qid", "doc_id"])
+    qdf, terms = _batch(qdf)
+    members = _and_docs(idx, qdf, terms)
+    scored = _scored(idx, qdf, terms).join(members, ["qid", "doc_id"])
     return _topk(scored, k, rank_round)
 
 
 def and_count(idx: InvertedIndex, qdf: DataFrame) -> DataFrame:
     """(qid, matches) — ds2i and_query semantics (count of matching docs).
     Every qid appears, 0 when empty (incl. absent-term conjunctions)."""
+    qdf, terms = _batch(qdf)
     qids = qdf.select("qid").distinct()
-    counts = _and_docs(idx, qdf).groupBy("qid").agg(F.count("*").alias("matches"))
+    counts = _and_docs(idx, qdf, terms).groupBy("qid").agg(F.count("*").alias("matches"))
     return qids.join(counts, "qid", "left").select(
         "qid", F.coalesce("matches", F.lit(0)).cast("long").alias("matches")
     )
@@ -153,9 +177,10 @@ def and_count(idx: InvertedIndex, qdf: DataFrame) -> DataFrame:
 
 def or_count(idx: InvertedIndex, qdf: DataFrame) -> DataFrame:
     """(qid, matches) — ds2i or_query semantics (docs with ≥1 term)."""
+    qdf, terms = _batch(qdf)
     qids = qdf.select("qid").distinct()
     counts = (
-        _with_ids(idx, qdf.select("qid", "term").distinct())
+        _with_ids(idx, qdf.select("qid", "term").distinct(), terms)
         .join(idx.tf.select("term_id", "doc_id"), "term_id")
         .groupBy("qid")
         .agg(F.countDistinct("doc_id").alias("matches"))

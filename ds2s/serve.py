@@ -22,8 +22,9 @@ Phase 2 — metadata-only pruning, three tiers by query-term block volume
   first/last/block_max columns only — collects to the driver; the exact
   upper-bound interval grid (union of block boundaries; summed w·block_max
   per interval) prunes there; surviving (term, block) keys re-enter the
-  plan as a broadcast literal table.  ONE applyInPandas stage total (the
-  scoring kernel).
+  plan as a local relation, shuffle-hash joined to the payloads inside
+  the scoring kernel's job.  ONE applyInPandas stage total (the scoring
+  kernel).
 - large: a SUPERBLOCK tier — per (term, superblock of ``sb_size`` blocks)
   (first_doc, last_doc, max block_max) rows, the Variable-BMW /
   wand_data_compressed analogue (PISA lineage) — is grid-pruned first;
@@ -48,10 +49,12 @@ discipline.
 
 Doc lengths travel WITH each block (``len_bytes``, encoded at build time,
 ds2s.blocks) — no driver-side dense lens array and no broadcast
-proportional to corpus size.  The lexicon lookup broadcasts the QUERY
-terms (bounded by the batch) and scans the lexicon once (``term IN``,
-predicate-pushed — the store writes the lexicon term-sorted so file-level
-min/max stats prune it, ds2s.manifest).
+proportional to corpus size.  The lexicon lookup reads the batch's terms
+off the query frame (a ``queries_df`` local relation: no Spark job) and
+scans the lexicon once (``term IN``, predicate-pushed — the store writes
+the lexicon term-sorted so file-level min/max stats prune it,
+ds2s.manifest).  A driver-tier batch therefore runs three jobs: that
+lexicon scan, the fused metadata + θ₀-seed fetch, and the scoring kernel.
 
 Upper bounds are inflated by 1+1e-9 before pruning: metadata sums are
 float math in two runtimes; the margin keeps pruning safe across last-ulp
@@ -826,7 +829,7 @@ class ServingIndex:
             return self.blocks.limit(0).select(
                 "term_id", "block_id", "n", "first_doc", "last_doc",
                 "doc_bytes", "tf_bytes", "len_bytes", "block_max_score",
-            ).join(F.broadcast(empty_keys), ["term_id", "block_id"])
+            ).join(empty_keys.hint("shuffle_hash"), ["term_id", "block_id"])
         bs = int(self.cfg.block_size)
         quantum = 10.0 ** (-rank_round) if rank_round is not None else 0.0
         seed_df = self._seed_df(cur)
@@ -951,7 +954,8 @@ class ServingIndex:
                                 "sb_id",
                                 (F.col("block_id") / self.sb_size).cast("int"),
                             )
-                            .join(F.broadcast(sbk_df), ["term_id", "sb_id"])
+                            .join(sbk_df.hint("shuffle_hash"),
+                                  ["term_id", "sb_id"])
                             .select("term_id", "sb_id", "block_id",
                                     "first_doc", "last_doc",
                                     "block_max_score")
@@ -992,10 +996,12 @@ class ServingIndex:
                          "max_score", "theta0"],
             ).astype({"qid": "int32", "term_id": "int32", "block_id": "int32"})
             # driver/superblock tiers: surv_keys is a LOCAL relation
-            # bounded by plan_collect_cap — broadcast is the right join
-            surv_keys = F.broadcast(
-                spark.createDataFrame(spdf, schema=_SURV_SCHEMA)
-            )
+            # bounded by plan_collect_cap.  A shuffle-hash join (keys as
+            # the build side) runs inside the kernel's own job; a
+            # broadcast would spend a separate job shipping the keys.
+            surv_keys = spark.createDataFrame(
+                spdf, schema=_SURV_SCHEMA
+            ).hint("shuffle_hash")
             payload_tids = sorted(set(spdf["term_id"].tolist()))
         else:
             sbk_df = spark.createDataFrame(

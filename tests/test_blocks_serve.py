@@ -202,28 +202,70 @@ def sidx001(idx001):
     return ServingIndex(idx001, codec="pef")
 
 
+def _jobs(spark, group: str, action) -> int:
+    """Spark jobs one ``action()`` runs, counted through its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "serving job-count regression probe")
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_topk_batch_job_count_bounded(spark, sidx001):
-    """The serving fixed cost is FIVE driver jobs per top-k batch (the
-    round-4 AQE-scoping win: 8 → 5), for every algorithm.  Pinned via the
-    status tracker because job count is the interference-IMMUNE serving
-    metric on a noisy shared host — a regression that splits the plan
-    into more driver jobs would otherwise hide inside wall-time noise.
-    First call is an untimed warm-up (cache materialization / python
-    worker spin-up jobs belong to no probe group)."""
+    """A driver-tier top-k batch runs THREE Spark jobs, for every
+    algorithm: the lexicon lookup, the fused metadata + θ₀-seed fetch and
+    the scoring kernel.  Reading the query batch (a local relation) and
+    joining the survivor keys (shuffle-hash, inside the kernel's job) run
+    none of their own.  Pinned via the status tracker because job count
+    is the interference-IMMUNE serving metric on a noisy shared host — a
+    regression that splits the plan into more driver jobs would otherwise
+    hide inside wall-time noise.  First call is an untimed warm-up (cache
+    materialization / python worker spin-up jobs belong to no probe
+    group)."""
     from ds2s.query import queries_df
 
-    sc = spark.sparkContext
     qdf = queries_df(spark)
     sidx001.topk(qdf, k=10, algo="bmw").collect()  # warm-up
     for algo in ("bmw", "maxscore", "wand"):
-        group = f"jobcount-{algo}"
-        sc.setJobGroup(group, "serving job-count regression probe")
-        try:
-            sidx001.topk(qdf, k=10, algo=algo).collect()
-        finally:
-            sc.setJobGroup(None, None)
-        n = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert 0 < n <= 5, (algo, n)
+        n = _jobs(spark, f"jobcount-{algo}",
+                  lambda: sidx001.topk(qdf, k=10, algo=algo).collect())
+        assert 0 < n <= 3, (algo, n)
+
+
+@pytest.fixture(scope="module")
+def tail_idx(spark):
+    """2000 docs over a ~1000-term identifier tail: a lexicon far larger
+    than any query batch."""
+    from ds2s.invert import build_index
+
+    rows = [
+        (d, "common w%d id%d var%d" % (d % 7, d % 50, (d * 31) % 997))
+        for d in range(2000)
+    ]
+    corpus = spark.createDataFrame(rows, schema="doc_id long, content string")
+    return build_index(corpus, build_arrays=False)
+
+
+def test_exact_batch_job_count_bounded(spark, tail_idx):
+    """The exact operators' job counts on a lexicon far larger than the
+    batch — the shape where adaptive execution, seeing a tiny local query
+    side, would broadcast IT and add jobs (measured: 5 / 12 / 10 / 8).
+    The operators instead read the batch's terms off the raw frame,
+    broadcast only the lexicon pruned to those terms and coalesce the
+    query side to one partition."""
+    rows = [(0, 0, "common"), (0, 1, "id3"), (1, 0, "var5"), (1, 1, "w2"),
+            (2, 0, "nope")]
+    assert tail_idx.lexicon.count() > 100 * len(rows)
+    bounds = {"ranked_or_topk": 3, "ranked_and_topk": 12,
+              "and_count": 9, "or_count": 6}
+    for op, bound in bounds.items():
+        fn = getattr(Q, op)
+        fn(tail_idx, Q.queries_df(spark, rows)).collect()  # warm-up
+        n = _jobs(spark, f"jobcount-{op}",
+                  lambda: fn(tail_idx, Q.queries_df(spark, rows)).collect())
+        assert 0 < n <= bound, (op, n)
 
 
 def test_block_max_from_encode_equals_builder(idx001, sidx001):
@@ -316,8 +358,9 @@ def test_relational_pruning_skips_blocks(spark, skew_idx):
 
 def test_serving_without_auto_broadcast(spark, skew_idx):
     """With every automatic broadcast disabled (threshold -1), the serving
-    plan still works and still matches the oracle — the only broadcasts
-    are the explicit query-side hints, never the lexicon/blocks."""
+    plan still works and still matches the oracle — the only broadcast is
+    the exact path's explicit hint on the lexicon PRUNED to the batch's
+    terms, never the whole lexicon or the block table."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -428,6 +471,23 @@ def test_superblock_tier_bounds_plan_input(spark, hot_idx):
     )
     assert sidx2.last_plan["tier"] == "kernel"
     assert sidx2.last_plan["kernel_input_bound"] <= 300, sidx2.last_plan
+
+
+def test_superblock_and_kernel_tier_job_counts(spark, hot_idx):
+    """Steady-state jobs per BMW batch in the two large tiers, forced via
+    ``plan_collect_cap``: the superblock tier's block-metadata fetch joins
+    the surviving (term, superblock) keys shuffle-hash, inside the fetch's
+    own job (≤ 4: lexicon, superblock + seed fetch, block metadata,
+    kernel); the kernel tier's lazy plan stays ≤ 7."""
+    qdf = Q.queries_df(spark, rows=[(0, 0, "rare"), (0, 1, "hot")])
+    sidx = ServingIndex(hot_idx, plan_collect_cap=2000)
+    sidx2 = ServingIndex(hot_idx, blocks=sidx.blocks, plan_collect_cap=50)
+    for s, tier, bound in ((sidx, "superblock", 4), (sidx2, "kernel", 7)):
+        s.topk(qdf, k=10, algo="bmw").collect()  # warm-up
+        n = _jobs(spark, f"jobcount-{tier}",
+                  lambda: s.topk(qdf, k=10, algo="bmw").collect())
+        assert s.last_plan["tier"] == tier
+        assert 0 < n <= bound, (tier, n)
 
 
 def test_seed_cap_preserves_exactness(spark, idx001):
