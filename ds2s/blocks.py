@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .codecs import decode_docs, decode_tfs, encode_docs, encode_tfs
+from .codecs.varint import U32RangeError
 from .config import DEFAULT_CONFIG, IndexConfig
 
 BLOCKS_SCHEMA = (
@@ -85,13 +86,14 @@ def _candidate_encodings(encode, values, universe, candidates):
     """Every candidate encoding that is ELIGIBLE for these values: a codec
     whose format cannot represent them (gvb is u32-only; docIDs past 2^32
     are in-contract at 10^12-file scale) drops out of the race instead of
-    killing the encode task (round-5 review finding)."""
+    killing the encode task (round-5 review finding).  Only that range
+    error means ineligible; any other encoder error fails the encode."""
     outs = []
     for c in candidates:
         try:
             outs.append(encode(values, universe, c) if universe is not None
                         else encode(values, c))
-        except ValueError:
+        except U32RangeError:
             continue
     if not outs:  # ef/pef have no range limit, so this cannot happen
         raise ValueError("no codec could encode the block")

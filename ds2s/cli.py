@@ -110,7 +110,7 @@ def cmd_build(args: argparse.Namespace) -> None:
         # nothing collected beyond two counts).
         from ds2s.blocks import decode_blocks_flat
 
-        dec = decode_blocks_flat(store.load_blocks(spark)).select(
+        dec = decode_blocks_flat(store.load_table(spark, "blocks")).select(
             "term_id", "doc_id", "tf"
         )
         tf = idx.tf.select("term_id", "doc_id", "tf")

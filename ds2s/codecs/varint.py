@@ -17,10 +17,15 @@ from .bitio import put_u32
 MAX32 = np.uint64(0xFFFFFFFF)
 
 
+class U32RangeError(ValueError):
+    """A value past u32: group-varint cannot represent it.  The one
+    encode failure that means "codec ineligible", not "encoder bug"."""
+
+
 def gvb_encode(values: np.ndarray) -> bytes:
     v = np.asarray(values, dtype=np.uint64)
     if np.any(v > MAX32):
-        raise ValueError("group-varint encodes u32 values only")
+        raise U32RangeError("group-varint encodes u32 values only")
     v = v.astype(np.uint32)
     n = len(v)
     out = bytearray(put_u32(n))

@@ -12,7 +12,9 @@ Iceberg partitioned tables when a runtime jar is present, SURVEY.md §1.6):
     corpus_manifest/            doc_id, content_sha256   (per-row invariant)
     sizes/  lexicon/            dimension tables
     blocks/bucket=K/            encoded posting blocks, bucket = term_id % B
-    manifest.jsonl              one line per completed unit: lineage + metrics
+    superblocks/  wand_max/     derived pruning tiers
+    manifest.jsonl              one line per completed unit: lineage +
+                                metrics + the table's Spark schema
     _index.json                 frozen IndexConfig + collection stats
 
 Resume protocol: a bucket is complete iff its manifest line exists —
@@ -21,6 +23,20 @@ write succeeds, so a crash mid-bucket leaves no line and the bucket is
 rewritten idempotently (overwrite) on the next run.  Each line carries
 lineage (source path, config hash) + metrics (rows, bytes, wall seconds),
 the "_metrics table" of SURVEY.md §2.7.
+
+Schema record: every table unit's line also carries ``schema``, the Spark
+schema (``StructType.jsonValue()``) of the table as written — the
+``blocks_bucket_K`` lines all carry the blocks table's schema, ``bucket``
+partition column included.  It lives in the manifest line, written by the
+same atomic append that marks the unit complete, never in a file inside
+the table directory (store bytes stay the table bytes).  Every read of a
+store table (``IndexStore.load_table``) uses the recorded schema, so
+opening a store runs no Spark schema-inference job, and an empty table (a
+no-token corpus writes a part-file-less ``blocks/``) reads like any
+other.  A table unit whose line has no schema (a store written before the
+record existed) is stale, exactly like a line from a foreign config
+fingerprint: ``write_checkpointed`` rewrites it, and ``from_store``
+refuses a stale lexicon or blocks bucket.
 """
 
 from __future__ import annotations
@@ -34,6 +50,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .blocks import blocks_from_tf, superblock_agg
 from .config import IndexConfig
@@ -73,6 +90,16 @@ class IndexStore:
                     row = json.loads(line)
                     units[row["unit"]] = row
         return units
+
+    @staticmethod
+    def unit_current(name: str, row: dict, fp: str | None) -> bool:
+        """Whether manifest line ``row`` vouches for unit ``name`` under
+        config fingerprint ``fp`` (None: a store too old to record one).
+        A line from another config is stale, and so is a table unit's
+        line without a schema record: it predates the record."""
+        return (fp is None or row.get("config") == fp) and (
+            "schema" in row or name == "_index"
+        )
 
     def _rewrite_manifest(self, units: dict) -> None:
         """The ONE atomic manifest rewrite (tmp + POSIX rename) — both
@@ -163,7 +190,7 @@ class IndexStore:
         done = {
             name: row
             for name, row in self.completed_units().items()
-            if row.get("config") == fp
+            if self.unit_current(name, row, fp)
         }
         bucket_names = [f"blocks_bucket_{k}" for k in range(n_buckets)]
         # Invalidate-before-overwrite: any unit this run will (re)write
@@ -180,7 +207,8 @@ class IndexStore:
         written = 0
         mlock = threading.Lock()  # _append_manifest is read-modify-write
 
-        def record(name: str, n_rows: int, nbytes: int, wall_s: float) -> None:
+        def record(name: str, n_rows: int, nbytes: int, wall_s: float,
+                   schema: StructType) -> None:
             with mlock:
                 self._append_manifest(
                     {
@@ -191,6 +219,7 @@ class IndexStore:
                         "bytes": int(nbytes),
                         "wall_s": round(wall_s, 3),
                         "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                        "schema": schema.jsonValue(),
                     }
                 )
 
@@ -201,8 +230,8 @@ class IndexStore:
             if fail_after_units is not None and written >= fail_after_units:
                 raise RuntimeError(f"injected failure before unit {name}")
             t0 = time.perf_counter()
-            n_rows, nbytes = fn()
-            record(name, n_rows, nbytes, time.perf_counter() - t0)
+            n_rows, nbytes, schema = fn()
+            record(name, n_rows, nbytes, time.perf_counter() - t0, schema)
             with mlock:
                 written += 1
 
@@ -216,8 +245,8 @@ class IndexStore:
                 df.write.mode("overwrite").parquet(str(self.root / sub))
                 # count from the written files (parquet footer metadata) —
                 # never re-executes the producing pipeline
-                n = spark.read.parquet(str(self.root / sub)).count()
-                return n, _dir_bytes(self.root / sub)
+                n = self._read(spark, sub, df.schema).count()
+                return n, _dir_bytes(self.root / sub), df.schema
 
             return run
 
@@ -252,11 +281,14 @@ class IndexStore:
                 str(self.root / "blocks")
             )
             wall = time.perf_counter() - t0
+            # partitionBy stores `bucket` in the directory names; a read
+            # lists it last, where withColumn already put it
+            schema = bucketed.schema
             # ONE footer-metadata count job for all buckets, not one per
             # bucket (the per-bucket variant was n_buckets driver jobs)
             counts = {
                 int(r["bucket"]): int(r["n"])
-                for r in self.load_blocks(spark)
+                for r in self._read(spark, "blocks", schema)
                 .groupBy("bucket")
                 .agg(F.count("*").alias("n"))
                 .collect()
@@ -265,7 +297,7 @@ class IndexStore:
                 sub = self.root / "blocks" / f"bucket={k}"
                 record(name, counts.get(k, 0),
                        _dir_bytes(sub) if sub.exists() else 0,
-                       wall / n_buckets)
+                       wall / n_buckets, schema)
                 with mlock:
                     written += 1
 
@@ -341,7 +373,8 @@ class IndexStore:
         unit(
             "superblocks",
             plain(
-                lambda: superblock_agg(self.load_blocks(spark), sb_size),
+                lambda: superblock_agg(self.load_table(spark, "blocks"),
+                                       sb_size),
                 "superblocks",
             ),
         )
@@ -393,51 +426,34 @@ class IndexStore:
         return written
 
     # -- load --------------------------------------------------------------
-    def load_blocks(self, spark: SparkSession) -> DataFrame:
-        """Stored blocks.  Fallback to an explicit schema when inference
-        fails: a no-token corpus writes an EMPTY blocks/ dir (only
-        _SUCCESS), where schema inference raises an unrelated-looking
-        AnalysisException and the store could never complete (round-5
-        review finding).  Inference stays the primary path so a stored
-        layout is always read as written."""
-        from pyspark.errors import AnalysisException
+    def load_table(self, spark: SparkSession, name: str,
+                   units: dict[str, dict] | None = None) -> DataFrame:
+        """Stored table ``name`` (``blocks`` included, with its ``bucket``
+        partition column), read under the schema its manifest line
+        recorded at write time — no schema-inference job, and an empty
+        table reads as an empty frame.  ``units`` is a
+        ``completed_units()`` snapshot to take the record from (default:
+        the manifest now).  A table with no schema record — never
+        completed, or written before the record existed — raises."""
+        units = self.completed_units() if units is None else units
+        row = units.get("blocks_bucket_0" if name == "blocks" else name)
+        if row is None or "schema" not in row:
+            raise RuntimeError(
+                f"store at {self.root} has no schema record for table "
+                f"{name!r} — rerun write_checkpointed"
+            )
+        return self._read(spark, name, StructType.fromJson(row["schema"]))
 
-        path = str(self.root / "blocks")
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            from .blocks import BLOCKS_SCHEMA_SCORED
-
-            return spark.read.schema(
-                BLOCKS_SCHEMA_SCORED + ", bucket int"
-            ).parquet(path)
-
-    # explicit schemas for tables that may legitimately be EMPTY (a
-    # no-token corpus): schema inference fails on a part-file-less dir
-    _EMPTY_FALLBACK_SCHEMAS = {
-        "superblocks": "term_id int, sb_id int, first_doc long, "
-                       "last_doc long, sb_max_score double, n_blocks long",
-        "wand_max": "term_id int, max_score double",
-    }
-
-    def load_table(self, spark: SparkSession, name: str) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(str(self.root / name))
-        except AnalysisException:
-            schema = self._EMPTY_FALLBACK_SCHEMAS.get(name)
-            if schema is None:
-                raise
-            return spark.read.schema(schema).parquet(str(self.root / name))
+    def _read(self, spark: SparkSession, name: str,
+              schema: StructType) -> DataFrame:
+        return spark.read.schema(schema).parquet(str(self.root / name))
 
     def load_meta(self) -> dict:
         return json.loads((self.root / "_index.json").read_text())
 
     def verify_sha256(self, corpus: DataFrame, content_col: str = "content") -> int:
         """Rows whose stored sha256 differs from the live source (must be 0)."""
-        spark = corpus.sparkSession
-        stored = spark.read.parquet(str(self.root / "corpus_manifest"))
+        stored = self.load_table(corpus.sparkSession, "corpus_manifest")
         live = with_sha256(corpus, content_col).select(
             "doc_id", F.col("content_sha256").alias("live_sha")
         )

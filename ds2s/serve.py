@@ -578,7 +578,11 @@ class ServingIndex:
         index IS the tables; no source corpus needed.  The scorer comes
         from the config frozen in _index.json (block_max_score is baked
         with the build-time scorer — serving with another would desync
-        pruning bounds from kernel scores)."""
+        pruning bounds from kernel scores).
+
+        A load runs no Spark job, cached or not: every table is read under
+        the schema its manifest line recorded at write time (no schema
+        inference), and the caches it sets up fill on first use."""
         self = cls.__new__(cls)
         meta = store.load_meta()
         self.cfg = cfg or (
@@ -612,7 +616,7 @@ class ServingIndex:
             # _index records the fingerprint its run wrote under; a unit
             # line from another config vouches for data this meta does
             # not describe
-            return want_fp is None or row.get("config") == want_fp
+            return store.unit_current(name, row, want_fp)
 
         required = ["lexicon"] + [
             f"blocks_bucket_{k}" for k in range(int(meta.get("n_buckets", 0)))
@@ -625,18 +629,18 @@ class ServingIndex:
                 "serving"
             )
         superblocks = (
-            store.load_table(spark, "superblocks")
+            store.load_table(spark, "superblocks", units)
             if complete("superblocks") else None
         )
         wand = (
-            store.load_table(spark, "wand_max")
+            store.load_table(spark, "wand_max", units)
             if complete("wand_max") else None
         )
         self._init_tables(
-            lexicon=store.load_table(spark, "lexicon"),
+            lexicon=store.load_table(spark, "lexicon", units),
             n_docs=meta["n_docs"],
             avg_len=meta["avg_len"],
-            blocks=store.load_blocks(spark),
+            blocks=store.load_table(spark, "blocks", units),
             wand=wand,
             superblocks=superblocks,
             seed_max_blocks=seed_max_blocks,

@@ -234,6 +234,30 @@ def test_topk_batch_job_count_bounded(spark, sidx001):
         assert 0 < n <= 3, (algo, n)
 
 
+def test_from_store_runs_no_spark_job(tmp_path, spark, synth_idx):
+    """Opening a stored index is the ``succinct::mapper::map`` analogue:
+    every table is read under the schema its manifest line recorded, so
+    ``from_store`` runs no schema-inference job — 0 jobs, cached or not
+    (the cache fills on first use).  The probe's own sanity: the cache
+    fill it defers does run under a counted group."""
+    from ds2s.manifest import IndexStore
+
+    store = IndexStore(str(tmp_path / "store"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=2)
+    for cache_blocks in (False, True):
+        loaded = []
+        n = _jobs(spark, f"jobcount-from-store-{cache_blocks}",
+                  lambda: loaded.append(ServingIndex.from_store(
+                      spark, store, cache_blocks=cache_blocks)))
+        sidx = loaded[0]
+        try:
+            assert n == 0, (cache_blocks, n)
+            assert _jobs(spark, f"jobcount-fill-{cache_blocks}",
+                         sidx.blocks.count) > 0
+        finally:
+            sidx.unpersist()
+
+
 @pytest.fixture(scope="module")
 def tail_idx(spark):
     """2000 docs over a ~1000-term identifier tail: a lexicon far larger

@@ -226,3 +226,23 @@ def test_auto_codec_skips_gvb_past_u32():
     db, tb = _encode_one(docs, tfs, universe, "auto")
     assert np.array_equal(decode_docs(db)[0], docs)
     assert np.array_equal(decode_tfs(tb)[0], tfs)
+
+
+def test_auto_codec_fails_on_unrelated_encoder_error(monkeypatch):
+    """Only gvb's u32 range error drops a codec from the 'auto' race: any
+    other ValueError out of an encoder is a bug and must fail the encode,
+    not silently change which codec wins."""
+    from ds2s import blocks
+
+    real = blocks.encode_docs
+
+    def broken(values, universe, codec):
+        if codec == "interp":
+            raise ValueError("encoder bug")
+        return real(values, universe, codec)
+
+    monkeypatch.setattr(blocks, "encode_docs", broken)
+    docs = np.array([3, 9, 40], dtype=np.uint64)
+    tfs = np.array([1, 2, 3], dtype=np.uint64)
+    with pytest.raises(ValueError, match="encoder bug"):
+        blocks._encode_one(docs, tfs, 64, "auto")

@@ -46,7 +46,7 @@ def test_checkpoint_resume_roundtrip(tmp_path, spark, synth_idx):
 
     # loaded blocks decode to exactly the uncompressed postings
     got = (
-        decode_blocks_flat(store.load_blocks(spark))
+        decode_blocks_flat(store.load_table(spark, "blocks"))
         .orderBy("term_id", "pos")
         .select("term_id", "doc_id", "tf")
         .toPandas()
@@ -182,6 +182,26 @@ def test_store_lexicon_filter_pushdown(tmp_path, spark, synth_idx):
     )
     plan = lex._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [In(term" in plan, plan
+
+
+def test_recorded_schemas_read_tables_as_written(tmp_path, spark, synth_idx):
+    """Every store table's recorded schema equals what parquet schema
+    inference reads off the written files — ``bucket`` partition column
+    included — so reading under the record changes no column, type or
+    order.  The blocks bucket lines share one schema."""
+    import json
+
+    store = IndexStore(str(tmp_path / "schemas"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
+    for name in ("corpus_manifest", "sizes", "lexicon", "blocks",
+                 "superblocks", "wand_max"):
+        inferred = spark.read.parquet(str(store.root / name)).schema
+        assert store.load_table(spark, name).schema == inferred, name
+    units = store.completed_units()
+    bucket_schemas = {json.dumps(units[f"blocks_bucket_{k}"]["schema"])
+                      for k in range(N_BUCKETS)}
+    assert len(bucket_schemas) == 1
+    assert "bucket" in store.load_table(spark, "blocks").columns
 
 
 def test_cli_build_and_query(tmp_path, spark):
@@ -323,7 +343,7 @@ def test_config_change_invalidates_resume(tmp_path, spark, synth_idx):
     rewritten = store.write_checkpointed(idx2, source="synth", n_buckets=2)
     assert rewritten == 3 + 2 + 2 + 1
     # and the stored blocks really are 32-posting blocks now
-    assert store.load_blocks(spark).agg({"n": "max"}).collect()[0][0] <= 32
+    assert store.load_table(spark, "blocks").agg({"n": "max"}).collect()[0][0] <= 32
 
 
 def test_sha256_detects_tamper(tmp_path, spark, synth_idx):

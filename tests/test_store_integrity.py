@@ -10,7 +10,9 @@ The store protocol under test:
     "never completed" under every config;
   * from_store trusts only manifest-complete units: derivable tiers
     (wand_max, superblocks) fall back to recomputation, required tables
-    (lexicon, blocks buckets) fail loudly.
+    (lexicon, blocks buckets) fail loudly;
+  * every table is read under the schema its manifest line recorded; a
+    line without that record is stale, like a foreign fingerprint.
 """
 
 from __future__ import annotations
@@ -291,3 +293,89 @@ def test_uncached_store_serving_prunes_buckets(tmp_path, spark, synth_idx):
             )
     finally:
         sidx.unpersist()
+
+
+def _exact_equals_store(spark, idx, sidx, rows) -> None:
+    from ds2s import query as Q
+
+    qdf = Q.queries_df(spark, rows=rows)
+    exact = (
+        Q.ranked_or_topk(idx, qdf, k=5)
+        .orderBy("qid", "rank").toPandas().reset_index(drop=True)
+    )
+    for algo in ("bmw", "maxscore", "wand"):
+        got = (
+            sidx.topk(qdf, k=5, algo=algo)
+            .orderBy("qid", "rank").toPandas().reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(
+            got.astype({"qid": "int64", "rank": "int64"}),
+            exact.astype({"qid": "int64", "rank": "int64"}),
+            check_exact=False, atol=1e-8,
+        )
+
+
+def test_no_token_corpus_store_serves_empty(tmp_path, spark):
+    """A corpus with no tokens writes a store whose blocks dir holds no
+    part file (schema inference cannot read it); the recorded schema
+    reads it as an empty table, so the store completes, loads and serves
+    empty results — cached and uncached."""
+    from ds2s.invert import build_index
+    from ds2s.query import queries_df
+    from ds2s.serve import ServingIndex
+
+    corpus = spark.createDataFrame(
+        [(0, ""), (1, " ... "), (2, "!!")], schema="doc_id long, content string"
+    )
+    idx = build_index(corpus, build_arrays=False)
+    store = IndexStore(str(tmp_path / "empty"))
+    assert store.write_checkpointed(idx, source="empty",
+                                    n_buckets=N_BUCKETS) == TOTAL_UNITS
+    assert not list((store.root / "blocks").glob("**/*.parquet"))
+    assert store.load_table(spark, "blocks").count() == 0
+    qdf = queries_df(spark, rows=[(0, 0, "def"), (1, 0, "class")])
+    for cache_blocks in (True, False):
+        sidx = ServingIndex.from_store(spark, store, cache_blocks=cache_blocks)
+        try:
+            for algo in ("bmw", "maxscore", "wand"):
+                assert sidx.topk(qdf, k=5, algo=algo).count() == 0
+        finally:
+            sidx.unpersist()
+
+
+def test_schemaless_store_refused_then_rewritten(tmp_path, spark, synth_idx):
+    """A store whose manifest lines carry no schema record (written before
+    the record existed) is stale: from_store refuses it, naming the
+    lexicon and every blocks bucket, and ONE write_checkpointed rerun
+    rewrites every table unit and makes it servable."""
+    from ds2s.serve import ServingIndex
+
+    store = IndexStore(str(tmp_path / "schemaless"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
+    rows = [
+        {k: v for k, v in json.loads(l).items() if k != "schema"}
+        for l in store.manifest_path.read_text().splitlines()
+        if l.strip()
+    ]
+    store.manifest_path.write_text("".join(json.dumps(r) + "\n" for r in rows))
+
+    with pytest.raises(RuntimeError, match="incomplete") as err:
+        ServingIndex.from_store(spark, store)
+    for unit in ["lexicon"] + [f"blocks_bucket_{k}" for k in range(N_BUCKETS)]:
+        assert unit in str(err.value), (unit, err.value)
+
+    # every unit but _index (which holds no table) is rewritten
+    assert store.write_checkpointed(
+        synth_idx, source="synth", n_buckets=N_BUCKETS
+    ) == TOTAL_UNITS - 1
+    assert all("schema" in r for u, r in store.completed_units().items()
+               if u != "_index")
+    sidx = ServingIndex.from_store(spark, store)
+    try:
+        _exact_equals_store(spark, synth_idx, sidx,
+                            [(0, 0, "def"), (0, 1, "return"), (1, 0, "class")])
+    finally:
+        sidx.unpersist()
+    assert store.write_checkpointed(
+        synth_idx, source="synth", n_buckets=N_BUCKETS
+    ) == 0
