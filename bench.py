@@ -147,6 +147,7 @@ def main() -> None:
         E._IDX_CACHE.clear()
         E._SIDX_CACHE.clear()
         E._STORE_CACHE.clear()
+        E._STORE_SIDX_CACHE.clear()
         E._GROUPS_CACHE.clear()
         E._PAIRS_CACHE.clear()
         spark.catalog.clearCache()

@@ -320,19 +320,25 @@ def _gif_lzw_pack9(codes: np.ndarray) -> bytes:
     ).tobytes()
 
 
+# a frame's width is a u16 in the image descriptor (and the logical screen)
+_GIF_MAX_WIDTH = 0xFFFF
+
+
 def _gif_frame_widths(n: int, n_frames: int) -> list[int]:
     """Balanced partition of n payload bytes into min(n_frames, n) frames
-    — frames COVER the payload exactly (unlike frame_sample's declared
-    prefix semantics), so decode-concat reproduces the source bytes and
-    the gif operators can share the txt oracles."""
-    k = min(n_frames, n)
+    — more when a frame would pass the u16 width limit, so every width
+    fits — frames COVER the payload exactly (unlike frame_sample's
+    declared prefix semantics), so decode-concat reproduces the source
+    bytes and the gif operators can share the txt oracles."""
+    k = max(min(n_frames, n), -(-n // _GIF_MAX_WIDTH))
     base, rem = divmod(n, k)
     return [base + 1 if i < rem else base for i in range(k)]
 
 
 def gif_bytes(raw: bytes, n_frames: int = 4) -> bytes:
     """One payload (n ≥ 1 bytes) → a complete, spec-valid ANIMATED GIF89a:
-    min(n_frames, n) frames of 8-bit pixels on the identity grayscale
+    ``_gif_frame_widths`` frames (min(n_frames, n) while each fits the
+    u16 width) of 8-bit pixels on the identity grayscale
     global palette, each frame a w×1 strip holding a balanced-partition
     slice of the payload, LZW-coded with a clear code before every pixel
     (code width pinned at 9 bits; vectorized bit packing — no per-pixel
@@ -575,17 +581,27 @@ def gif_frame_sample(media: DataFrame) -> DataFrame:
     Because gif_media_table's frames balanced-partition the document
     bytes, frame i of a doc is exactly a substring of the source text —
     an exact DuckDB oracle (no decoder on the oracle side), making this
-    the one frame-extraction operator with full engine-vs-SQL parity."""
+    the one frame-extraction operator with full engine-vs-SQL parity.
+
+    The byte partition may split a multi-byte UTF-8 character; its bytes
+    then count in the pixels of both frames, and its text belongs to the
+    frame it ends in, so a document's frame texts concatenate back to the
+    document."""
+    import codecs
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"doc_id": [], "frame_id": [], "n_px": [], "frame_text": []}
             for doc_id, media_bytes in zip(pdf["doc_id"], pdf["media"]):
-                for i, fr in enumerate(_gif_decode_frames(bytes(media_bytes))):
+                frames = _gif_decode_frames(bytes(media_bytes))
+                text = codecs.getincrementaldecoder("utf-8")()
+                for i, fr in enumerate(frames):
                     out["doc_id"].append(doc_id)
                     out["frame_id"].append(i)
                     out["n_px"].append(len(fr))
-                    out["frame_text"].append(fr.tobytes().decode("utf-8"))
+                    out["frame_text"].append(text.decode(
+                        fr.tobytes(), final=i == len(frames) - 1
+                    ))
             yield pd.DataFrame(out)
 
     return media.select("doc_id", "media").mapInPandas(

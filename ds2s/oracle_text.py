@@ -431,16 +431,18 @@ ORDER BY doc_id, pos"""
 
 def sql_gif_frame_sample(n_frames: int = 4) -> str:
     """The gif_frame_sample oracle: gif_media_table's frames
-    balanced-partition the document bytes (min(n_frames, n) frames,
-    lengths n//k (+1 for the first n%k frames) — see
-    ds2s.multimodal._gif_frame_widths), so each decoded frame is exactly
+    balanced-partition the document bytes (k = min(n_frames, n) frames,
+    or ceil(n/65535) if more, so each width fits a u16; lengths n//k (+1
+    for the first n%k frames) — see ds2s.multimodal._gif_frame_widths),
+    so each decoded frame is exactly
     a substring of the source text (ASCII corpus: codepoints == bytes).
     No decoder on the oracle side — this checks the engine's real
     container parse + LZW decode against pure string arithmetic."""
     return f"""
 WITH d AS (
   SELECT doc_id, text, length(text) AS n,
-         least({n_frames}, length(text)) AS k
+         greatest(least({n_frames}, length(text)),
+                  (length(text) + 65534) // 65535) AS k
   FROM documents WHERE length(text) > 0
 )
 SELECT d.doc_id,
@@ -452,7 +454,5 @@ SELECT d.doc_id,
               CAST((d.n // d.k)
                    + CASE WHEN t.i < d.n % d.k THEN 1 ELSE 0 END AS INT)
              ) AS frame_text
-FROM d
-CROSS JOIN (SELECT unnest(generate_series(0, {n_frames} - 1)) AS i) t
-WHERE t.i < d.k
+FROM d, unnest(generate_series(0, d.k - 1)) AS t(i)
 ORDER BY d.doc_id, frame_id"""

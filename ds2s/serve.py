@@ -6,11 +6,13 @@ heap algorithms.  A per-posting Python loop cannot survive translation
 (SURVEY.md §4 last row), so this module implements the same *pruning
 semantics* vectorized, exact by construction.  The query PLAN is computed
 centrally (the role a ds2i search node's query thread plays); the payload
-work stays distributed, and payloads of pruned blocks never shuffle:
+work stays distributed, and payloads of pruned blocks never shuffle —
+except for a batch small enough to fetch whole and score in the driver:
 
 Phase 1 — θ₀ seed (tiny): the rarest query term's highest-block-max blocks
-are top-N-capped *relationally* (a per-term window over block metadata),
-so at most ``seed_max_blocks`` payload rows per term leave the scan; their
+are top-N-capped *relationally* (a per-term window over block metadata;
+in driver numpy when the batch's blocks were fetched whole), so at most
+``seed_max_blocks`` payload rows per term leave the scan; their
 tf+len payloads decode in the driver, and θ₀ = k-th best single-term lower
 bound (0 if fewer than k).  Any subset of true scores is a valid lower
 bound on the final k-th score, so the cap is always safe.
@@ -18,13 +20,17 @@ bound on the final k-th score, so the cap is always safe.
 Phase 2 — metadata-only pruning, three tiers by query-term block volume
 (``n_blocks ≈ Σ df/128`` estimated from the lexicon, no extra scan):
 
-- small (≤ plan_collect_cap): block metadata of the query's terms —
-  first/last/block_max columns only — collects to the driver; the exact
-  upper-bound interval grid (union of block boundaries; summed w·block_max
-  per interval) prunes there; surviving (term, block) keys re-enter the
-  plan as a local relation, shuffle-hash joined to the payloads inside
-  the scoring kernel's job.  ONE applyInPandas stage total (the scoring
-  kernel).
+- small (≤ plan_collect_cap): block metadata of the query's terms
+  collects to the driver; the exact upper-bound interval grid (union of
+  block boundaries; summed w·block_max per interval) prunes there.  A
+  batch of at most ``_DRIVER_FETCH_BLOCKS`` estimated blocks (a few MB)
+  fetches every block of its terms, payloads included, in ONE collect;
+  the θ₀ seed rows are picked from it, and the scoring kernel runs in
+  the driver, once per qid — no Python workers.  A larger small-tier
+  batch fetches first/last/block_max columns only (fused with the θ₀
+  seed); its surviving (term, block) keys re-enter the plan as a local
+  relation, shuffle-hash joined to the payloads inside the scoring
+  kernel's job (ONE applyInPandas stage).
 - large: a SUPERBLOCK tier — per (term, superblock of ``sb_size`` blocks)
   (first_doc, last_doc, max block_max) rows, the Variable-BMW /
   wand_data_compressed analogue (PISA lineage) — is grid-pruned first;
@@ -53,8 +59,10 @@ proportional to corpus size.  The lexicon lookup reads the batch's terms
 off the query frame (a ``queries_df`` local relation: no Spark job) and
 scans the lexicon once (``term IN``, predicate-pushed — the store writes
 the lexicon term-sorted so file-level min/max stats prune it,
-ds2s.manifest).  A driver-tier batch therefore runs three jobs: that
-lexicon scan, the fused metadata + θ₀-seed fetch, and the scoring kernel.
+ds2s.manifest).  A driver-tier batch under the fetch bound therefore
+runs two jobs: that lexicon scan and the one block fetch.  Over the bound
+it runs three: the lexicon scan, the fused metadata + θ₀-seed fetch, and
+the scoring kernel.
 
 Upper bounds are inflated by 1+1e-9 before pruning: metadata sums are
 float math in two runtimes; the margin keeps pruning safe across last-ulp
@@ -95,7 +103,7 @@ _AQE_LOCK = threading.Lock()
 @contextmanager
 def _no_aqe(spark):
     """Disable adaptive execution around the serving plan's EAGER driver
-    fetches (cursor resolve, fused metadata+seed toPandas).  These are
+    fetches (cursor resolve, block / metadata+seed toPandas).  These are
     small bounded queries over persisted/pushdown-pruned tables; AQE's
     stage-by-stage materialization turns each exchange into its own job
     (measured: 8 → 5 jobs and 1.96 → 1.26 s per 20-query BMW batch at
@@ -116,6 +124,11 @@ _UB_MARGIN = 1.0 + 1e-9
 # the literal list starts to dominate plan serialization.  Batches this
 # large are far past the interactive shape the filter exists for.
 _MAX_TERM_IN_FILTER = 8192
+# A driver-tier batch whose terms span at most this many blocks (estimated
+# from lexicon df) is fetched whole — metadata AND payloads, one collect —
+# and scored in the driver.  Sized to driver memory, not to any workload:
+# 4096 blocks × 128 postings × ~8 B ≈ 4 MB of payload.
+_DRIVER_FETCH_BLOCKS = 4096
 
 
 def _term_prefilter(blocks, tids, n_buckets: int = 0):
@@ -145,6 +158,10 @@ def _term_prefilter(blocks, tids, n_buckets: int = 0):
 
 
 _OUT_SCHEMA = "qid int, rank int, doc_id long, score double"
+_PAYLOAD_COLS = (
+    "term_id", "block_id", "n", "first_doc", "last_doc",
+    "doc_bytes", "tf_bytes", "len_bytes", "block_max_score",
+)
 _SURV_SCHEMA = (
     "qid int, term_id int, block_id int, w double, idf double, "
     "max_score double, theta0 double"
@@ -387,14 +404,6 @@ def _make_kernel(k, algo, scorer, avg_len, rank_round):
                     idf=idf, w=w,
                 )
             )
-        if not per_term:
-            # defensive only — applyInPandas never invokes the kernel on
-            # an empty group today, so this is unreachable; kept as a
-            # typed guard against upstream contract drift, NOT a live path
-            return pd.DataFrame(
-                {"qid": [], "rank": [], "doc_id": [], "score": []}
-            ).astype({"qid": "int32", "rank": "int32", "doc_id": "int64", "score": "float64"})
-
         fn = _wand_topk if algo == "wand" else _sweep_topk
         docs, scores = fn(per_term, k, theta0, avg_len, scorer, rank_round)
         out_scores = round_half_up(scores, 4) if rank_round is not None else scores
@@ -408,6 +417,15 @@ def _make_kernel(k, algo, scorer, avg_len, rank_round):
         )
 
     return kernel
+
+
+def _surv_frame(rows: list[tuple]) -> pd.DataFrame:
+    """Survivor rows → the ``_SURV_SCHEMA`` frame."""
+    return pd.DataFrame(
+        rows,
+        columns=["qid", "term_id", "block_id", "w", "idf", "max_score",
+                 "theta0"],
+    ).astype({"qid": "int32", "term_id": "int32", "block_id": "int32"})
 
 
 def _make_plan_kernel():
@@ -471,7 +489,10 @@ class ServingIndex:
 
     Holds DataFrames only — no driver-side arrays of any corpus-
     proportional size; query-time driver state is bounded by
-    ``plan_collect_cap`` metadata rows and ``seed_max_blocks`` payloads.
+    ``plan_collect_cap`` metadata rows, ``seed_max_blocks`` payloads per
+    seed term and, for a batch scored in the driver,
+    ``_DRIVER_FETCH_BLOCKS`` payload blocks (kept from ``survivor_blocks``
+    until the next batch).
     The block table is self-contained (docIDs, tfs, doc lengths, block-max
     score per row); auxiliary tables are the per-term max score (``wand``,
     one aggregation) and the superblock tier (``superblocks``, one
@@ -709,6 +730,35 @@ class ServingIndex:
                 rarest[qid] = (tid, df)
         return rarest
 
+    def _term_scan(self, tids) -> DataFrame:
+        """The block rows of ``tids``.  ``term_id IN`` is the SEMANTIC
+        filter (it must apply even for empty or huge term sets, so
+        _term_prefilter's skip-above-cap contract doesn't fit); on the
+        store layout a ``bucket IN`` hint also prunes partition
+        directories."""
+        src = self.blocks
+        if self._n_buckets > 0 and "bucket" in src.columns:
+            src = src.filter(F.col("bucket").isin(
+                sorted({int(t) % self._n_buckets for t in tids})
+            ))
+        return src.filter(F.col("term_id").isin([int(t) for t in tids]))
+
+    def _seed_rows(self, cur: list[tuple], rows: pd.DataFrame) -> pd.DataFrame:
+        """``_seed_df``'s selection over already-fetched block rows: each
+        qid's rarest term's top-``seed_max_blocks`` blocks in (block_max
+        DESC, block_id ASC) order — the same rows, so θ₀ is the same."""
+        seed_tids = [tid for tid, _ in self._rarest_by_qid(cur).values()]
+        tid = rows["term_id"].to_numpy(np.int64)
+        cand = np.flatnonzero(np.isin(tid, seed_tids))
+        order = cand[np.lexsort((
+            rows["block_id"].to_numpy(np.int64)[cand],
+            -rows["block_max_score"].to_numpy(np.float64)[cand],
+            tid[cand],
+        ))]
+        t = tid[order]
+        rank = np.arange(len(t)) - np.searchsorted(t, t, side="left")
+        return rows.iloc[order[rank < self.seed_max_blocks]]
+
     def _seed_df(self, cur: list[tuple]) -> DataFrame:
         """The θ₀ seed rows: each qid's rarest term's top-
         ``seed_max_blocks`` blocks, selected RELATIONALLY (window over
@@ -723,18 +773,8 @@ class ServingIndex:
         wr = Window.partitionBy("term_id").orderBy(
             F.desc("block_max_score"), F.asc("block_id")
         )
-        src = self.blocks
-        if self._n_buckets > 0 and "bucket" in src.columns:
-            # partition-directory pruning hint; the isin below is the
-            # SEMANTIC filter (must apply even for empty/huge term sets,
-            # so _term_prefilter's skip-above-cap contract doesn't fit)
-            src = src.filter(F.col("bucket").isin(
-                sorted({int(t) % self._n_buckets for t in seed_tids})
-            ))
-        seeds = (
-            src.filter(F.col("term_id").isin(seed_tids))
-            .select("term_id", "block_id", "block_max_score",
-                    "tf_bytes", "len_bytes")
+        seeds = self._term_scan(seed_tids).select(
+            "term_id", "block_id", "block_max_score", "tf_bytes", "len_bytes"
         )
         if self.seed_max_blocks > 0:
             seeds = seeds.withColumn("rn", F.row_number().over(wr)).filter(
@@ -778,35 +818,35 @@ class ServingIndex:
         return theta0
 
     @staticmethod
-    def _driver_block_grid(qterms, meta_by_tid, theta0, sb_sets=None):
-        """Exact block-level grid for one qid in the driver.  Returns
-        survivor row tuples (term_id, block_id, w, idf, max_score)."""
-        per_term, infos = [], []
-        for tid, w, idf in qterms:
-            m = meta_by_tid.get(tid)
-            if m is None:
-                continue
-            bid, bf, bl, bmax = m["bid"], m["bf"], m["bl"], m["bmax"]
-            if sb_sets is not None:
-                allowed = sb_sets.get(tid)
-                if allowed is None:
-                    continue
-                sel = np.isin(m["sb"], np.fromiter(allowed, dtype=np.int64))
-                if not sel.any():
-                    continue
-                bid, bf, bl, bmax = bid[sel], bf[sel], bl[sel], bmax[sel]
-            per_term.append(dict(firsts=bf, lasts=bl, ubs=bmax * w))
-            infos.append((tid, w, idf, bid, bmax))
-        if not per_term:
-            return []
-        _, _, takes = _grid_survivors(per_term, theta0)
+    def _driver_block_grid(qid_terms, meta_by_tid, theta0, qid_sb_sets=None):
+        """Exact block-level grid, per qid, in the driver.  Returns
+        survivor rows (qid, term_id, block_id, w, idf, max_score, theta0)."""
         out = []
-        for (tid, w, idf, bid, bmax), take in zip(infos, takes):
-            if not take.any():
+        for qid, qterms in sorted(qid_terms.items()):
+            sb_sets = None if qid_sb_sets is None else qid_sb_sets[qid]
+            per_term, infos = [], []
+            for tid, w, idf in qterms:
+                m = meta_by_tid.get(tid)
+                if m is None:
+                    continue
+                bid, bf, bl, bmax = m["bid"], m["bf"], m["bl"], m["bmax"]
+                if sb_sets is not None:
+                    allowed = sb_sets.get(tid)
+                    if allowed is None:
+                        continue
+                    sel = np.isin(m["sb"], np.fromiter(allowed, np.int64))
+                    if not sel.any():
+                        continue
+                    bid, bf, bl, bmax = bid[sel], bf[sel], bl[sel], bmax[sel]
+                per_term.append(dict(firsts=bf, lasts=bl, ubs=bmax * w))
+                infos.append((tid, w, idf, bid, bmax))
+            if not per_term:
                 continue
-            tmax = float(bmax.max())
-            for bi in bid[np.flatnonzero(take)]:
-                out.append((tid, int(bi), w, idf, tmax))
+            _, _, takes = _grid_survivors(per_term, theta0[qid])
+            for (tid, w, idf, bid, bmax), take in zip(infos, takes):
+                tmax = float(bmax.max())
+                for bi in bid[np.flatnonzero(take)]:
+                    out.append((qid, tid, int(bi), w, idf, tmax, theta0[qid]))
         return out
 
     def survivor_blocks(self, qdf: DataFrame, k: int = 10,
@@ -819,24 +859,19 @@ class ServingIndex:
         Tiered planning (module docstring): driver grid under
         ``plan_collect_cap`` metadata rows, superblock pre-prune above it,
         per-qid plan kernel only when even superblock survivors exceed the
-        cap.  In every tier, payloads of pruned blocks never shuffle."""
+        cap.  A driver-tier batch of at most ``_DRIVER_FETCH_BLOCKS``
+        estimated blocks fetches every block of its terms, payloads
+        included, in one collect; the survivors come back as a local
+        relation and ``topk`` scores them in the driver.  In every other
+        case payloads of pruned blocks never shuffle."""
         spark = qdf.sparkSession
+        self._driver_batch = None
         cur = self._resolve_cursors(qdf)
         if not cur:
             self.last_plan = {"est_blocks": 0, "n_qids": 0}
-            # Mirror the populated path's exact projection + join so the
-            # all-out-of-vocabulary edge case has the SAME schema (column
-            # set, order, types) as every other batch — a store-loaded
-            # blocks table carries extra partition columns (e.g. bucket)
-            # that must not leak out only on the empty branch.
-            empty_keys = spark.createDataFrame([], schema=_SURV_SCHEMA)
-            return self.blocks.limit(0).select(
-                "term_id", "block_id", "n", "first_doc", "last_doc",
-                "doc_bytes", "tf_bytes", "len_bytes", "block_max_score",
-            ).join(empty_keys.hint("shuffle_hash"), ["term_id", "block_id"])
+            return self._empty_survivors(spark)
         bs = int(self.cfg.block_size)
         quantum = 10.0 ** (-rank_round) if rank_round is not None else 0.0
-        seed_df = self._seed_df(cur)
 
         qid_terms: dict[int, list] = {}
         for qid, tid, w, df, idf in cur:
@@ -850,9 +885,32 @@ class ServingIndex:
         surv_rows: list[tuple] | None = None
         fallback_sbk: pd.DataFrame | None = None
         self.last_plan: dict = {
-            "est_blocks": est_blocks, "n_qids": len(qid_terms)
+            "est_blocks": est_blocks, "n_qids": len(qid_terms),
+            "scoring": "spark",
         }
 
+        if est_blocks <= min(self.plan_collect_cap, _DRIVER_FETCH_BLOCKS):
+            # every block of the batch's terms in ONE job; the θ₀ seed
+            # rows, the grid and the survivors are all driver numpy
+            with _no_aqe(spark):
+                rows = self._term_scan(tids).select(*_PAYLOAD_COLS).toPandas()
+            theta0 = self._theta0_from_rows(
+                cur, self._seed_rows(cur, rows), k, quantum
+            )
+            spdf = _surv_frame(self._driver_block_grid(
+                qid_terms, self._meta_arrays(rows), theta0
+            ))
+            self.last_plan.update(
+                tier="driver", scoring="driver", collected_rows=len(rows),
+                survivors=len(spdf),
+            )
+            surv = rows.merge(spdf, on=["term_id", "block_id"])
+            self._driver_batch = surv
+            return spark.createDataFrame(
+                surv, schema=self._empty_survivors(spark).schema
+            )
+
+        seed_df = self._seed_df(cur)
         if est_blocks <= self.plan_collect_cap:
             # small tier: exact block grid entirely in the driver.  The
             # metadata fetch and the θ₀ seed payload fetch travel in ONE
@@ -870,13 +928,9 @@ class ServingIndex:
             seed_pdf = fused[fused["is_seed"]]
             meta = fused[~fused["is_seed"]]
             theta0 = self._theta0_from_rows(cur, seed_pdf, k, quantum)
-            meta_by_tid = self._meta_arrays(meta)
-            surv_rows = []
-            for qid, qterms in sorted(qid_terms.items()):
-                for tid, bi, w, idf, tmax in self._driver_block_grid(
-                    qterms, meta_by_tid, theta0[qid]
-                ):
-                    surv_rows.append((qid, tid, bi, w, idf, tmax, theta0[qid]))
+            surv_rows = self._driver_block_grid(
+                qid_terms, self._meta_arrays(meta), theta0
+            )
             self.last_plan.update(
                 tier="driver", collected_rows=len(meta), survivors=len(surv_rows)
             )
@@ -965,16 +1019,10 @@ class ServingIndex:
                                     "block_max_score")
                             .toPandas()
                         )
-                    meta_by_tid = self._meta_arrays(meta, with_sb=True)
-                    surv_rows = []
-                    for qid, qterms in sorted(qid_terms.items()):
-                        for tid, bi, w, idf, tmax in self._driver_block_grid(
-                            qterms, meta_by_tid, theta0[qid],
-                            sb_sets=qid_sb_sets[qid],
-                        ):
-                            surv_rows.append(
-                                (qid, tid, bi, w, idf, tmax, theta0[qid])
-                            )
+                    surv_rows = self._driver_block_grid(
+                        qid_terms, self._meta_arrays(meta, with_sb=True),
+                        theta0, qid_sb_sets,
+                    )
                 self.last_plan.update(
                     tier="superblock",
                     collected_rows=0 if sbk_df is None else len(meta),
@@ -994,11 +1042,7 @@ class ServingIndex:
                 self.last_plan.update(tier="kernel")
 
         if surv_rows is not None:
-            spdf = pd.DataFrame(
-                surv_rows,
-                columns=["qid", "term_id", "block_id", "w", "idf",
-                         "max_score", "theta0"],
-            ).astype({"qid": "int32", "term_id": "int32", "block_id": "int32"})
+            spdf = _surv_frame(surv_rows)
             # driver/superblock tiers: surv_keys is a LOCAL relation
             # bounded by plan_collect_cap.  A shuffle-hash join (keys as
             # the build side) runs inside the kernel's own job; a
@@ -1043,10 +1087,18 @@ class ServingIndex:
         # byte is materialized.
         return _term_prefilter(
             self.blocks, payload_tids, self._n_buckets
-        ).select(
-            "term_id", "block_id", "n", "first_doc", "last_doc",
-            "doc_bytes", "tf_bytes", "len_bytes", "block_max_score",
-        ).join(surv_keys, ["term_id", "block_id"])
+        ).select(*_PAYLOAD_COLS).join(surv_keys, ["term_id", "block_id"])
+
+    def _empty_survivors(self, spark) -> DataFrame:
+        """The survivor relation with no rows.  It mirrors the populated
+        path's exact projection + join, so every batch has the SAME
+        schema (column set, order, types) — a store-loaded blocks table
+        carries extra partition columns (e.g. bucket) that must not leak
+        out on any branch."""
+        empty_keys = spark.createDataFrame([], schema=_SURV_SCHEMA)
+        return self.blocks.limit(0).select(*_PAYLOAD_COLS).join(
+            empty_keys.hint("shuffle_hash"), ["term_id", "block_id"]
+        )
 
     @staticmethod
     def _meta_arrays(meta: pd.DataFrame, with_sb: bool = False) -> dict:
@@ -1074,14 +1126,26 @@ class ServingIndex:
         [U] ds2i wand_query).
 
         The result is BOUNDED (≤ batch qids × k rows), so when it fits
-        the plan_collect_cap driver-state contract the kernel runs
-        eagerly under the serving no-AQE guard and a local-relation
+        the plan_collect_cap driver-state contract a local-relation
         DataFrame is returned: the caller's later action then costs zero
-        extra jobs, and the kernel's exchange isn't split into
-        per-stage AQE jobs (the queries-tool shape — ds2i's queries.cpp
-        also materializes each batch's results)."""
+        extra jobs (the queries-tool shape — ds2i's queries.cpp also
+        materializes each batch's results).  A batch that
+        ``survivor_blocks`` fetched whole (≤ ``_DRIVER_FETCH_BLOCKS``)
+        is scored right here, one kernel call per qid, like ds2i scores
+        each query in one process: 2 Spark jobs, no Python workers.  Any
+        other bounded batch runs the kernel in ``applyInPandas``, eagerly
+        under the serving no-AQE guard, so its exchange isn't split into
+        per-stage AQE jobs."""
+        spark = qdf.sparkSession
         surv = self.survivor_blocks(qdf, k=k, rank_round=rank_round)
         kernel = _make_kernel(k, algo, self.cfg.scorer, self.avg_len, rank_round)
+        batch, self._driver_batch = self._driver_batch, None
+        if batch is not None:
+            # θ₀ never exceeds a true score in the batch: some block survives
+            parts = [kernel((qid,), g) for qid, g in batch.groupby("qid")]
+            return spark.createDataFrame(
+                pd.concat(parts, ignore_index=True), schema=_OUT_SCHEMA
+            )
         out = surv.groupBy("qid").applyInPandas(kernel, schema=_OUT_SCHEMA)
         n_qids = int(self.last_plan.get("n_qids", 0))
         # eager-collect only when the PLAN was driver-bounded too: in the
@@ -1094,7 +1158,6 @@ class ServingIndex:
             n_qids * k <= self.plan_collect_cap
             and self.last_plan.get("tier") != "kernel"
         ):
-            spark = qdf.sparkSession
             with _no_aqe(spark):
                 pdf = out.toPandas()
             return spark.createDataFrame(pdf, schema=_OUT_SCHEMA)

@@ -214,16 +214,15 @@ def _jobs(spark, group: str, action) -> int:
 
 
 def test_topk_batch_job_count_bounded(spark, sidx001):
-    """A driver-tier top-k batch runs THREE Spark jobs, for every
-    algorithm: the lexicon lookup, the fused metadata + θ₀-seed fetch and
-    the scoring kernel.  Reading the query batch (a local relation) and
-    joining the survivor keys (shuffle-hash, inside the kernel's job) run
-    none of their own.  Pinned via the status tracker because job count
-    is the interference-IMMUNE serving metric on a noisy shared host — a
-    regression that splits the plan into more driver jobs would otherwise
-    hide inside wall-time noise.  First call is an untimed warm-up (cache
-    materialization / python worker spin-up jobs belong to no probe
-    group)."""
+    """A small driver-tier top-k batch runs TWO Spark jobs, for every
+    algorithm: the lexicon lookup and the one fetch of every block of the
+    batch's terms, payloads included; θ₀, the grid and the kernel run in
+    the driver.  Reading the query batch (a local relation) runs none.
+    Pinned via the status tracker because job count is the interference-
+    IMMUNE serving metric on a noisy shared host — a regression that
+    splits the plan into more driver jobs would otherwise hide inside
+    wall-time noise.  First call is an untimed warm-up (cache
+    materialization jobs belong to no probe group)."""
     from ds2s.query import queries_df
 
     qdf = queries_df(spark)
@@ -231,6 +230,26 @@ def test_topk_batch_job_count_bounded(spark, sidx001):
     for algo in ("bmw", "maxscore", "wand"):
         n = _jobs(spark, f"jobcount-{algo}",
                   lambda: sidx001.topk(qdf, k=10, algo=algo).collect())
+        assert sidx001.last_plan["scoring"] == "driver", sidx001.last_plan
+        assert 0 < n <= 2, (algo, n)
+
+
+def test_unfetched_driver_tier_job_count_bounded(spark, sidx001, monkeypatch):
+    """A driver-tier batch over ``_DRIVER_FETCH_BLOCKS`` keeps the Spark
+    kernel: ≤ 3 jobs — the lexicon lookup, the fused metadata + θ₀-seed
+    fetch and the scoring kernel, whose job also runs the shuffle-hash
+    join of the survivor keys."""
+    import ds2s.serve as serve
+    from ds2s.query import queries_df
+
+    monkeypatch.setattr(serve, "_DRIVER_FETCH_BLOCKS", 0)
+    qdf = queries_df(spark)
+    sidx001.topk(qdf, k=10, algo="bmw").collect()  # warm-up
+    for algo in ("bmw", "maxscore", "wand"):
+        n = _jobs(spark, f"jobcount-unfetched-{algo}",
+                  lambda: sidx001.topk(qdf, k=10, algo=algo).collect())
+        assert sidx001.last_plan["tier"] == "driver", sidx001.last_plan
+        assert sidx001.last_plan["scoring"] == "spark", sidx001.last_plan
         assert 0 < n <= 3, (algo, n)
 
 
@@ -535,6 +554,26 @@ def test_seed_cap_preserves_exactness(spark, idx001):
     )
 
 
+# out-of-vocabulary terms, a duplicate cursor and multi-block hot terms
+_SYNTH_ROWS = [
+    (0, 0, "def"),
+    (0, 1, "return"),
+    (1, 0, "var0"),
+    (1, 1, "var1"),
+    (1, 2, "fn0"),
+    (2, 0, "class"),
+    (3, 0, "dup_marker"),
+    (4, 0, "zzznope"),
+    (5, 0, "def"),
+    (5, 1, "def"),  # duplicate cursor
+    (6, 0, "import"),
+    (6, 1, "zzznope"),
+    (7, 0, "the"),
+    (7, 1, "var5"),
+    (7, 2, "match"),
+]
+
+
 @pytest.mark.parametrize(
     "algo,codec",
     [("bmw", "optpfd"), ("maxscore", "gvb"), ("bmw", "auto"), ("wand", "optpfd")],
@@ -542,26 +581,7 @@ def test_seed_cap_preserves_exactness(spark, idx001):
 def test_pruned_equals_exhaustive_synth(spark, synth_idx, algo, codec):
     """Synthetic Zipfian corpus (multi-block hot terms) across codecs."""
     sidx = ServingIndex(synth_idx, codec=codec)
-    qdf = Q.queries_df(
-        spark,
-        rows=[
-            (0, 0, "def"),
-            (0, 1, "return"),
-            (1, 0, "var0"),
-            (1, 1, "var1"),
-            (1, 2, "fn0"),
-            (2, 0, "class"),
-            (3, 0, "dup_marker"),
-            (4, 0, "zzznope"),
-            (5, 0, "def"),
-            (5, 1, "def"),  # duplicate cursor
-            (6, 0, "import"),
-            (6, 1, "zzznope"),
-            (7, 0, "the"),
-            (7, 1, "var5"),
-            (7, 2, "match"),
-        ],
-    )
+    qdf = Q.queries_df(spark, rows=_SYNTH_ROWS)
     exact = (
         Q.ranked_or_topk(synth_idx, qdf, k=5)
         .orderBy("qid", "rank")
@@ -602,6 +622,54 @@ def test_term_prefilter_is_semantics_free(spark, sidx001, monkeypatch, algo):
             .reset_index(drop=True)
         )
     pd.testing.assert_frame_equal(frames[0], frames[1 << 30])
+
+
+@pytest.mark.parametrize("case", ["fixture", "skew", "synth", "store_nocache"])
+def test_driver_scoring_is_semantics_free(spark, request, tmp_path,
+                                          monkeypatch, case):
+    """Scoring a small batch in the driver changes where the kernel runs,
+    never what it returns: with ``_DRIVER_FETCH_BLOCKS`` forced to 0 (the
+    Spark kernel) and at its default (one fetch, driver kernel), every
+    algorithm returns identical top-k frames and scores the identical
+    number of blocks — the θ₀ seed rows picked from the fetched frame are
+    ``_seed_df``'s rows."""
+    import ds2s.serve as serve
+    from ds2s.manifest import IndexStore
+
+    k, rows, sidx = DEFAULT_K, None, None
+    if case == "fixture":
+        sidx = request.getfixturevalue("sidx001")
+    elif case == "skew":
+        sidx = ServingIndex(request.getfixturevalue("skew_idx"))
+        rows = [(0, 0, "rare"), (0, 1, "common"), (1, 0, "common")]
+    elif case == "synth":
+        sidx = ServingIndex(request.getfixturevalue("synth_idx"),
+                            seed_max_blocks=2)
+        k, rows = 5, _SYNTH_ROWS
+    else:
+        store = IndexStore(str(tmp_path / "nocache"))
+        store.write_checkpointed(request.getfixturevalue("synth_idx"),
+                                 source="synth", n_buckets=4)
+        sidx = ServingIndex.from_store(spark, store, cache_blocks=False)
+        k, rows = 5, _SYNTH_ROWS
+    qdf = Q.queries_df(spark, rows=rows)
+    default = serve._DRIVER_FETCH_BLOCKS
+    try:
+        for algo in ("bmw", "maxscore", "wand"):
+            got = {}
+            for bound, scoring in ((0, "spark"), (default, "driver")):
+                monkeypatch.setattr(serve, "_DRIVER_FETCH_BLOCKS", bound)
+                frame = (
+                    sidx.topk(qdf, k=k, algo=algo)
+                    .orderBy("qid", "rank").toPandas().reset_index(drop=True)
+                )
+                assert sidx.last_plan["scoring"] == scoring, sidx.last_plan
+                got[scoring] = (frame, sidx.last_plan["survivors"])
+            pd.testing.assert_frame_equal(got["spark"][0], got["driver"][0])
+            assert got["spark"][1] == got["driver"][1], (algo, got)
+    finally:
+        if case != "fixture":
+            sidx.unpersist()
 
 
 def test_term_prefilter_cap_and_bucket_boundaries(spark):

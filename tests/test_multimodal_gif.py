@@ -211,3 +211,31 @@ def test_gif_operators_equal_txt_operators(spark):
         if len(t.encode("utf-8")) > 0
     )
     assert len(got) == n_expected
+
+
+def test_gif_wide_payload_fits_u16_frame_widths():
+    """A payload past n_frames × 65535 bytes gets more frames instead of
+    a frame width that overflows the descriptor's u16: one long document
+    must not fail its whole batch."""
+    n = 4 * 0xFFFF + 1
+    raw = bytes((i * 31) % 256 for i in range(n))
+    frames = M._gif_decode_frames(M.gif_bytes(raw, n_frames=4))
+    assert len(frames) == 5
+    assert max(len(f) for f in frames) <= 0xFFFF
+    assert b"".join(f.tobytes() for f in frames) == raw
+
+
+def test_gif_frame_sample_non_ascii(spark):
+    """The byte partition can split a multi-byte UTF-8 character across
+    frames; gif_frame_sample must still decode every frame, and a
+    document's frame texts concatenate back to the document."""
+    texts = {0: "aé" * 3, 1: "日本語のテキスト", 2: "x€"}
+    docs = spark.createDataFrame(
+        list(texts.items()), schema="doc_id long, text string"
+    )
+    got = M.gif_frame_sample(M.gif_media_table(docs)).toPandas()
+    for doc_id, text in texts.items():
+        rows = got[got["doc_id"] == doc_id].sort_values("frame_id")
+        n = len(text.encode("utf-8"))
+        assert list(rows["n_px"]) == M._gif_frame_widths(n, 4)
+        assert "".join(rows["frame_text"]) == text
