@@ -20,6 +20,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from perfbench.procstat import Interference, tree_cpu_s  # noqa: E402
+
 
 def serving_child(cores: int, sf_dir: str) -> None:
     """One fresh-JVM serving pass at local[cores]: build + encode untimed,
@@ -35,8 +37,6 @@ def serving_child(cores: int, sf_dir: str) -> None:
     import __spark_entry__ as E
     from ds2s import query as Q
     from ds2s.queryset import DEFAULT_K, QUERIES
-
-    from scaling import proc_tree_cpu_s
 
     idx = E._index(spark, sf_dir)
     sidx = E._sindex(spark, sf_dir)
@@ -58,11 +58,11 @@ def serving_child(cores: int, sf_dir: str) -> None:
         best = float("inf")
         best_cpu = float("inf")
         for _ in range(2):
-            c0 = proc_tree_cpu_s()
+            c0 = tree_cpu_s()
             t0 = time.perf_counter()
             run()
             best = min(best, time.perf_counter() - t0)
-            best_cpu = min(best_cpu, proc_tree_cpu_s() - c0)
+            best_cpu = min(best_cpu, tree_cpu_s() - c0)
         walls[algo] = round(best, 3)
         cpu_s[algo] = round(best_cpu, 2)
     print(
@@ -91,12 +91,11 @@ def main() -> None:
 
     from ds2s.session import get_spark
 
-    # stamp the interference probe BEFORE the timed reps as well as after
-    # (report build below): a window that collapses mid-bench is then
-    # visible in the artifact instead of hiding behind a single end-stamp
-    from scaling import host_probe
-
-    probe_start = host_probe()
+    # interference stamp over the whole bench (load average, the other
+    # processes' share of host CPU, steal): walls are only readable
+    # against it
+    interference = Interference()
+    interference.start()
 
     spark = get_spark(app=f"ds2s-bench-{sf}", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -137,8 +136,6 @@ def main() -> None:
     # inflates walls 13-230× but barely changes this tree's CPU — the
     # round-4/5 scaling campaigns), so round-over-round serving deltas
     # stay signable even when the bench lands in a noisy window
-    from scaling import proc_tree_cpu_s
-
     runs: list[dict[str, float]] = []
     cpu_runs: list[dict[str, float]] = []
     for rep in range(reps):
@@ -152,7 +149,7 @@ def main() -> None:
         E._PAIRS_CACHE.clear()
         spark.catalog.clearCache()
 
-        c0 = proc_tree_cpu_s()
+        c0 = tree_cpu_s()
         t0 = time.perf_counter()
         idx = E._index(spark, sf_dir)
         # materialize every persisted table the queries rely on
@@ -161,39 +158,39 @@ def main() -> None:
         idx.lexicon.count()
         idx.postings.count()
         timings["build"] = round(time.perf_counter() - t0, 3)
-        cpus_q["build"] = round(proc_tree_cpu_s() - c0, 2)
+        cpus_q["build"] = round(tree_cpu_s() - c0, 2)
 
         # the compressed serving index (block encode + len payloads +
         # block-max) gets its own timing entry instead of hiding inside
         # whichever query touches it first
-        c0 = proc_tree_cpu_s()
+        c0 = tree_cpu_s()
         t0 = time.perf_counter()
         sidx = E._sindex(spark, sf_dir)
         sidx.blocks.count()
         sidx.wand.count()
         timings["sidx_encode"] = round(time.perf_counter() - t0, 3)
-        cpus_q["sidx_encode"] = round(proc_tree_cpu_s() - c0, 2)
+        cpus_q["sidx_encode"] = round(tree_cpu_s() - c0, 2)
 
         # the store round-trip's WRITE (write_checkpointed + from_store
         # load) is its own timed entry, pre-warming the store cache —
         # bmw_topk_store below then times only the serving query, so a
         # serving regression can't hide inside the first-call store build
         # (round-4 verdict item 3)
-        c0 = proc_tree_cpu_s()
+        c0 = tree_cpu_s()
         t0 = time.perf_counter()
         E._store_sindex(spark, sf_dir)
         timings["store_write"] = round(time.perf_counter() - t0, 3)
-        cpus_q["store_write"] = round(proc_tree_cpu_s() - c0, 2)
+        cpus_q["store_write"] = round(tree_cpu_s() - c0, 2)
 
         for name, fn in E.queries().items():
             if name in skip:
                 continue
-            c0 = proc_tree_cpu_s()
+            c0 = tree_cpu_s()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - t0, 3)
-            cpus_q[name] = round(proc_tree_cpu_s() - c0, 2)
+            cpus_q[name] = round(tree_cpu_s() - c0, 2)
         runs.append(timings)
         cpu_runs.append(cpus_q)
 
@@ -406,17 +403,12 @@ def main() -> None:
         except subprocess.TimeoutExpired:
             print("serving-child timed out after 1800s", file=sys.stderr)
 
-    # shared-host interference stamp (scaling.host_probe): on a quiet box
-    # the 32-proc/1-proc streaming ratio is ~1.2-1.5; it was measured at
-    # 13-230× during round-4 windows — readers should discount absolute
-    # walls accordingly (the CORRECTNESS artifacts are noise-immune).
     total = round(sum(timings.values()), 3)
     report = {
         "metric": "ds2s_build_plus_queries",
         "value": total,
         "unit": "sec",
-        "host_probe": host_probe(),
-        "host_probe_start": probe_start,
+        "interference": interference.stop(),
         "bench_reps": reps,
         "queries_per_s": qps,
         "serving_local8": qps8,
@@ -443,7 +435,7 @@ def main() -> None:
     # cut mid-JSON → parsed: null).  Keep the printed line ≤ ~1500 chars
     # and make it the LAST line.
     # tmp + os.replace: a bench killed mid-write must never leave a
-    # truncated BENCH_LOCAL.json for quiet_guard (or the driver) to parse —
+    # truncated BENCH_LOCAL.json for a reader to parse —
     # same atomicity contract as manifest._index.json
     target = Path(__file__).resolve().parent / "BENCH_LOCAL.json"
     tmp = target.with_suffix(".json.tmp")
@@ -452,7 +444,7 @@ def main() -> None:
     lean = {
         k: report[k]
         for k in (
-            "metric", "value", "unit", "host_probe", "bench_reps",
+            "metric", "value", "unit", "interference", "bench_reps",
             "queries_per_s", "n_ref_queries", "ann_recall_at10_clustered",
             "ivf_recall_at10_clustered", "queries", "sf", "cpus",
         )
@@ -461,7 +453,7 @@ def main() -> None:
         lean["queries_per_s_local8"] = qps8["queries_per_s"]
     # the signable serving signal for the driver-recorded line: CPU-seconds
     # of the four top-k paths + the store-backed query (walls above are
-    # only readable against the host_probe stamp)
+    # only readable against the interference stamp)
     lean["serving_cpu_s"] = {
         k: queries_cpu[k]
         for k in ("bmw_topk", "maxscore_topk", "wand_topk",
@@ -475,7 +467,7 @@ def main() -> None:
     # BENCH_LOCAL.json anyway), never abort before printing — an assert
     # here once meant "too long ⇒ no line at all", the exact failure mode
     # this block defends against (round-5 review finding).
-    for bulky in ("queries", "host_probe"):
+    for bulky in ("queries", "interference"):
         if len(line) < 1900:
             break
         lean.pop(bulky, None)

@@ -28,8 +28,7 @@ driver collect.
 
 from __future__ import annotations
 
-import os
-from typing import Callable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -52,6 +51,12 @@ BLOCKS_SCHEMA = (
 BLOCKS_SCHEMA_SCORED = BLOCKS_SCHEMA + ", len_bytes binary, block_max_score double"
 
 _AUTO_CANDIDATES = ("ef", "pef", "optpfd", "gvb", "interp")
+
+# blocks_from_tf's split kernel buffers a whole shuffle partition, ~24 B a
+# posting (~3x transient during the lexsort): 256M rows is ~6 GB resident,
+# ~18 GB peak per worker.  A bigger partition fails loudly, naming
+# spark.sql.shuffle.partitions, instead of running a worker out of memory.
+_SPLIT_MAX_PARTITION_ROWS = 1 << 28
 
 
 def range_salt_stride(universe: int, n_salt: int) -> int:
@@ -115,11 +120,8 @@ def _encode_one(docs: np.ndarray, tfs: np.ndarray, universe: int, codec: str) ->
 
 
 def _blocks_record_batch(out: dict, out_cols: list, scored: bool):
-    """One Arrow RecordBatch of encoded blocks from a kernel's accumulator
-    lists.  Shared by the window plan's merge kernel and the term plan so
-    the two plans cannot drift in output column layout or dtype (their
-    row-identity is pytest-pinned; one definition keeps it pinned by
-    construction)."""
+    """One Arrow RecordBatch of encoded blocks from the merge kernel's
+    accumulator lists, in BLOCKS_SCHEMA[_SCORED] column order and dtypes."""
     import pyarrow as pa
 
     arrays = [
@@ -191,129 +193,6 @@ def encode_blocks(
     return flat.mapInPandas(enc, schema=BLOCKS_SCHEMA)
 
 
-def _blocks_term_plan(
-    tf: DataFrame,
-    universe: int,
-    codec: str,
-    bs: int,
-    scored: bool,
-    avg_len: float | None,
-    scorer,
-    sp: int,
-) -> DataFrame:
-    """Single-exchange block build for collections whose hottest term fits
-    one shuffle partition (chosen cost-based from the lexicon's max df —
-    see ``blocks_from_tf``).
-
-    RANGE-partitioning the posting table by ``term_id`` alone makes every
-    term WHOLLY partition-local, so one Arrow kernel does sort → global
-    block cut → codec encode → block-max in a single pass: global
-    positions need no cross-salt window (the term is local), and block
-    boundaries need no fragment re-cut or merge exchange (they are just
-    multiples of ``block_size`` in the term's sorted postings).  The
-    posting bytes cross the bus ONCE, against three exchanges for the
-    salted window plan — on a memory-bandwidth-bound box that is the
-    blocks stage's dominant cost.  Output is row-identical to the window
-    plan (pytest-pinned).
-
-    Range, not hash: RangePartitioner's sampler sees a Zipf-hot term's
-    rows in proportion to its df, so it draws boundaries that equalize
-    ROW counts per partition (a hot term gets a partition nearly to
-    itself; cold terms pack together) while same-key rows still land in
-    one partition.  ``repartition(sp, "term_id")`` instead hands the
-    hottest term's whole list to a random partition PLUS that
-    partition's 1/sp hash-share of everything else — a straggler that
-    the interleaved A/B caught as a 15-20% wall regression vs the
-    window plan (MERGE_AB.jsonl rounds 1-3) before this line switched
-    to range.
-    """
-    cols = ["term_id", "doc_id", "tf"] + (["len"] if scored else [])
-    shuffled = tf.select(*cols).repartitionByRange(sp, "term_id")
-    k1, b_p = scorer.k1, scorer.b
-    n_f = float(universe)
-    avg = float(avg_len) if avg_len else 1.0
-    out_cols = ["term_id", "block_id", "n", "first_doc", "last_doc",
-                "doc_bytes", "tf_bytes"]
-    if scored:
-        out_cols += ["len_bytes", "block_max_score"]
-    emit_every = 8192  # blocks per output RecordBatch (bounds builder lists)
-    # snapshot DRIVER-side at plan time (workers are long-lived daemons
-    # whose environ predates the caller's setting) and close over it
-    max_rows = int(os.environ.get("DS2S_SPLIT_MAX_PARTITION_ROWS", 1 << 28))
-
-    def term_iter(batches) -> Iterator:
-        t_p, d_p, f_p, l_p = [], [], [], []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            cols_b = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-            t_p.append(cols_b["term_id"].to_numpy(zero_copy_only=True))
-            d_p.append(cols_b["doc_id"].to_numpy(zero_copy_only=True))
-            f_p.append(cols_b["tf"].to_numpy(zero_copy_only=True))
-            if scored:
-                l_p.append(cols_b["len"].to_numpy(zero_copy_only=True))
-        if not t_p:
-            return
-        n_rows = sum(len(a) for a in t_p)
-        if n_rows > max_rows:
-            raise RuntimeError(
-                f"blocks_from_tf term plan: shuffle partition holds "
-                f"{n_rows} postings > bound {max_rows}; this plan requires "
-                "a term's full posting list per partition — set "
-                "DS2S_BLOCKS_PLAN=window (salted multi-exchange plan) or "
-                "raise spark.sql.shuffle.partitions."
-            )
-        t_arr = np.concatenate(t_p)
-        d_arr = np.concatenate(d_p).astype("<i8", copy=False)
-        f_arr = np.concatenate(f_p).astype("<i4")
-        l_arr = np.concatenate(l_p).astype("<i4") if scored else None
-        del t_p, d_p, f_p, l_p
-        order = np.lexsort((d_arr, t_arr))
-        t_arr, d_arr, f_arr = t_arr[order], d_arr[order], f_arr[order]
-        if scored:
-            l_arr = l_arr[order]
-        change = np.flatnonzero(np.diff(t_arr) != 0) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(t_arr)]))
-
-        out: dict[str, list] = {k: [] for k in out_cols}
-
-        for s0, e0 in zip(starts, ends):
-            term_id = int(t_arr[s0])
-            if scored:
-                # df ≡ the term's posting count, whole term is local —
-                # same value the window plan recovers by fragment sums
-                idf = scorer.idf(float(e0 - s0), n_f)
-            for i in range(s0, e0, bs):
-                j = min(i + bs, e0)
-                d = d_arr[i:j].astype(np.uint64, copy=False)
-                t = f_arr[i:j].astype(np.uint64)
-                db, tb = _encode_one(d, t, universe, codec)
-                out["term_id"].append(term_id)
-                out["block_id"].append((i - s0) // bs)
-                out["n"].append(j - i)
-                out["first_doc"].append(int(d[0]))
-                out["last_doc"].append(int(d[-1]))
-                out["doc_bytes"].append(db)
-                out["tf_bytes"].append(tb)
-                if scored:
-                    ln = l_arr[i:j].astype(np.uint64)
-                    out["len_bytes"].append(encode_tfs(ln, "gvb"))
-                    tf_f = t.astype(np.float64)
-                    contrib = idf * tf_f / (
-                        tf_f + k1 * (1.0 - b_p + b_p * ln.astype(np.float64) / avg)
-                    )
-                    out["block_max_score"].append(float(contrib.max()))
-                if len(out["term_id"]) >= emit_every:
-                    yield _blocks_record_batch(out, out_cols, scored)
-                    out = {k: [] for k in out}
-        if out["term_id"]:
-            yield _blocks_record_batch(out, out_cols, scored)
-
-    schema = BLOCKS_SCHEMA_SCORED if scored else BLOCKS_SCHEMA
-    return shuffled.mapInArrow(term_iter, schema=schema)
-
-
 def blocks_from_tf(
     tf: DataFrame,
     n_docs: int,
@@ -322,8 +201,6 @@ def blocks_from_tf(
     block_size: int | None = None,
     n_salt: int | None = None,
     avg_len: float | None = None,
-    max_df: "int | Callable[[], int] | None" = None,
-    _stop_at: str | None = None,
 ) -> DataFrame:
     """Flat postings (term_id, doc_id, tf) → encoded block rows WITHOUT the
     monolithic per-term array intermediate.
@@ -359,6 +236,12 @@ def blocks_from_tf(
 
     Exactly equal to encode_blocks(build_postings(tf)) (tested), row for
     row, block for block.
+
+    This salted plan is the only one, settled by measurement
+    (MERGE_AB.jsonl, interleaved rounds at 100.8M postings, 32 cores): a
+    single-exchange plan holding each whole term in one partition lost,
+    19.1 s best here against 22.2–24.7 s, because salting spreads a
+    Zipf-hot term's encode over many tasks.
     """
     codec = codec or cfg.block_codec
     bs = int(block_size or cfg.block_size)
@@ -373,43 +256,6 @@ def blocks_from_tf(
         sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:  # 'auto' on AQE auto-partitioning platforms
         sp = spark.sparkContext.defaultParallelism
-
-    # PLAN CHOICE, settled by measurement (MERGE_AB.jsonl, interleaved
-    # window/term rounds at 100.8M postings, 32 cores): the salted WINDOW
-    # plan below is the default for every collection.  The single-exchange
-    # TERM plan (whole term per partition, one sort+cut+encode kernel)
-    # looks cheaper on exchange count, but its second exchange here moves
-    # already-ENCODED fragments (~10× smaller than raw postings), and —
-    # decisively — salting parallelizes a Zipf-hot term's ENCODE across
-    # fragments while the term plan serializes that term's encode inside
-    # one task.  Under a skewed df distribution the hot-term task is the
-    # critical path: window best/median 19.1/20.7 s vs term 22.2/22.4 s
-    # even after range-balanced partitioning (hash-partitioned term was
-    # 24.7/24.9 s).  DS2S_BLOCKS_PLAN=term keeps the term plan selectable
-    # for flat-df collections and A/B probes; ``max_df`` (hottest term's
-    # posting count, one tiny agg off the caller's materialized lexicon)
-    # guards a forced term pick against partition-buffer blowout.
-    forced = os.environ.get("DS2S_BLOCKS_PLAN", "")
-    if forced == "term" and _stop_at is None:
-        # _stop_at (stage-boundary diagnostics) only exists in the window
-        # plan's staged pipeline; a diag caller keeps the window plan
-        # rather than silently ignoring the knob.  max_df may be a lazy
-        # callable (callers pass ``lambda: idx.max_df`` so the lexicon agg
-        # runs ONLY when the term plan is actually picked — the default
-        # window plan never pays that extra driver job); the buffer-bound
-        # check likewise runs only when the term plan will run.
-        bound = int(os.environ.get("DS2S_SPLIT_MAX_PARTITION_ROWS", 1 << 28))
-        mdf = max_df() if callable(max_df) else max_df
-        if mdf is not None and int(mdf) > bound:
-            raise ValueError(
-                f"DS2S_BLOCKS_PLAN=term forced but max_df {mdf} exceeds the "
-                f"partition-buffer bound {bound}; the term plan needs a "
-                "term's full posting list in one partition — use the "
-                "window plan."
-            )
-        return _blocks_term_plan(
-            tf, universe, codec, bs, scored, avg_len, scorer, sp
-        )
 
     # salt only where it pays: a cold term's run needs no splitting, and
     # salting EVERY term multiplies the run count by n_salt (416k runs on
@@ -452,11 +298,7 @@ def blocks_from_tf(
     )
     if scored:
         frag_schema += ", lens_bin binary"
-    # snapshot DRIVER-side at plan time and close over it, exactly like
-    # the term plan: long-lived worker daemons have an environ that
-    # predates the caller's setting, so reading it inside the kernel
-    # would ignore the override on a real cluster (round-5 review finding)
-    max_rows = int(os.environ.get("DS2S_SPLIT_MAX_PARTITION_ROWS", 1 << 28))
+    max_rows = _SPLIT_MAX_PARTITION_ROWS  # read at plan time, on the driver
 
     def split_iter(batches) -> Iterator:
         # Buffer the whole partition (hash-partitioned → every (term,
@@ -490,16 +332,14 @@ def blocks_from_tf(
         # whole shuffle partition (~3× transient during the lexsort fancy
         # indexing).  A skewed hash partition or too-low
         # spark.sql.shuffle.partitions should fail with an actionable
-        # message, not a worker OOM.  ~24 B/posting buffered → the default
-        # 256 M rows ≈ 6 GB resident / ~18 GB peak per worker; override via
-        # DS2S_SPLIT_MAX_PARTITION_ROWS for bigger workers.
+        # message, not a worker OOM (_SPLIT_MAX_PARTITION_ROWS).
         n_rows = sum(len(a) for a in t_p)
         if n_rows > max_rows:
             raise RuntimeError(
                 f"blocks_from_tf split kernel: shuffle partition holds "
                 f"{n_rows} postings > bound {max_rows}; raise "
                 "spark.sql.shuffle.partitions (partition ≈ n_postings / "
-                "shuffle.partitions) or set DS2S_SPLIT_MAX_PARTITION_ROWS."
+                "shuffle.partitions)."
             )
         t_arr = np.concatenate(t_p)
         s_arr = np.concatenate(s_p)
@@ -548,8 +388,6 @@ def blocks_from_tf(
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     local_frags = shuffled.mapInArrow(split_iter, frag_schema)
-    if _stop_at == "local_frags":  # diagnostic prefix (lab probes only)
-        return local_frags
 
     # Global positions + df WITHOUT touching the posting table again: a
     # fragment's gstart is the summed size of every earlier fragment of
@@ -560,8 +398,6 @@ def blocks_from_tf(
     # counts agg and joined it back — one full extra pass.)  Skew bound:
     # a 10^9-posting term is ~8M fragment rows through one window task —
     # a running sum over scalars, the same bound the offsets join had.
-    from pyspark.sql import Window
-
     w_run = Window.partitionBy("term_id").orderBy("salt", "local_start")
     sz_col = F.expr("length(docs_bin) div 8")
     gfrags = local_frags.withColumn("sz", sz_col.cast("int")).withColumn(
@@ -578,8 +414,6 @@ def blocks_from_tf(
     # most TWO global blocks; pieces sort by global start position, which
     # equals docID order within a term, so the merge kernel never needs to
     # peek inside the blobs
-    if _stop_at == "gfrags":  # diagnostic prefix (lab probes only)
-        return gfrags
     bid0 = F.floor(F.col("gstart") / bs)
     bid1 = F.floor((F.col("gstart") + F.col("sz") - 1) / bs)
     cut = (bid1 * bs - F.col("gstart")).cast("int")
@@ -627,25 +461,15 @@ def blocks_from_tf(
     if scored:
         pcols += [F.col("p.lens_bin").alias("lens_bin"), F.col("p.df").alias("df")]
     frags = gf.select("term_id", F.explode(pieces).alias("p")).select(*pcols)
-    if _stop_at == "frags":  # diagnostic prefix (lab probes only)
-        return frags
 
     # merge + encode partition-wise (NOT one applyInPandas group per block:
     # per-group pandas overhead × n_blocks dwarfs the actual encode).  The
     # repartition co-locates a block's fragments AND load-balances the
     # encode across (term, block) — without it the Zipf-hot terms'
     # encode work concentrates in their window task's output partition.
-    # (The window output is already contiguous and gstart-ordered per
-    # term, so skipping this exchange is CORRECT — merely slower under
-    # skew; DS2S_MERGE_RESHUFFLE=0 selects that variant for A/B probes,
-    # MERGE_AB.jsonl holds interleaved measurements both ways.)  The
-    # single-exchange fast path is the TERM plan above, not this knob.
-    if os.environ.get("DS2S_MERGE_RESHUFFLE", "1") == "1":
-        sorted_frags = frags.repartition(
-            sp, "term_id", "block_id"
-        ).sortWithinPartitions("term_id", "block_id", "gstart")
-    else:
-        sorted_frags = frags
+    sorted_frags = frags.repartition(
+        sp, "term_id", "block_id"
+    ).sortWithinPartitions("term_id", "block_id", "gstart")
 
     out_cols = ["term_id", "block_id", "n", "first_doc", "last_doc",
                 "doc_bytes", "tf_bytes"]

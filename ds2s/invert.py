@@ -22,7 +22,7 @@ Scale notes (100 TB / 10^12 files):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -173,25 +173,6 @@ class InvertedIndex:
                 df.unpersist()
             except Exception:
                 pass
-
-    # lazy cache, not a constructor/identity field (init=False keeps it out
-    # of __init__/__repr__/__eq__ — two otherwise-identical indexes must not
-    # compare unequal just because one has computed max_df)
-    _max_df_cache: int | None = field(
-        default=None, init=False, repr=False, compare=False
-    )
-
-    @property
-    def max_df(self) -> int:
-        """Hottest term's posting count — ONE tiny agg over the persisted
-        lexicon (milliseconds; the lexicon is always materialized by
-        build_index).  Drives blocks_from_tf's cost-based plan choice:
-        max_df bounds the largest term-local buffer the single-exchange
-        term plan would need."""
-        if self._max_df_cache is None:
-            row = self.lexicon.agg(F.max("df")).collect()[0]
-            self._max_df_cache = int(row[0] or 0)
-        return self._max_df_cache
 
 
 def build_index(

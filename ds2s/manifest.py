@@ -262,7 +262,6 @@ class IndexStore:
                 blocks = blocks_from_tf(
                     idx.tf.select("term_id", "doc_id", "tf", "len", "df"),
                     idx.n_docs, cfg, codec=codec, avg_len=idx.avg_len,
-                    max_df=lambda: idx.max_df,
                 )
             bucketed = blocks.withColumn(
                 "bucket", F.pmod(F.col("term_id"), F.lit(n_buckets))

@@ -518,7 +518,7 @@ class ServingIndex:
             postings = idx.tf.select("term_id", "doc_id", "tf", "len", "df")
             blocks = blocks_from_tf(
                 postings, idx.n_docs, self.cfg, codec=codec,
-                avg_len=idx.avg_len, max_df=lambda: idx.max_df,
+                avg_len=idx.avg_len,
             )
         self._init_tables(
             lexicon=idx.lexicon,
@@ -918,7 +918,7 @@ class ServingIndex:
             # batches; at sf0.1 each saved job is ~0.5-1 s of serve time)
             with _no_aqe(spark):
                 fused = (
-                    self.blocks.filter(F.col("term_id").isin(tids))
+                    self._term_scan(tids)
                     .select("term_id", "block_id", "first_doc", "last_doc",
                             "block_max_score")
                     .withColumn("is_seed", F.lit(False))

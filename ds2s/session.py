@@ -26,11 +26,11 @@ def get_spark(
     # ... and the system (glibc) pool then serves every >128 KiB request
     # with a fresh mmap that is munmapped on free: each kernel transient
     # (partition column concat, lexsort permutation, gather output) is a
-    # mmap + page-fault-on-touch + munmap cycle.  kernel_probe.py measured
-    # the real kernels at 32 procs: 85-252 s SYS / 441-1029 s total CPU
-    # per run with defaults vs 7-35 s SYS / 342-434 s CPU with the heap
-    # told to retain and reuse (mmap threshold 64 MiB, trim 128 MiB,
-    # 2 arenas).  Retained heap per worker is bounded by the trim
+    # mmap + page-fault-on-touch + munmap cycle.  MALLOC_AB.jsonl, an
+    # interleaved A/B of the full 100.8M-posting build at 32 cores,
+    # measured 200.3/213.6 s (blocks stage 177/179 s) with glibc defaults
+    # vs 129.7/90.3 s (blocks 104/57 s) with the heap told to retain and
+    # reuse (mmap threshold 64 MiB, trim 128 MiB, 2 arenas).  Retained heap per worker is bounded by the trim
     # threshold (~128 MiB x 32 workers ~= 4 GiB, fine on this box; tune
     # down via the env vars on small-memory executors).
     _malloc_env = {

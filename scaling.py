@@ -4,8 +4,9 @@ executors, per the round driver instruction).
 Runs the SAME index-build job at two parallelism levels (local[8] and
 local[32]) in separate JVMs on the same input and reports throughput at
 both plus scaling efficiency T_8 / (T_32 * 4).  The input is the sf0.1
-``documents`` fixture deterministically replicated ``--replicate`` times
-(token-rotated per replica so content differs but the distribution holds)
+``documents`` fixture deterministically replicated ``$DS2S_SCALING_REPLICATE``
+times (default 768; token-rotated per replica so content differs but the
+distribution holds)
 — big enough that compute dominates local-mode fixed overhead.
 
 Also checks cross-parallelism rank-identity: top-k results (exact and BMW)
@@ -27,6 +28,8 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from perfbench.procstat import Interference, tree_cpu_s  # noqa: E402
 
 # 768 replicas ≈ 100.8 M postings — large enough that variable (parallel)
 # work dominates the ~10-20 s of fixed driver-job latency; smaller tiers
@@ -97,8 +100,7 @@ def child(cores: int) -> None:
         """ONE pass emits payloads + len payloads + block-max metadata;
         len rides inside tf — no doc-keyed join of the posting table."""
         postings = idx.tf.select("term_id", "doc_id", "tf", "len", "df")
-        return blocks_from_tf(postings, idx.n_docs, avg_len=idx.avg_len,
-                              max_df=lambda: idx.max_df)
+        return blocks_from_tf(postings, idx.n_docs, avg_len=idx.avg_len)
 
     # untimed warm-up on a small slice: JIT/codegen compilation + python
     # worker spin-up are one-time JVM costs, not per-build costs (ds2i's
@@ -136,12 +138,16 @@ def child(cores: int) -> None:
         )
         # process-tree CPU from /proc (py4j cannot dispatch the
         # com.sun.management getProcessCpuTime on the non-public impl)
-        return gc_ms, proc_tree_cpu_s()
+        return gc_ms, tree_cpu_s()
 
     # timed: the full index build — tokenize → invert → lexicon/sizes →
     # encoded 128-posting block table + block-max metadata (the product
     # an indexer ships; giant per-term arrays are deliberately NOT built)
     stages: dict[str, float] = {}
+    # the other processes' share of host CPU, steal and load average
+    # over the timed build, read here where the JVM is a live descendant
+    interference = Interference()
+    interference.start()
     gc0, cpu0 = jvm_counters()
     t0 = time.perf_counter()
     # persist_tf=False: the tf join has exactly one consumer here (the
@@ -163,6 +169,7 @@ def child(cores: int) -> None:
     stages["gc_s"] = round((gc1 - gc0) / 1000.0, 3)
     stages["tree_cpu_s"] = round(cpu1 - cpu0, 3)
     stages["tree_cpu_per_core"] = round((cpu1 - cpu0) / build_s / cores, 3)
+    build_interference = interference.stop()
 
     if os.environ.get("DS2S_SCALING_PROBES", "1") == "1":
         # rank-identity probes (must be parallelism-invariant) — run on a
@@ -207,101 +214,11 @@ def child(cores: int) -> None:
                 ),
                 "exact_sha": digest(exact),
                 "bmw_sha": digest(bmw),
+                "interference": build_interference,
             }
         )
     )
     spark.stop()
-
-
-def proc_tree_cpu_s(root_pid: int | None = None) -> float:
-    """Total CPU-seconds (utime+stime+cutime+cstime) of root_pid's /proc
-    subtree — default: this process, i.e. the python driver plus the local
-    Spark JVM and its pyspark worker daemons.  CPU-seconds are the
-    interference-resistant signal on this shared box (neighbor load inflates
-    walls 13-230× but barely changes this tree's CPU accounting — round-4/5
-    campaigns), so per-query CPU deltas stay signable in any window."""
-    import collections
-
-    kids = collections.defaultdict(list)
-    for p in os.listdir("/proc"):
-        if not p.isdigit():
-            continue
-        try:
-            # parse AFTER the ')' that closes comm — a naive split
-            # mis-parents any process whose comm contains a space and
-            # silently drops its subtree's CPU
-            s = open(f"/proc/{p}/stat").read()
-            ppid = int(s[s.rindex(")") + 2:].split()[1])
-            kids[ppid].append(int(p))
-        except (OSError, ValueError):
-            pass
-    cpu_j, stack = 0, [root_pid or os.getpid()]
-    while stack:
-        pid = stack.pop()
-        try:
-            s = open(f"/proc/{pid}/stat").read()
-            parts = s[s.rindex(")") + 2:].split()
-            cpu_j += (int(parts[11]) + int(parts[12])
-                      + int(parts[13]) + int(parts[14]))
-        except OSError:
-            pass
-        stack.extend(kids.get(pid, []))
-    return cpu_j / 100.0
-
-
-def _stream_once(_arg) -> float:
-    """One memory-streaming work unit (module-level: mp.Pool pickles it)."""
-    import numpy as np
-
-    a = np.random.default_rng(1).random(20_000_000)
-    t0 = time.perf_counter()
-    s = 0.0
-    for _ in range(5):
-        s += float((a * 1.000001).sum())
-    return time.perf_counter() - t0
-
-
-def _spin_once(_arg) -> float:
-    """One ALU-bound work unit (no memory streaming): separates CPU-core
-    contention from memory-bus contention in the probe."""
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(3_000_000):
-        x += i * i
-    return time.perf_counter() - t0
-
-
-def host_probe() -> dict:
-    """Shared-host interference probe: wall of one memory-streaming numpy
-    proc vs 32 concurrent ones.  On a quiet box the 32-proc/1-proc wall
-    ratio is ~1.2-1.5 (measured round 3); under neighbor load it was
-    measured at 13-230× (round 4) — at which point an 8-vs-32-core
-    efficiency number measures the NEIGHBORS, not the code.  The ratio is
-    stamped into the report so the artifact carries its own validity.
-
-    ``cpu_ratio`` is the ALU-spin companion: the same 1-vs-32 shape with
-    no memory traffic.  Round 5 measured cpu_ratio 1.5 against stream
-    ratio 124 in the SAME minute — the neighbors saturate the memory bus
-    while leaving cores schedulable, which is exactly the regime where the
-    bandwidth-bound blocks stage stops scaling but ALU-bound kernels
-    don't.  Reading both stamps tells you WHICH contention an artifact
-    was captured under."""
-    import multiprocessing as mp
-
-    t1 = min(_stream_once(0) for _ in range(2))
-    with mp.Pool(32) as p:
-        walls = p.map(_stream_once, range(32))
-    c1 = min(_spin_once(0) for _ in range(2))
-    with mp.Pool(32) as p:
-        spins = p.map(_spin_once, range(32))
-    return {
-        "one_proc_s": round(t1, 3),
-        "par32_max_s": round(max(walls), 3),
-        "ratio": round(max(walls) / t1, 2),
-        "cpu_one_s": round(c1, 3),
-        "cpu_par32_max_s": round(max(spins), 3),
-        "cpu_ratio": round(max(spins) / c1, 2),
-    }
 
 
 def main() -> None:
@@ -312,17 +229,6 @@ def main() -> None:
     # sandbox host has noisy windows (identical fresh-JVM runs measured
     # 2-5× apart); interleaving exposes both parallelism levels to the
     # same windows instead of letting one level soak an unlucky stretch.
-    # Each repeat is preceded by a host probe; DS2S_SCALING_WAIT_QUIET
-    # (minutes) optionally delays the start until the probe ratio drops
-    # under DS2S_SCALING_QUIET_RATIO (default 3.0).
-    wait_min = float(os.environ.get("DS2S_SCALING_WAIT_QUIET", "0"))
-    quiet_ratio = float(os.environ.get("DS2S_SCALING_QUIET_RATIO", "3.0"))
-    probe = host_probe()
-    deadline = time.time() + wait_min * 60
-    while probe["ratio"] > quiet_ratio and time.time() < deadline:
-        print(json.dumps({"waiting_for_quiet_host": probe}), flush=True)
-        time.sleep(120)
-        probe = host_probe()
     # N and 4N parallelism levels (default 8 vs 32; DS2S_SCALING_LEVELS
     # e.g. "2,8" measures a 4× step using a quarter of the box — useful
     # when neighbor interference starves wide runs)
@@ -330,11 +236,8 @@ def main() -> None:
         int(x) for x in os.environ.get("DS2S_SCALING_LEVELS", "8,32").split(",")
     )
     results = {}
-    probes = [probe]
     repeats = int(os.environ.get("DS2S_SCALING_REPEATS", "3"))
     for rep in range(repeats):
-        if rep:
-            probes.append(host_probe())
         for cores in (lo, hi):
             try:
                 out = subprocess.run(
@@ -401,7 +304,6 @@ def main() -> None:
         "cpu_normalized_efficiency": round(
             r8["stages"]["tree_cpu_s"] / max(r32["stages"]["tree_cpu_s"], 1e-9), 3
         ),
-        "host_probe_per_repeat": probes,
         "replicate": REPLICATE,
         "sf_dir": SF_DIR,
     }

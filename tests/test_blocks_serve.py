@@ -91,65 +91,18 @@ def test_blocks_from_tf_equals_array_route(synth_idx, codec):
     pd.testing.assert_frame_equal(via_tf, via_arrays)
 
 
-def _plan_df(idx, plan: str, scored: bool, monkeypatch) -> pd.DataFrame:
-    monkeypatch.setenv("DS2S_BLOCKS_PLAN", plan)
-    cols = ["term_id", "doc_id", "tf"] + (["len", "df"] if scored else [])
-    out = (
-        blocks_from_tf(
-            idx.tf.select(*cols), idx.n_docs,
-            avg_len=idx.avg_len if scored else None,
-        )
-        .orderBy("term_id", "block_id")
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    for c in ("doc_bytes", "tf_bytes", "len_bytes"):
-        if c in out.columns:
-            out[c] = out[c].map(bytes)
-    return out
+def test_split_kernel_partition_bound_guard(synth_idx, monkeypatch):
+    """A shuffle partition holding more postings than the split kernel's
+    buffer bound fails loudly, naming the setting to raise, instead of
+    running a worker out of memory."""
+    import ds2s.blocks as blocks
 
-
-@pytest.mark.parametrize("scored", [False, True])
-def test_term_plan_equals_window_plan(synth_idx, monkeypatch, scored):
-    """The single-exchange TERM plan (whole term per partition: sort, cut,
-    encode, block-max in one kernel) is row-identical to the salted
-    window/merge plan — including len payloads and block-max scores in
-    scored mode.  Pins the cost-based plan switch to zero result drift."""
-    window = _plan_df(synth_idx, "window", scored, monkeypatch)
-    term = _plan_df(synth_idx, "term", scored, monkeypatch)
-    pd.testing.assert_frame_equal(term, window)
-
-
-def test_term_plan_partition_bound_guard(synth_idx, monkeypatch):
-    """A partition holding more postings than the declared buffer bound
-    fails loudly with the window-plan hint, not a worker OOM."""
-    monkeypatch.setenv("DS2S_BLOCKS_PLAN", "term")
-    monkeypatch.setenv("DS2S_SPLIT_MAX_PARTITION_ROWS", "10")
-    with pytest.raises(Exception, match="DS2S_BLOCKS_PLAN=window"):
+    monkeypatch.setattr(blocks, "_SPLIT_MAX_PARTITION_ROWS", 10)
+    with pytest.raises(Exception, match="spark.sql.shuffle.partitions") as ei:
         blocks_from_tf(
             synth_idx.tf.select("term_id", "doc_id", "tf"), synth_idx.n_docs
         ).count()
-
-
-def test_default_plan_is_window_term_forced_only(synth_idx, monkeypatch):
-    """The salted window plan is the default for every collection (the
-    MERGE_AB.jsonl verdict: salting parallelizes hot-term encode, so the
-    window plan beats the single-exchange term plan under Zipf df);
-    DS2S_BLOCKS_PLAN=term forces the term plan, and a forced term pick
-    with max_df over the partition-buffer bound fails loudly."""
-    monkeypatch.delenv("DS2S_BLOCKS_PLAN", raising=False)
-    tfq = synth_idx.tf.select("term_id", "doc_id", "tf")
-    default_plan = blocks_from_tf(
-        tfq, synth_idx.n_docs, max_df=int(synth_idx.max_df)
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "window" in default_plan.lower()
-    monkeypatch.setenv("DS2S_BLOCKS_PLAN", "term")
-    term_plan = blocks_from_tf(
-        tfq, synth_idx.n_docs, max_df=int(synth_idx.max_df)
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "Window" not in term_plan
-    with pytest.raises(ValueError, match="window plan"):
-        blocks_from_tf(tfq, synth_idx.n_docs, max_df=1 << 40)
+    assert "RuntimeError" in str(ei.value), ei.value
 
 
 def test_auto_codec_uses_interp_on_fixture(synth_idx):
@@ -670,6 +623,60 @@ def test_driver_scoring_is_semantics_free(spark, request, tmp_path,
     finally:
         if case != "fixture":
             sidx.unpersist()
+
+
+def test_unfetched_store_batch_prunes_bucket_dirs(spark, tmp_path,
+                                                  synth_idx, monkeypatch):
+    """A driver-tier batch over ``_DRIVER_FETCH_BLOCKS``, served uncached
+    off the store, reads its block metadata through ``_term_scan``: every
+    block-table scan of the fused metadata + θ₀-seed fetch carries the
+    ``bucket IN`` partition filter, so it opens only the batch's bucket
+    directories.  Answers still equal exhaustive ranked-OR."""
+    import ds2s.serve as serve
+    from ds2s.manifest import IndexStore
+
+    store = IndexStore(str(tmp_path / "nocache"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=4)
+    sidx = ServingIndex.from_store(spark, store, cache_blocks=False)
+    qdf = Q.queries_df(spark, rows=_SYNTH_ROWS)
+    exact = (
+        Q.ranked_or_topk(synth_idx, qdf, k=5)
+        .orderBy("qid", "rank").toPandas().reset_index(drop=True)
+    )
+    monkeypatch.setattr(serve, "_DRIVER_FETCH_BLOCKS", 0)
+    DataFrame = type(qdf)  # the concrete class, which defines toPandas
+    plans = []
+    to_pandas = DataFrame.toPandas
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_pandas(df)
+
+    try:
+        monkeypatch.setattr(DataFrame, "toPandas", spy)
+        sidx.survivor_blocks(qdf, k=5)
+        monkeypatch.setattr(DataFrame, "toPandas", to_pandas)
+        assert sidx.last_plan["tier"] == "driver", sidx.last_plan
+        assert sidx.last_plan["scoring"] == "spark", sidx.last_plan
+        fused = [p for p in plans if "is_seed" in p]
+        assert len(fused) == 1, plans
+        scans = [l for l in fused[0].splitlines() if "FileScan" in l]
+        assert len(scans) == 2, fused[0]
+        for line in scans:
+            part = line.split("PartitionFilters: [", 1)[1].split("]")[0]
+            assert "bucket" in part, line
+        for algo in ("bmw", "maxscore", "wand"):
+            got = (
+                sidx.topk(qdf, k=5, algo=algo)
+                .orderBy("qid", "rank").toPandas().reset_index(drop=True)
+            )
+            pd.testing.assert_frame_equal(
+                got.astype({"qid": "int64", "rank": "int64"}),
+                exact.astype({"qid": "int64", "rank": "int64"}),
+                check_exact=False, atol=1e-8,
+            )
+    finally:
+        sidx.unpersist()
 
 
 def test_term_prefilter_cap_and_bucket_boundaries(spark):

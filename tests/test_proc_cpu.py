@@ -1,4 +1,4 @@
-"""proc_tree_cpu_s contract: the interference-resistant per-query signal
+"""tree_cpu_s contract: the interference-resistant per-query signal
 bench.py stamps beside every wall (BASELINE.md c4: walls inflate 13-230x
 under neighbor load; this process tree's CPU accounting barely moves).
 
@@ -11,7 +11,7 @@ import subprocess
 import sys
 import time
 
-from scaling import proc_tree_cpu_s
+from perfbench.procstat import tree_cpu_s
 
 
 def _burn(seconds: float) -> None:
@@ -22,9 +22,9 @@ def _burn(seconds: float) -> None:
 
 
 def test_counts_own_cpu():
-    c0 = proc_tree_cpu_s()
+    c0 = tree_cpu_s()
     _burn(0.3)
-    delta = proc_tree_cpu_s() - c0
+    delta = tree_cpu_s() - c0
     # /proc ticks are 10 ms; allow generous slack both ways (other threads
     # in this test process may add CPU, the burn itself is >= 0.3)
     assert 0.2 <= delta <= 5.0, delta
@@ -42,8 +42,8 @@ def test_counts_live_child_subtree():
     try:
         # wait until the child has burned its 0.5 s and is parked in sleep
         deadline = time.time() + 20
-        c0 = proc_tree_cpu_s()
-        while proc_tree_cpu_s() - c0 < 0.4:
+        c0 = tree_cpu_s()
+        while tree_cpu_s() - c0 < 0.4:
             assert time.time() < deadline, "child CPU never appeared in tree"
             time.sleep(0.1)
     finally:
@@ -52,7 +52,7 @@ def test_counts_live_child_subtree():
 
 
 def test_dead_children_fold_into_cutime():
-    c0 = proc_tree_cpu_s()
+    c0 = tree_cpu_s()
     subprocess.run(
         [sys.executable, "-c",
          "import time\n"
@@ -62,4 +62,4 @@ def test_dead_children_fold_into_cutime():
         check=True,
     )
     # reaped child's CPU must survive via the parent's cutime/cstime
-    assert proc_tree_cpu_s() - c0 >= 0.3
+    assert tree_cpu_s() - c0 >= 0.3

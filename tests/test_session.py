@@ -2,7 +2,7 @@
 
 The worker daemon's env is constructed from spark.executorEnv.* (the
 JVM's own env is not forwarded), so the allocator tuning that
-kernel_probe.py / MALLOC_AB.jsonl justified must be present as confs —
+MALLOC_AB.jsonl justified must be present as confs —
 a silent drop here reverts the blocks stage to the mmap page-fault
 storm (~2x stage wall at 32 cores).
 """
