@@ -161,8 +161,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # wand/block-max metadata is emitted by the ENCODE pass itself
         # (ds2s.blocks.blocks_from_tf scored path) — these entries verify
         # the engine's stored metadata against the independent SQL oracle
+        # (the per-term max is the max of the term's block maxima)
         "wand_max": lambda spark, sf: _sindex(spark, sf)
-        .wand.select("term_id", F.round("max_score", 4).alias("max_score"))
+        .blocks.groupBy("term_id")
+        .agg(F.round(F.max("block_max_score"), 4).alias("max_score"))
         .orderBy("term_id"),
         "block_max": lambda spark, sf: _sindex(spark, sf)
         .blocks.select(

@@ -12,7 +12,7 @@ Iceberg partitioned tables when a runtime jar is present, SURVEY.md §1.6):
     corpus_manifest/            doc_id, content_sha256   (per-row invariant)
     sizes/  lexicon/            dimension tables
     blocks/bucket=K/            encoded posting blocks, bucket = term_id % B
-    superblocks/  wand_max/     derived pruning tiers
+    superblocks/                derived pruning tier
     manifest.jsonl              one line per completed unit: lineage +
                                 metrics + the table's Spark schema
     _index.json                 frozen IndexConfig + collection stats
@@ -201,7 +201,7 @@ class IndexStore:
         expected = (
             ["corpus_manifest", "sizes", "lexicon"]
             + bucket_names
-            + ["superblocks", "wand_max", "_index"]
+            + ["superblocks", "_index"]
         )
         self._invalidate_units({u for u in expected if u not in done})
         written = 0
@@ -375,20 +375,6 @@ class IndexStore:
                 lambda: superblock_agg(self.load_table(spark, "blocks"),
                                        sb_size),
                 "superblocks",
-            ),
-        )
-
-        # per-term wand upper bound — max is associative, so the max over
-        # superblock maxes equals the max over block maxes: aggregate the
-        # 1/sb_size STORED superblock table, not the block table (written
-        # just above, so present even on a resume that skipped it as done)
-        unit(
-            "wand_max",
-            plain(
-                lambda: self.load_table(spark, "superblocks")
-                .groupBy("term_id")
-                .agg(F.max("sb_max_score").alias("max_score")),
-                "wand_max",
             ),
         )
 

@@ -4,42 +4,41 @@ ds2i's ranked operators ([U] ds2i/queries.cpp wand_query / maxscore_query /
 block_max_wand_query — upstream layout, SURVEY.md §2.6) are cursor-at-a-time
 heap algorithms.  A per-posting Python loop cannot survive translation
 (SURVEY.md §4 last row), so this module implements the same *pruning
-semantics* vectorized, exact by construction.  The query PLAN is computed
-centrally (the role a ds2i search node's query thread plays); the payload
-work stays distributed, and payloads of pruned blocks never shuffle —
-except for a batch small enough to fetch whole and score in the driver:
+semantics* vectorized, exact by construction.  Like ds2i, one block-max
+planner answers every query; the per-term bound is the max of its block
+maxima.  Every read of the block table goes through ONE term scan
+(``ServingIndex._term_scan``: ``term_id IN``, plus a ``bucket IN``
+partition hint on the store layout).
 
 Phase 1 — θ₀ seed (tiny): the rarest query term's highest-block-max blocks
-are top-N-capped *relationally* (a per-term window over block metadata;
-in driver numpy when the batch's blocks were fetched whole), so at most
-``seed_max_blocks`` payload rows per term leave the scan; their
-tf+len payloads decode in the driver, and θ₀ = k-th best single-term lower
+are top-N-capped (a per-term window over block metadata; driver numpy when
+the batch's blocks were fetched whole), so at most ``seed_max_blocks``
+payload rows per term leave the scan; θ₀ = k-th best single-term lower
 bound (0 if fewer than k).  Any subset of true scores is a valid lower
 bound on the final k-th score, so the cap is always safe.
 
-Phase 2 — metadata-only pruning, three tiers by query-term block volume
-(``n_blocks ≈ Σ df/128`` estimated from the lexicon, no extra scan):
+Phase 2 — metadata-only pruning through ONE interval grid
+(``_driver_block_grid``: union of block boundaries, summed w·block_max per
+interval), in three tiers by query-term block volume (``n_blocks ≈ Σ
+df/128`` estimated from the lexicon, no extra scan):
 
-- small (≤ plan_collect_cap): block metadata of the query's terms
-  collects to the driver; the exact upper-bound interval grid (union of
-  block boundaries; summed w·block_max per interval) prunes there.  A
-  batch of at most ``_DRIVER_FETCH_BLOCKS`` estimated blocks (a few MB)
-  fetches every block of its terms, payloads included, in ONE collect;
-  the θ₀ seed rows are picked from it, and the scoring kernel runs in
-  the driver, once per qid — no Python workers.  A larger small-tier
-  batch fetches first/last/block_max columns only (fused with the θ₀
-  seed); its surviving (term, block) keys re-enter the plan as a local
-  relation, shuffle-hash joined to the payloads inside the scoring
-  kernel's job (ONE applyInPandas stage).
-- large: a SUPERBLOCK tier — per (term, superblock of ``sb_size`` blocks)
-  (first_doc, last_doc, max block_max) rows, the Variable-BMW /
-  wand_data_compressed analogue (PISA lineage) — is grid-pruned first;
-  it is 1/sb_size the metadata, so a 10^9-posting term contributes ~61k
-  rows, not 8M.  Surviving superblocks' block metadata then collects (if
-  under the cap) for exact block-level pruning.
-- huge (survivors still over the cap): the block-level grid runs in a
-  per-qid plan kernel whose input is *bounded by surviving superblocks'
-  blocks* — never by the query terms' total block count.
+- driver (≤ plan_collect_cap): the batch terms' block metadata collects
+  to the driver, fused with the θ₀ seed rows in one job, and the grid
+  prunes there.  A batch of at most ``_DRIVER_FETCH_BLOCKS`` estimated
+  blocks (a few MB) instead fetches every block of its terms, payloads
+  included, in ONE collect; ``topk`` then scores it in the driver, once
+  per qid — no Python workers.
+- superblock: the grid first runs on per (term, superblock of ``sb_size``
+  blocks) rows — the Variable-BMW / wand_data_compressed analogue (PISA
+  lineage), 1/sb_size the metadata, so a 10^9-posting term contributes
+  ~61k rows, not 8M — then on the surviving superblocks' block metadata.
+- kernel (superblock survivors still over the cap): the same grid runs
+  per qid in ``applyInPandas``, on input bounded by the surviving
+  superblocks' blocks — never by the query terms' total block count.
+
+Every tier ends in ONE survivor relation: the surviving (qid, term, block)
+keys joined to the term scan's payload columns, shuffle-hash, inside the
+scoring kernel's job, so payloads of pruned blocks never shuffle.
 
 Safety of every tier: superblock maxima dominate their blocks' maxima, so
 the superblock grid over-approximates the block grid; any doc d with full
@@ -118,43 +117,11 @@ def _no_aqe(spark):
             spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 _UB_MARGIN = 1.0 + 1e-9
-# Above this many distinct terms, the per-batch `term_id IN (...)` payload
-# prefilter is skipped: the InSet predicate itself stays cheap, but a
-# vocabulary that wide touches most cached batches / row groups anyway and
-# the literal list starts to dominate plan serialization.  Batches this
-# large are far past the interactive shape the filter exists for.
-_MAX_TERM_IN_FILTER = 8192
 # A driver-tier batch whose terms span at most this many blocks (estimated
 # from lexicon df) is fetched whole — metadata AND payloads, one collect —
 # and scored in the driver.  Sized to driver memory, not to any workload:
 # 4096 blocks × 128 postings × ~8 B ≈ 4 MB of payload.
 _DRIVER_FETCH_BLOCKS = 4096
-
-
-def _term_prefilter(blocks, tids, n_buckets: int = 0):
-    """`term_id IN (tids)` scan predicate on the block table.
-
-    Semantics-free (callers only ever join the result back on term keys
-    drawn from `tids`); its job is to reach the SCAN: cached-relation
-    batch stats or parquet row-group stats prune before any payload byte
-    is materialized, instead of every row probing the survivor join.
-
-    When the table is the hive-partitioned store layout
-    (``blocks/bucket=k``, ``bucket = term_id % n_buckets`` — see
-    manifest.write_checkpointed), the bucket set is derivable driver-side
-    from the same term set, so an additional ``bucket IN (...)`` predicate
-    prunes whole PARTITION DIRECTORIES at planning time: uncached
-    store-backed serving then lists and reads only the query terms'
-    buckets, never the other ~(n_buckets − |terms|)/n_buckets of a
-    multi-TB block table."""
-    if 0 < len(tids) <= _MAX_TERM_IN_FILTER:
-        out = blocks.filter(F.col("term_id").isin([int(t) for t in tids]))
-        if n_buckets > 0 and "bucket" in blocks.columns:
-            out = out.filter(F.col("bucket").isin(
-                sorted({int(t) % n_buckets for t in tids})
-            ))
-        return out
-    return blocks
 
 
 _OUT_SCHEMA = "qid int, rank int, doc_id long, score double"
@@ -222,16 +189,14 @@ def _grid_survivors(per_term, theta0):
     """Exact interval-grid pruning over metadata arrays.
 
     per_term entries need {firsts, lasts, ubs} (pruning intervals).
-    Returns (points, surv mask, per-term boolean ``take`` over the SAME
-    interval arrays — an entry survives iff it overlaps a surviving
-    interval)."""
+    Returns a per-term boolean ``take`` over the SAME interval arrays: an
+    entry survives iff it overlaps a surviving interval."""
     points, ub_sum = _interval_grid(per_term)
-    surv, psurv = _surv_psurv(ub_sum, theta0)
-    takes = []
-    for t in per_term:
-        lo, hi = _spans(points, t["firsts"], t["lasts"])
-        takes.append(_overlap_take(psurv, lo, hi))
-    return points, surv, takes
+    _, psurv = _surv_psurv(ub_sum, theta0)
+    return [
+        _overlap_take(psurv, *_spans(points, t["firsts"], t["lasts"]))
+        for t in per_term
+    ]
 
 
 def _sweep_topk(per_term, k, theta0, avg, scorer, rank_round):
@@ -420,68 +385,84 @@ def _make_kernel(k, algo, scorer, avg_len, rank_round):
 
 
 def _surv_frame(rows: list[tuple]) -> pd.DataFrame:
-    """Survivor rows → the ``_SURV_SCHEMA`` frame."""
+    """Survivor rows → the ``_SURV_SCHEMA`` frame (typed even when empty)."""
     return pd.DataFrame(
         rows,
         columns=["qid", "term_id", "block_id", "w", "idf", "max_score",
                  "theta0"],
-    ).astype({"qid": "int32", "term_id": "int32", "block_id": "int32"})
+    ).astype({"qid": "int32", "term_id": "int32", "block_id": "int32",
+              "w": "float64", "idf": "float64", "max_score": "float64",
+              "theta0": "float64"})
 
 
-def _make_plan_kernel():
-    """Fallback (huge-tier) per-qid plan kernel: block METADATA of the
-    surviving superblocks → surviving block keys via the exact interval
-    grid.  θ₀ arrives as a column (driver-seeded); input is bounded by the
-    superblock tier, never by the query terms' total block count."""
+def _meta_arrays(meta: pd.DataFrame, bid: str = "block_id",
+                 bmax: str = "block_max_score", with_sb: bool = False) -> dict:
+    """term_id → one term's metadata rows as arrays, in ``bid`` order:
+    block rows by default, superblock rows with ``bid="sb_id"``."""
+    out: dict[int, dict] = {}
+    for tid, g in meta.groupby("term_id"):
+        g = g.sort_values(bid)
+        m = dict(
+            bid=g[bid].to_numpy(np.int64),
+            bf=g["first_doc"].to_numpy(np.int64),
+            bl=g["last_doc"].to_numpy(np.int64),
+            bmax=g[bmax].to_numpy(np.float64),
+        )
+        if with_sb:
+            m["sb"] = g["sb_id"].to_numpy(np.int64)
+        out[int(tid)] = m
+    return out
 
-    empty = {
-        "qid": pd.Series([], dtype="int32"),
-        "term_id": pd.Series([], dtype="int32"),
-        "block_id": pd.Series([], dtype="int32"),
-        "w": pd.Series([], dtype="float64"),
-        "idf": pd.Series([], dtype="float64"),
-        "max_score": pd.Series([], dtype="float64"),
-        "theta0": pd.Series([], dtype="float64"),
-    }
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        theta0 = float(pdf["theta0"].iloc[0])
-        per_term, groups = [], []
-        for term_id, g in pdf.groupby("term_id", sort=True):
-            g = g.sort_values("block_id")
-            bf = g["first_doc"].to_numpy(dtype=np.int64)
-            bl = g["last_doc"].to_numpy(dtype=np.int64)
-            ub = g["block_max_score"].to_numpy(dtype=np.float64) * float(
-                g["w"].iloc[0]
-            )
-            per_term.append(dict(firsts=bf, lasts=bl, ubs=ub))
-            groups.append((int(term_id), g))
-        _, _, takes = _grid_survivors(per_term, theta0)
-        out = []
-        for (term_id, g), take in zip(groups, takes):
-            if not take.any():
+def _driver_block_grid(qid_terms, meta_by_tid, theta0, qid_sb_sets=None):
+    """THE plan grid: exact interval-grid pruning per qid over
+    ``_meta_arrays`` (blocks or superblocks), optionally restricted to
+    each qid's surviving superblocks.  Returns survivor rows (qid,
+    term_id, block_id, w, idf, max_score, theta0); ``block_id`` is the
+    arrays' ``bid``, and ``max_score`` the term's max over them."""
+    out = []
+    for qid, qterms in sorted(qid_terms.items()):
+        sb_sets = None if qid_sb_sets is None else qid_sb_sets.get(qid, {})
+        per_term, infos = [], []
+        for tid, w, idf in qterms:
+            m = meta_by_tid.get(tid)
+            if m is None:
                 continue
-            gg = g.iloc[np.flatnonzero(take)]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "qid": np.int32(key[0]),
-                        "term_id": np.int32(term_id),
-                        "block_id": gg["block_id"].to_numpy(dtype=np.int32),
-                        "w": gg["w"].to_numpy(dtype=np.float64),
-                        "idf": gg["idf"].to_numpy(dtype=np.float64),
-                        "max_score": float(
-                            g["block_max_score"].to_numpy(dtype=np.float64).max()
-                        ),
-                        "theta0": theta0,
-                    }
-                )
-            )
-        if not out:
-            return pd.DataFrame(empty)
-        return pd.concat(out, ignore_index=True)
+            bid, bf, bl, bmax = m["bid"], m["bf"], m["bl"], m["bmax"]
+            if sb_sets is not None:
+                allowed = sb_sets.get(tid)
+                if allowed is None:
+                    continue
+                sel = np.isin(m["sb"], np.fromiter(allowed, np.int64))
+                if not sel.any():
+                    continue
+                bid, bf, bl, bmax = bid[sel], bf[sel], bl[sel], bmax[sel]
+            per_term.append(dict(firsts=bf, lasts=bl, ubs=bmax * w))
+            infos.append((tid, w, idf, bid, bmax))
+        if not per_term:
+            continue
+        takes = _grid_survivors(per_term, theta0[qid])
+        for (tid, w, idf, bid, bmax), take in zip(infos, takes):
+            tmax = float(bmax.max())
+            for bi in bid[np.flatnonzero(take)]:
+                out.append((qid, tid, int(bi), w, idf, tmax, theta0[qid]))
+    return out
 
-    return kernel
+
+def _plan_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Kernel-tier plan for one qid: the block metadata of its surviving
+    superblocks → its surviving block keys, through the driver tiers' own
+    grid, terms in ``term_id`` order.  θ₀ arrives as a column (driver-
+    seeded); the input is bounded by the superblock tier, never by the
+    query terms' total block count."""
+    qid = int(key[0])
+    terms = pdf.drop_duplicates("term_id").sort_values("term_id")
+    qterms = list(zip(terms["term_id"].tolist(), terms["w"].tolist(),
+                      terms["idf"].tolist()))
+    return _surv_frame(_driver_block_grid(
+        {qid: qterms}, _meta_arrays(pdf),
+        {qid: float(pdf["theta0"].iloc[0])},
+    ))
 
 
 class ServingIndex:
@@ -494,9 +475,10 @@ class ServingIndex:
     ``_DRIVER_FETCH_BLOCKS`` payload blocks (kept from ``survivor_blocks``
     until the next batch).
     The block table is self-contained (docIDs, tfs, doc lengths, block-max
-    score per row); auxiliary tables are the per-term max score (``wand``,
-    one aggregation) and the superblock tier (``superblocks``, one
-    metadata-only aggregation — the Variable-BMW upper level).
+    score per row); the one auxiliary table is the superblock tier
+    (``superblocks``, one metadata-only aggregation — the Variable-BMW
+    upper level).  A term's max score is the max of its block maxima,
+    taken where it is needed.
 
     Two constructions:
     - ``ServingIndex(idx)`` — from a live build: ONE pass over the
@@ -531,8 +513,7 @@ class ServingIndex:
         )
 
     def _init_tables(self, lexicon: DataFrame, n_docs: int, avg_len: float,
-                     blocks: DataFrame, wand: DataFrame | None = None,
-                     superblocks: DataFrame | None = None,
+                     blocks: DataFrame, superblocks: DataFrame | None = None,
                      seed_max_blocks: int = 64, sb_size: int = 128,
                      plan_collect_cap: int = 131072,
                      cache_blocks: bool = True) -> None:
@@ -541,7 +522,7 @@ class ServingIndex:
         self.avg_len = float(avg_len)
         # store layout hint: >0 means blocks carries a `bucket` hive
         # partition column with bucket = term_id % _n_buckets (from_store
-        # sets it from _index.json) — _term_prefilter then prunes whole
+        # sets it from _index.json) — _term_scan then prunes whole
         # bucket directories on uncached store-backed serving
         self._n_buckets = 0
         self.seed_max_blocks = int(seed_max_blocks)
@@ -563,13 +544,6 @@ class ServingIndex:
         # file scan (partition-directory + row-group pruning) instead of
         # materializing the full table into the cache on first touch.
         self.blocks = blocks.persist() if cache_blocks else blocks
-        if wand is None:
-            # term upper bound = max over its block maxes — one small agg
-            # over the (persisted) block table, no postings scan
-            wand = self.blocks.groupBy("term_id").agg(
-                F.max("block_max_score").alias("max_score")
-            )
-        self.wand = wand.persist()
         if superblocks is None:
             # Variable-BMW upper tier (shared definition, blocks.py).
             # Lazy: only materialized when a query's block volume needs it.
@@ -577,13 +551,12 @@ class ServingIndex:
         self.superblocks = superblocks.persist()
 
     def unpersist(self) -> None:
-        """Release the three cached serving tables (blocks, wand,
-        superblocks).  Without this, every ServingIndex constructed on a
+        """Release the two cached serving tables (blocks, superblocks).  Without this, every ServingIndex constructed on a
         session — rebuilds with other codecs, from_store twins, per-sf
         instances — pins its block cache (the largest table in the
         system) in executor storage for the session lifetime (round-5
         review finding).  Idempotent; the index is unusable afterwards."""
-        for df in (self.blocks, self.wand, self.superblocks):
+        for df in (self.blocks, self.superblocks):
             try:
                 df.unpersist()
             except Exception:
@@ -614,9 +587,8 @@ class ServingIndex:
         # (round-5 review): a writer that crashed mid-write can leave a
         # partially-committed parquet dir visible (task-commit committers)
         # with no manifest line — loading it would silently drop terms
-        # from pruning metadata and corrupt top-k.  Derivable tiers
-        # (superblocks, wand_max) fall back to recomputation from blocks,
-        # exactly the resume protocol's reading; REQUIRED tables (lexicon,
+        # from pruning metadata and corrupt top-k.  The derivable tier
+        # (superblocks) falls back to recomputation from blocks, exactly the resume protocol's reading; REQUIRED tables (lexicon,
         # every blocks bucket) have no fallback, so an incomplete one is a
         # loud error, never a silent partial index.  A table that IS
         # manifest-complete but unreadable (I/O error, schema drift) still
@@ -653,16 +625,11 @@ class ServingIndex:
             store.load_table(spark, "superblocks", units)
             if complete("superblocks") else None
         )
-        wand = (
-            store.load_table(spark, "wand_max", units)
-            if complete("wand_max") else None
-        )
         self._init_tables(
             lexicon=store.load_table(spark, "lexicon", units),
             n_docs=meta["n_docs"],
             avg_len=meta["avg_len"],
             blocks=store.load_table(spark, "blocks", units),
-            wand=wand,
             superblocks=superblocks,
             seed_max_blocks=seed_max_blocks,
             sb_size=int(meta.get("sb_size", sb_size)),
@@ -731,11 +698,15 @@ class ServingIndex:
         return rarest
 
     def _term_scan(self, tids) -> DataFrame:
-        """The block rows of ``tids``.  ``term_id IN`` is the SEMANTIC
-        filter (it must apply even for empty or huge term sets, so
-        _term_prefilter's skip-above-cap contract doesn't fit); on the
-        store layout a ``bucket IN`` hint also prunes partition
-        directories."""
+        """The block rows of ``tids``: the ONE read of the block table that
+        every serving path makes.  ``term_id IN`` is the semantic filter,
+        so an empty term set reads no rows; it reaches the SCAN, where
+        cached-batch or parquet row-group stats prune before any payload
+        byte is materialized.  On the store layout (``blocks/bucket=k``,
+        ``bucket = term_id % n_buckets``, manifest.write_checkpointed) a
+        ``bucket IN`` hint from the same terms also prunes whole partition
+        directories at planning time, so uncached serving lists and reads
+        only the batch's buckets."""
         src = self.blocks
         if self._n_buckets > 0 and "bucket" in src.columns:
             src = src.filter(F.col("bucket").isin(
@@ -817,59 +788,50 @@ class ServingIndex:
             theta0[qid] = max(0.0, th - quantum)
         return theta0
 
-    @staticmethod
-    def _driver_block_grid(qid_terms, meta_by_tid, theta0, qid_sb_sets=None):
-        """Exact block-level grid, per qid, in the driver.  Returns
-        survivor rows (qid, term_id, block_id, w, idf, max_score, theta0)."""
-        out = []
-        for qid, qterms in sorted(qid_terms.items()):
-            sb_sets = None if qid_sb_sets is None else qid_sb_sets[qid]
-            per_term, infos = [], []
-            for tid, w, idf in qterms:
-                m = meta_by_tid.get(tid)
-                if m is None:
-                    continue
-                bid, bf, bl, bmax = m["bid"], m["bf"], m["bl"], m["bmax"]
-                if sb_sets is not None:
-                    allowed = sb_sets.get(tid)
-                    if allowed is None:
-                        continue
-                    sel = np.isin(m["sb"], np.fromiter(allowed, np.int64))
-                    if not sel.any():
-                        continue
-                    bid, bf, bl, bmax = bid[sel], bf[sel], bl[sel], bmax[sel]
-                per_term.append(dict(firsts=bf, lasts=bl, ubs=bmax * w))
-                infos.append((tid, w, idf, bid, bmax))
-            if not per_term:
-                continue
-            _, _, takes = _grid_survivors(per_term, theta0[qid])
-            for (tid, w, idf, bid, bmax), take in zip(infos, takes):
-                tmax = float(bmax.max())
-                for bi in bid[np.flatnonzero(take)]:
-                    out.append((qid, tid, int(bi), w, idf, tmax, theta0[qid]))
-        return out
+    def _fetch_seeded(self, meta: DataFrame, cur: list[tuple], k: int,
+                      quantum: float) -> tuple[pd.DataFrame, dict]:
+        """Collect ``meta`` and the θ₀ seed rows in ONE driver job (one
+        union: fixed job latency dominates small batches) → (the ``meta``
+        rows, θ₀ per qid)."""
+        with _no_aqe(meta.sparkSession):
+            fused = (
+                meta.withColumn("is_seed", F.lit(False))
+                .unionByName(self._seed_df(cur), allowMissingColumns=True)
+                .toPandas()
+            )
+        seeds = fused[fused["is_seed"]]
+        return fused[~fused["is_seed"]], self._theta0_from_rows(
+            cur, seeds, k, quantum
+        )
+
+    def _sb_block_meta(self, tids) -> DataFrame:
+        """Block metadata of ``tids``, keyed by superblock (``sb_id``)."""
+        return self._term_scan(tids).select(
+            "term_id",
+            (F.col("block_id") / self.sb_size).cast("int").alias("sb_id"),
+            "block_id", "first_doc", "last_doc", "block_max_score",
+        )
 
     def survivor_blocks(self, qdf: DataFrame, k: int = 10,
                         rank_round: int | None = 6) -> DataFrame:
         """The pre-pruned (qid × block) rows — metadata + payloads — that
-        the scoring kernel will actually receive.  Exposed for the
-        decode-pruning metric: ``survivor_blocks(...).count()`` vs the
-        unpruned qid × term-blocks join.
+        the scoring kernel receives: in every tier ONE relation, the
+        surviving (qid, term, block) keys joined to ``_term_scan``'s
+        payload columns.  Exposed for the decode-pruning metric: its
+        ``count()`` is ``last_plan["survivors"]`` in the driver and
+        superblock tiers, against the unpruned qid × term-blocks join.
 
-        Tiered planning (module docstring): driver grid under
-        ``plan_collect_cap`` metadata rows, superblock pre-prune above it,
-        per-qid plan kernel only when even superblock survivors exceed the
-        cap.  A driver-tier batch of at most ``_DRIVER_FETCH_BLOCKS``
-        estimated blocks fetches every block of its terms, payloads
-        included, in one collect; the survivors come back as a local
-        relation and ``topk`` scores them in the driver.  In every other
-        case payloads of pruned blocks never shuffle."""
+        Tiers (module docstring): the driver grid under
+        ``plan_collect_cap`` metadata rows, the superblock pre-prune above
+        it, the per-qid plan kernel only when even superblock survivors
+        exceed the cap.  A driver-tier batch of at most
+        ``_DRIVER_FETCH_BLOCKS`` estimated blocks fetches every block of
+        its terms, payloads included, in one collect and keeps its
+        survivors' rows for ``topk`` to score in the driver; the relation
+        returned is the same lazy join, which ``topk`` then never runs."""
         spark = qdf.sparkSession
         self._driver_batch = None
         cur = self._resolve_cursors(qdf)
-        if not cur:
-            self.last_plan = {"est_blocks": 0, "n_qids": 0}
-            return self._empty_survivors(spark)
         bs = int(self.cfg.block_size)
         quantum = 10.0 ** (-rank_round) if rank_round is not None else 0.0
 
@@ -881,83 +843,60 @@ class ServingIndex:
             -(-df // bs) for _, tid, w, df, idf in
             {(c[1]): c for c in cur}.values()  # distinct tids
         )
-
-        surv_rows: list[tuple] | None = None
-        fallback_sbk: pd.DataFrame | None = None
         self.last_plan: dict = {
             "est_blocks": est_blocks, "n_qids": len(qid_terms),
             "scoring": "spark",
         }
+        surv_rows, fetched, surv_keys = [], None, None
 
-        if est_blocks <= min(self.plan_collect_cap, _DRIVER_FETCH_BLOCKS):
+        if not cur:
+            pass  # no batch term is in the vocabulary: no survivors
+        elif est_blocks <= min(self.plan_collect_cap, _DRIVER_FETCH_BLOCKS):
             # every block of the batch's terms in ONE job; the θ₀ seed
             # rows, the grid and the survivors are all driver numpy
             with _no_aqe(spark):
-                rows = self._term_scan(tids).select(*_PAYLOAD_COLS).toPandas()
-            theta0 = self._theta0_from_rows(
-                cur, self._seed_rows(cur, rows), k, quantum
-            )
-            spdf = _surv_frame(self._driver_block_grid(
-                qid_terms, self._meta_arrays(rows), theta0
-            ))
-            self.last_plan.update(
-                tier="driver", scoring="driver", collected_rows=len(rows),
-                survivors=len(spdf),
-            )
-            surv = rows.merge(spdf, on=["term_id", "block_id"])
-            self._driver_batch = surv
-            return spark.createDataFrame(
-                surv, schema=self._empty_survivors(spark).schema
-            )
-
-        seed_df = self._seed_df(cur)
-        if est_blocks <= self.plan_collect_cap:
-            # small tier: exact block grid entirely in the driver.  The
-            # metadata fetch and the θ₀ seed payload fetch travel in ONE
-            # union → ONE driver job (fixed job latency dominates small
-            # batches; at sf0.1 each saved job is ~0.5-1 s of serve time)
-            with _no_aqe(spark):
-                fused = (
-                    self._term_scan(tids)
-                    .select("term_id", "block_id", "first_doc", "last_doc",
-                            "block_max_score")
-                    .withColumn("is_seed", F.lit(False))
-                    .unionByName(seed_df, allowMissingColumns=True)
-                    .toPandas()
+                fetched = (
+                    self._term_scan(tids).select(*_PAYLOAD_COLS).toPandas()
                 )
-            seed_pdf = fused[fused["is_seed"]]
-            meta = fused[~fused["is_seed"]]
-            theta0 = self._theta0_from_rows(cur, seed_pdf, k, quantum)
-            surv_rows = self._driver_block_grid(
-                qid_terms, self._meta_arrays(meta), theta0
+            theta0 = self._theta0_from_rows(
+                cur, self._seed_rows(cur, fetched), k, quantum
+            )
+            surv_rows = _driver_block_grid(
+                qid_terms, _meta_arrays(fetched), theta0
+            )
+            self.last_plan.update(
+                tier="driver", scoring="driver", collected_rows=len(fetched),
+                survivors=len(surv_rows),
+            )
+        elif est_blocks <= self.plan_collect_cap:
+            # exact block grid entirely in the driver
+            meta, theta0 = self._fetch_seeded(
+                self._term_scan(tids).select(
+                    "term_id", "block_id", "first_doc", "last_doc",
+                    "block_max_score",
+                ),
+                cur, k, quantum,
+            )
+            surv_rows = _driver_block_grid(
+                qid_terms, _meta_arrays(meta), theta0
             )
             self.last_plan.update(
                 tier="driver", collected_rows=len(meta), survivors=len(surv_rows)
             )
         else:
-            # superblock tier: grid-prune 1/sb_size metadata first (the
-            # superblock fetch and the θ₀ seed fetch share one job)
-            with _no_aqe(spark):
-                fused = (
-                    self.superblocks.filter(F.col("term_id").isin(tids))
-                    .withColumn("is_seed", F.lit(False))
-                    .unionByName(seed_df, allowMissingColumns=True)
-                    .toPandas()
-                )
-            seed_pdf = fused[fused["is_seed"]]
-            sbm = fused[~fused["is_seed"]]
-            theta0 = self._theta0_from_rows(cur, seed_pdf, k, quantum)
-            sb_by_tid: dict[int, dict] = {}
-            for tid, g in sbm.groupby("term_id"):
-                g = g.sort_values("sb_id")
-                sb_by_tid[int(tid)] = dict(
-                    sb=g["sb_id"].to_numpy(np.int64),
-                    bf=g["first_doc"].to_numpy(np.int64),
-                    bl=g["last_doc"].to_numpy(np.int64),
-                    bmax=g["sb_max_score"].to_numpy(np.float64),
-                    nb=g["n_blocks"].to_numpy(np.int64),
-                )
-            qid_sb_sets: dict[int, dict[int, set]] = {}
+            # superblock tier: the same grid on 1/sb_size metadata first
+            sbm, theta0 = self._fetch_seeded(
+                self.superblocks.filter(F.col("term_id").isin(tids)),
+                cur, k, quantum,
+            )
+            sb_rows = _driver_block_grid(
+                qid_terms, _meta_arrays(sbm, bid="sb_id", bmax="sb_max_score"),
+                theta0,
+            )
+            n_blocks = {
+                (int(t), int(s)): int(n) for t, s, n in
+                zip(sbm["term_id"], sbm["sb_id"], sbm["n_blocks"])
+            }
             # union_nb keys the DISTINCT surviving (term, superblock)s with
             # their block counts: the driver tier collects exactly that
             # UNION, so the cap gate must measure it deduplicated — the
@@ -965,156 +904,83 @@ class ServingIndex:
             # ~n_qids× and pushed batches into the slow kernel tier whose
             # union fetch was in-cap (round-5 review finding).  est_kernel
             # stays recorded: it IS the per-qid kernel-input bound.
+            qid_sb_sets: dict[int, dict[int, set]] = {}
             union_nb: dict[tuple[int, int], int] = {}
             est_kernel = 0
-            for qid, qterms in sorted(qid_terms.items()):
-                per_term, infos = [], []
-                for tid, w, idf in qterms:
-                    m = sb_by_tid.get(tid)
-                    if m is None:
-                        continue
-                    per_term.append(
-                        dict(firsts=m["bf"], lasts=m["bl"], ubs=m["bmax"] * w)
-                    )
-                    infos.append((tid, m))
-                _, _, takes = _grid_survivors(per_term, theta0[qid])
-                sets: dict[int, set] = {}
-                for (tid, m), take in zip(infos, takes):
-                    idxs = np.flatnonzero(take)
-                    sets[tid] = set(m["sb"][idxs].tolist())
-                    est_kernel += int(m["nb"][idxs].sum())
-                    for pos in idxs:
-                        union_nb[(tid, int(m["sb"][pos]))] = int(m["nb"][pos])
-                qid_sb_sets[qid] = sets
+            for qid, tid, sb, *_ in sb_rows:
+                qid_sb_sets.setdefault(qid, {}).setdefault(tid, set()).add(sb)
+                union_nb[(tid, sb)] = n_blocks[(tid, sb)]
+                est_kernel += n_blocks[(tid, sb)]
             est2 = sum(union_nb.values())
-
-            sbk = pd.DataFrame(
-                sorted(union_nb), columns=["term_id", "sb_id"]
-            ).astype({"term_id": "int32", "sb_id": "int32"})
+            sb_tids = sorted({t for t, _ in union_nb})
             self.last_plan.update(
                 sb_rows=len(sbm), kernel_input_bound=est_kernel,
                 driver_fetch_bound=est2,
             )
             if est2 <= self.plan_collect_cap:
-                # exact block grid in the driver over SURVIVING superblocks
-                sbk_df = spark.createDataFrame(sbk) if len(sbk) else None
-                if sbk_df is None:
-                    surv_rows = []
-                else:
+                # exact block grid in the driver over SURVIVING superblocks;
+                # their keys join shuffle-hash inside the fetch's own job
+                n_meta = 0
+                if union_nb:
+                    sbk = spark.createDataFrame(
+                        pd.DataFrame(sorted(union_nb),
+                                     columns=["term_id", "sb_id"]),
+                        schema="term_id int, sb_id int",
+                    )
                     with _no_aqe(spark):
                         meta = (
-                            _term_prefilter(
-                                self.blocks,
-                                sorted({t for t, _ in union_nb}),
-                                self._n_buckets,
-                            )
-                            .withColumn(
-                                "sb_id",
-                                (F.col("block_id") / self.sb_size).cast("int"),
-                            )
-                            .join(sbk_df.hint("shuffle_hash"),
+                            self._sb_block_meta(sb_tids)
+                            .join(sbk.hint("shuffle_hash"),
                                   ["term_id", "sb_id"])
-                            .select("term_id", "sb_id", "block_id",
-                                    "first_doc", "last_doc",
-                                    "block_max_score")
                             .toPandas()
                         )
-                    surv_rows = self._driver_block_grid(
-                        qid_terms, self._meta_arrays(meta, with_sb=True),
+                    n_meta = len(meta)
+                    surv_rows = _driver_block_grid(
+                        qid_terms, _meta_arrays(meta, with_sb=True),
                         theta0, qid_sb_sets,
                     )
                 self.last_plan.update(
-                    tier="superblock",
-                    collected_rows=0 if sbk_df is None else len(meta),
+                    tier="superblock", collected_rows=n_meta,
                     survivors=len(surv_rows),
                 )
             else:
-                # huge tier: per-qid plan kernel over surviving superblocks
-                rows = []
-                for qid, qterms in sorted(qid_terms.items()):
-                    for tid, w, idf in qterms:
-                        for s in sorted(qid_sb_sets[qid].get(tid, ())):
-                            rows.append((qid, tid, s, w, idf, theta0[qid]))
-                fallback_sbk = pd.DataFrame(
-                    rows,
-                    columns=["qid", "term_id", "sb_id", "w", "idf", "theta0"],
-                ).astype({"qid": "int32", "term_id": "int32", "sb_id": "int32"})
+                # kernel tier: the same grid per qid in applyInPandas, over
+                # the surviving superblocks' blocks.  Its survivor keys are
+                # UNBOUNDED by design (est2 > plan_collect_cap): broadcasting
+                # them would collect them through the driver, the state
+                # this tier exists to avoid (round-5 review), so the join
+                # strategy is left to Catalyst/AQE.
+                sb_keys = spark.createDataFrame(
+                    _surv_frame(sb_rows).drop(columns="max_score")
+                    .rename(columns={"block_id": "sb_id"}),
+                    schema="qid int, term_id int, sb_id int, w double, "
+                           "idf double, theta0 double",
+                )
+                surv_keys = (
+                    self._sb_block_meta(sb_tids)
+                    .join(F.broadcast(sb_keys), ["term_id", "sb_id"])
+                    .groupBy("qid")
+                    .applyInPandas(_plan_kernel, schema=_SURV_SCHEMA)
+                )
+                payload_tids = sb_tids
                 self.last_plan.update(tier="kernel")
 
-        if surv_rows is not None:
+        if surv_keys is None:
             spdf = _surv_frame(surv_rows)
-            # driver/superblock tiers: surv_keys is a LOCAL relation
-            # bounded by plan_collect_cap.  A shuffle-hash join (keys as
-            # the build side) runs inside the kernel's own job; a
-            # broadcast would spend a separate job shipping the keys.
+            if fetched is not None:
+                self._driver_batch = fetched.merge(
+                    spdf, on=["term_id", "block_id"]
+                )
+            # a LOCAL relation bounded by plan_collect_cap: a shuffle-hash
+            # join (keys as the build side) runs inside the kernel's own
+            # job, where a broadcast would spend a separate job on them
             surv_keys = spark.createDataFrame(
                 spdf, schema=_SURV_SCHEMA
             ).hint("shuffle_hash")
             payload_tids = sorted(set(spdf["term_id"].tolist()))
-        else:
-            sbk_df = spark.createDataFrame(
-                fallback_sbk,
-                schema="qid int, term_id int, sb_id int, w double, "
-                       "idf double, theta0 double",
-            )
-            ftids = sorted(set(fallback_sbk["term_id"].tolist()))
-            bmeta = (
-                _term_prefilter(self.blocks, ftids, self._n_buckets)
-                .withColumn(
-                    "sb_id", (F.col("block_id") / self.sb_size).cast("int")
-                )
-                .select("term_id", "sb_id", "block_id", "first_doc",
-                        "last_doc", "block_max_score")
-                .join(F.broadcast(sbk_df), ["term_id", "sb_id"])
-            )
-            # huge tier: the plan kernel's survivor-key set is UNBOUNDED
-            # by design (est2 > plan_collect_cap) — broadcasting it would
-            # collect it through the driver, the exact state this tier
-            # exists to avoid (round-5 review).  Leave the join strategy
-            # to Catalyst/AQE: a shuffle join keys both sides on
-            # (term_id, block_id) and the driver never sees the keys.
-            surv_keys = bmeta.groupBy("qid").applyInPandas(
-                _make_plan_kernel(), schema=_SURV_SCHEMA
-            )
-            payload_tids = ftids
-        # The survivor keys' term set is driver-known and ⊆ the batch
-        # vocabulary in every tier, so pre-filtering the PAYLOAD side on
-        # it is semantics-preserving (the join can only keep those terms)
-        # — without it every batch's payload fetch is a full scan of the
-        # block table's binary columns through the join probe; the IN
-        # predicate instead prunes cached batches (in-memory stats) or
-        # parquet row groups (store-backed serving) before any payload
-        # byte is materialized.
-        return _term_prefilter(
-            self.blocks, payload_tids, self._n_buckets
-        ).select(*_PAYLOAD_COLS).join(surv_keys, ["term_id", "block_id"])
-
-    def _empty_survivors(self, spark) -> DataFrame:
-        """The survivor relation with no rows.  It mirrors the populated
-        path's exact projection + join, so every batch has the SAME
-        schema (column set, order, types) — a store-loaded blocks table
-        carries extra partition columns (e.g. bucket) that must not leak
-        out on any branch."""
-        empty_keys = spark.createDataFrame([], schema=_SURV_SCHEMA)
-        return self.blocks.limit(0).select(*_PAYLOAD_COLS).join(
-            empty_keys.hint("shuffle_hash"), ["term_id", "block_id"]
+        return self._term_scan(payload_tids).select(*_PAYLOAD_COLS).join(
+            surv_keys, ["term_id", "block_id"]
         )
-
-    @staticmethod
-    def _meta_arrays(meta: pd.DataFrame, with_sb: bool = False) -> dict:
-        out: dict[int, dict] = {}
-        for tid, g in meta.groupby("term_id"):
-            g = g.sort_values("block_id")
-            m = dict(
-                bid=g["block_id"].to_numpy(np.int64),
-                bf=g["first_doc"].to_numpy(np.int64),
-                bl=g["last_doc"].to_numpy(np.int64),
-                bmax=g["block_max_score"].to_numpy(np.float64),
-            )
-            if with_sb:
-                m["sb"] = g["sb_id"].to_numpy(np.int64)
-            out[int(tid)] = m
-        return out
 
     def topk(self, qdf: DataFrame, k: int = 10, algo: str = "bmw",
              rank_round: int | None = 6) -> DataFrame:
@@ -1129,13 +995,15 @@ class ServingIndex:
         the plan_collect_cap driver-state contract a local-relation
         DataFrame is returned: the caller's later action then costs zero
         extra jobs (the queries-tool shape — ds2i's queries.cpp also
-        materializes each batch's results).  A batch that
-        ``survivor_blocks`` fetched whole (≤ ``_DRIVER_FETCH_BLOCKS``)
-        is scored right here, one kernel call per qid, like ds2i scores
-        each query in one process: 2 Spark jobs, no Python workers.  Any
-        other bounded batch runs the kernel in ``applyInPandas``, eagerly
-        under the serving no-AQE guard, so its exchange isn't split into
-        per-stage AQE jobs."""
+        materializes each batch's results).  Every batch enters through
+        ``survivor_blocks``.  One it fetched whole (≤
+        ``_DRIVER_FETCH_BLOCKS``) is scored right here from the survivor
+        rows it kept, one kernel call per qid, like ds2i scores each query
+        in one process: 2 Spark jobs, no Python workers, and the returned
+        survivor relation never runs.  Any other bounded batch runs the
+        kernel over that relation in ``applyInPandas``, eagerly under the
+        serving no-AQE guard, so its exchange isn't split into per-stage
+        AQE jobs."""
         spark = qdf.sparkSession
         surv = self.survivor_blocks(qdf, k=k, rank_round=rank_round)
         kernel = _make_kernel(k, algo, self.cfg.scorer, self.avg_len, rank_round)

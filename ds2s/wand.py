@@ -33,8 +33,8 @@ def _scored_postings(idx: InvertedIndex) -> DataFrame:
     (query.bm25_score_col, F.log) while the engine block tables score with
     numpy (config.Scorer.idf, np.log); the two can differ in the last ulp,
     which is why the equality tests compare at round_to=6.  Serving pruning
-    bounds NEVER come from these twins — the serving wand/block-max tables
-    are built by the np.log kernel path (blocks.py / manifest.py), so the
+    bounds NEVER come from these twins — the serving block-max column is
+    built by the np.log kernel path (blocks.py / manifest.py), so the
     bit-for-bit bound≥score invariant holds where it matters."""
     return (
         idx.tf.select("term_id", "doc_id", "tf", "len", "df")

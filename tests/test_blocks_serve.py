@@ -267,7 +267,8 @@ def test_exact_batch_job_count_bounded(spark, tail_idx):
 def test_block_max_from_encode_equals_builder(idx001, sidx001):
     """block_max_score emitted by the encode kernel (blocks_from_tf with
     avg_len) equals the independent relational builder (ds2s.wand) — the
-    encode path replaces the per-term window scan, same numbers."""
+    encode path replaces the per-term window scan, same numbers — and the
+    per-term max of those block maxima is the WAND upper bound."""
     from ds2s.wand import build_block_max, build_wand_max
 
     got = (
@@ -288,7 +289,8 @@ def test_block_max_from_encode_equals_builder(idx001, sidx001):
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
     wm_got = (
-        sidx001.wand.select("term_id", F.round("max_score", 6).alias("max_score"))
+        sidx001.blocks.groupBy("term_id")
+        .agg(F.round(F.max("block_max_score"), 6).alias("max_score"))
         .orderBy("term_id").toPandas().reset_index(drop=True)
     )
     wm_exp = (
@@ -469,6 +471,23 @@ def test_superblock_tier_bounds_plan_input(spark, hot_idx):
     assert sidx2.last_plan["kernel_input_bound"] <= 300, sidx2.last_plan
 
 
+def test_superblock_and_kernel_tiers_share_survivors(spark, hot_idx):
+    """The superblock tier's driver grid and the kernel tier's per-qid
+    plan kernel are the same grid over the same surviving superblocks'
+    blocks, so for BMW they keep the same (qid, term_id, block_id) set."""
+    qdf = Q.queries_df(spark, rows=[(0, 0, "rare"), (0, 1, "hot")])
+    sidx = ServingIndex(hot_idx, plan_collect_cap=2000)
+    sidx2 = ServingIndex(hot_idx, blocks=sidx.blocks, plan_collect_cap=50)
+    keys = {}
+    for s, tier in ((sidx, "superblock"), (sidx2, "kernel")):
+        rows = s.survivor_blocks(qdf, k=10).select(
+            "qid", "term_id", "block_id").collect()
+        assert s.last_plan["tier"] == tier, s.last_plan
+        keys[tier] = {tuple(r) for r in rows}
+        assert len(keys[tier]) == len(rows)
+    assert keys["superblock"] and keys["superblock"] == keys["kernel"]
+
+
 def test_superblock_and_kernel_tier_job_counts(spark, hot_idx):
     """Steady-state jobs per BMW batch in the two large tiers, forced via
     ``plan_collect_cap``: the superblock tier's block-metadata fetch joins
@@ -555,28 +574,6 @@ def test_pruned_equals_exhaustive_synth(spark, synth_idx, algo, codec):
     )
 
 
-@pytest.mark.parametrize("algo", ["bmw", "maxscore", "wand"])
-def test_term_prefilter_is_semantics_free(spark, sidx001, monkeypatch, algo):
-    """The `term_id IN (batch vocabulary)` scan prefilter is a pure
-    pruning aid: forcing it OFF (cap 0) and fully ON (huge cap) must
-    yield identical top-k frames, on every algorithm and tier the batch
-    routes through.  Pins the sha-equality claim of PREFILTER_AB.jsonl
-    as a regression test."""
-    import ds2s.serve as serve
-
-    qdf = Q.queries_df(spark)
-    frames = {}
-    for cap in (0, 1 << 30):
-        monkeypatch.setattr(serve, "_MAX_TERM_IN_FILTER", cap)
-        frames[cap] = (
-            sidx001.topk(qdf, k=DEFAULT_K, algo=algo)
-            .orderBy("qid", "rank")
-            .toPandas()
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(frames[0], frames[1 << 30])
-
-
 @pytest.mark.parametrize("case", ["fixture", "skew", "synth", "store_nocache"])
 def test_driver_scoring_is_semantics_free(spark, request, tmp_path,
                                           monkeypatch, case):
@@ -585,7 +582,8 @@ def test_driver_scoring_is_semantics_free(spark, request, tmp_path,
     Spark kernel) and at its default (one fetch, driver kernel), every
     algorithm returns identical top-k frames and scores the identical
     number of blocks — the θ₀ seed rows picked from the fetched frame are
-    ``_seed_df``'s rows."""
+    ``_seed_df``'s rows.  On both paths the survivor relation
+    ``survivor_blocks`` returns holds exactly those blocks."""
     import ds2s.serve as serve
     from ds2s.manifest import IndexStore
 
@@ -618,6 +616,8 @@ def test_driver_scoring_is_semantics_free(spark, request, tmp_path,
                 )
                 assert sidx.last_plan["scoring"] == scoring, sidx.last_plan
                 got[scoring] = (frame, sidx.last_plan["survivors"])
+                n = sidx.survivor_blocks(qdf, k=k).count()
+                assert n == sidx.last_plan["survivors"], (algo, scoring, n)
             pd.testing.assert_frame_equal(got["spark"][0], got["driver"][0])
             assert got["spark"][1] == got["driver"][1], (algo, got)
     finally:
@@ -679,30 +679,20 @@ def test_unfetched_store_batch_prunes_bucket_dirs(spark, tmp_path,
         sidx.unpersist()
 
 
-def test_term_prefilter_cap_and_bucket_boundaries(spark):
-    """Above _MAX_TERM_IN_FILTER the prefilter must return the input
-    UNFILTERED (the skip contract callers rely on: downstream joins
-    re-restrict, so skipping is safe — filtering a huge literal list is
-    the thing being avoided); at or below the cap it must filter, and
-    the bucket predicate must appear only when the table carries the
-    store's partition column AND n_buckets is known."""
-    import ds2s.serve as serve
-    from ds2s.serve import _term_prefilter
-
+def test_term_scan_bucket_hint_and_empty_set(spark):
+    """``_term_scan`` always filters on ``term_id IN``, so an empty term
+    set reads no rows; it adds the ``bucket IN`` hint only when the table
+    carries the store's partition column AND n_buckets is known."""
     df = spark.range(100).selectExpr(
         "CAST(id AS int) AS term_id", "CAST(id % 4 AS int) AS bucket"
     )
-    over_cap = list(range(serve._MAX_TERM_IN_FILTER + 1))
-    assert _term_prefilter(df, over_cap) is df
-    assert _term_prefilter(df, []) is df
-
-    got = _term_prefilter(df, [3, 7], n_buckets=4).collect()
-    assert sorted(r["term_id"] for r in got) == [3, 7]
-    plan = (
-        _term_prefilter(df, [3, 7], n_buckets=4)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "bucket" in plan
-    # no bucket column -> term filter only, no crash
-    got2 = _term_prefilter(df.drop("bucket"), [3, 7], n_buckets=4).collect()
-    assert sorted(r["term_id"] for r in got2) == [3, 7]
+    sidx = ServingIndex.__new__(ServingIndex)
+    for blocks, n_buckets, hinted in ((df, 4, True), (df, 0, False),
+                                      (df.drop("bucket"), 4, False)):
+        sidx.blocks, sidx._n_buckets = blocks, n_buckets
+        scan = sidx._term_scan([3, 7])
+        assert sorted(r["term_id"] for r in scan.collect()) == [3, 7]
+        filters = [l for l in scan._jdf.queryExecution().analyzed()
+                   .toString().splitlines() if "Filter" in l]
+        assert any("bucket" in l for l in filters) == hinted, filters
+        assert sidx._term_scan([]).count() == 0

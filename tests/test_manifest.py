@@ -14,8 +14,8 @@ from ds2s.manifest import IndexStore
 
 N_BUCKETS = 4
 # corpus_manifest, sizes, lexicon, blocks buckets (one physical write),
-# wand_max, superblocks, _index
-TOTAL_UNITS = 3 + N_BUCKETS + 2 + 1
+# superblocks, _index
+TOTAL_UNITS = 3 + N_BUCKETS + 1 + 1
 
 
 def test_checkpoint_resume_roundtrip(tmp_path, spark, synth_idx):
@@ -194,7 +194,7 @@ def test_recorded_schemas_read_tables_as_written(tmp_path, spark, synth_idx):
     store = IndexStore(str(tmp_path / "schemas"))
     store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
     for name in ("corpus_manifest", "sizes", "lexicon", "blocks",
-                 "superblocks", "wand_max"):
+                 "superblocks"):
         inferred = spark.read.parquet(str(store.root / name)).schema
         assert store.load_table(spark, name).schema == inferred, name
     units = store.completed_units()
@@ -341,7 +341,7 @@ def test_config_change_invalidates_resume(tmp_path, spark, synth_idx):
     cfg2 = dataclasses.replace(synth_idx.cfg, block_size=32)
     idx2 = dataclasses.replace(synth_idx, cfg=cfg2)
     rewritten = store.write_checkpointed(idx2, source="synth", n_buckets=2)
-    assert rewritten == 3 + 2 + 2 + 1
+    assert rewritten == 3 + 2 + 1 + 1
     # and the stored blocks really are 32-posting blocks now
     assert store.load_table(spark, "blocks").agg({"n": "max"}).collect()[0][0] <= 32
 

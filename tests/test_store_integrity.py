@@ -8,9 +8,10 @@ The store protocol under test:
   * units about to be rewritten lose their manifest lines BEFORE their
     data dirs are overwritten — a crash mid-rewrite must read as
     "never completed" under every config;
-  * from_store trusts only manifest-complete units: derivable tiers
-    (wand_max, superblocks) fall back to recomputation, required tables
-    (lexicon, blocks buckets) fail loudly;
+  * from_store trusts only manifest-complete units: the derivable tier
+    (superblocks) falls back to recomputation, required tables (lexicon,
+    blocks buckets) fail loudly, and a unit no reader knows (an older
+    store's wand_max) is ignored;
   * every table is read under the schema its manifest line recorded; a
     line without that record is stale, like a foreign fingerprint.
 """
@@ -25,7 +26,7 @@ import pytest
 from ds2s.manifest import IndexStore
 
 N_BUCKETS = 2
-TOTAL_UNITS = 3 + N_BUCKETS + 2 + 1
+TOTAL_UNITS = 3 + N_BUCKETS + 1 + 1
 
 
 def _drop_unit_lines(store: IndexStore, unit: str) -> None:
@@ -156,26 +157,28 @@ def test_from_store_missing_required_unit_is_loud(tmp_path, spark, synth_idx):
 
 
 def test_partial_wand_max_table_ignored(tmp_path, spark, synth_idx):
-    """A wand_max dir visible on disk but without a manifest line (crash
-    mid-write) must be IGNORED and re-derived from blocks — loading the
-    partial table drops per-term upper bounds and silently desyncs
-    WAND/BMW pruning (round-5 review finding; twin of the superblocks
-    gate test)."""
-    import shutil
+    """A store written when the per-term max was its own ``wand_max``
+    unit still carries that dir and manifest line.  Serving derives the
+    bound from the block maxima and reads no wand_max, so such a store
+    loads and serves BMW equal to exhaustive ranked-OR, and a rerun of
+    the writer leaves it as it is."""
+    from pyspark.sql import functions as F
 
     from ds2s import query as Q
     from ds2s.serve import ServingIndex
 
-    store = IndexStore(str(tmp_path / "wpart"))
+    store = IndexStore(str(tmp_path / "wold"))
     store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
-
-    full = spark.read.parquet(str(store.root / "wand_max"))
-    one = full.limit(1).toPandas()
-    shutil.rmtree(store.root / "wand_max")
-    spark.createDataFrame(one, schema=full.schema).write.parquet(
-        str(store.root / "wand_max")
+    wand = (
+        store.load_table(spark, "superblocks").groupBy("term_id")
+        .agg(F.max("sb_max_score").alias("max_score"))
     )
-    _drop_unit_lines(store, "wand_max")
+    wand.write.parquet(str(store.root / "wand_max"))
+    sb_line = store.completed_units()["superblocks"]
+    store._append_manifest({**sb_line, "unit": "wand_max",
+                            "n_rows": wand.count(),
+                            "schema": wand.schema.jsonValue()})
+    assert "wand_max" in store.completed_units()
 
     sidx = ServingIndex.from_store(spark, store)
     qdf = Q.queries_df(
@@ -195,6 +198,9 @@ def test_partial_wand_max_table_ignored(tmp_path, spark, synth_idx):
         exact.astype({"qid": "int64", "rank": "int64"}),
         check_exact=False, atol=1e-8,
     )
+    assert store.write_checkpointed(
+        synth_idx, source="synth", n_buckets=N_BUCKETS
+    ) == 0
 
 
 def test_unpersist_releases_tf_terms_cache(spark):
@@ -257,8 +263,7 @@ def test_uncached_store_serving_prunes_buckets(tmp_path, spark, synth_idx):
     from pyspark.storagelevel import StorageLevel
 
     from ds2s import query as Q
-    from ds2s import serve
-    from ds2s.serve import ServingIndex, _term_prefilter
+    from ds2s.serve import ServingIndex
 
     store = IndexStore(str(tmp_path / "uncached"))
     store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
@@ -269,10 +274,8 @@ def test_uncached_store_serving_prunes_buckets(tmp_path, spark, synth_idx):
 
         # plan-level: both predicates reach the file scan
         tids = [int(r["term_id"]) for r in sidx.lexicon.limit(3).collect()]
-        plan = (
-            _term_prefilter(sidx.blocks, tids, sidx._n_buckets)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+        plan = sidx._term_scan(tids)._jdf.queryExecution(
+        ).executedPlan().toString()
         assert "PushedFilters: [In(term_id" in plan, plan
         assert "PartitionFilters: [" in plan and "bucket" in plan, plan
 
