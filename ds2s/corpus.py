@@ -153,12 +153,9 @@ def load_code_corpus(spark: SparkSession, path: str,
 
 
 def with_sha256(df: DataFrame, col: str = "content") -> DataFrame:
-    """Per-row content sha256 (BASELINE.json:15 invariant), JVM-side."""
-    return df.withColumn("content_sha256", F.sha2(F.col(col), 256))
-
-
-def sha256_py(text: str) -> str:
-    return hashlib.sha256(text.encode("utf-8")).hexdigest()
+    """Per-row content sha256 (BASELINE.json:15 invariant), JVM-side, as
+    the 32-byte digest: half the bytes of its hex string."""
+    return df.withColumn("content_sha256", F.unhex(F.sha2(F.col(col), 256)))
 
 
 # ---------------------------------------------------------------------------

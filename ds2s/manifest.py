@@ -9,13 +9,20 @@ segments ... resumable builds with lineage + metrics", BASELINE.json:14).
 Layout under ``out_dir`` (parquet in the sandbox; the same layout maps to
 Iceberg partitioned tables when a runtime jar is present, SURVEY.md §1.6):
 
-    corpus_manifest/            doc_id, content_sha256   (per-row invariant)
+    corpus_manifest/            doc_id, content_sha256   (per-row invariant;
+                                the digest as binary(32), not 64 hex chars)
     sizes/  lexicon/            dimension tables
     blocks/bucket=K/            encoded posting blocks, bucket = term_id % B
     superblocks/                derived pruning tier
     manifest.jsonl              one line per completed unit: lineage +
                                 metrics + the table's Spark schema
     _index.json                 frozen IndexConfig + collection stats
+
+Payload columns carry no parquet statistics: ``doc_bytes``, ``tf_bytes``,
+``len_bytes`` and ``content_sha256`` are written with
+``parquet.column.statistics.enabled#<col>=false``, so no footer repeats
+min/max blobs or a column index no reader filters on.  ``term_id`` keeps
+its stats: uncached serving's ``term_id IN`` prunes row groups with them.
 
 Resume protocol: a bucket is complete iff its manifest line exists —
 manifest lines are appended via atomic rename AFTER the bucket's parquet
@@ -50,12 +57,18 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructType
 
 from .blocks import blocks_from_tf, superblock_agg
 from .config import IndexConfig
 from .corpus import with_sha256
 from .invert import InvertedIndex
+
+
+def _no_stats(*cols: str) -> dict[str, str]:
+    """Parquet writer options that drop statistics (footer min/max and
+    column index) from ``cols``: payload columns no reader filters on."""
+    return {f"parquet.column.statistics.enabled#{c}": "false" for c in cols}
 
 
 def _config_fingerprint(cfg: IndexConfig, extra: dict | None = None) -> str:
@@ -235,14 +248,15 @@ class IndexStore:
             with mlock:
                 written += 1
 
-        def plain(df_or_fn, sub: str):
+        def plain(df_or_fn, sub: str, options: dict | None = None):
             """``df_or_fn`` may be a zero-arg callable building the frame:
             unit() skips done units BEFORE running it, so a resumed no-op
             pass must not pay (or crash on) the plan-construction reads of
             already-written tables (round-5 review finding)."""
             def run():
                 df = df_or_fn() if callable(df_or_fn) else df_or_fn
-                df.write.mode("overwrite").parquet(str(self.root / sub))
+                df.write.mode("overwrite").options(**(options or {})).parquet(
+                    str(self.root / sub))
                 # count from the written files (parquet footer metadata) —
                 # never re-executes the producing pipeline
                 n = self._read(spark, sub, df.schema).count()
@@ -276,9 +290,9 @@ class IndexStore:
             bucketed = bucketed.sortWithinPartitions(
                 "bucket", "term_id", "block_id"
             )
-            bucketed.write.partitionBy("bucket").mode("overwrite").parquet(
-                str(self.root / "blocks")
-            )
+            bucketed.write.partitionBy("bucket").mode("overwrite").options(
+                **_no_stats("doc_bytes", "tf_bytes", "len_bytes")
+            ).parquet(str(self.root / "blocks"))
             wall = time.perf_counter() - t0
             # partitionBy stores `bucket` in the directory names; a read
             # lists it last, where withColumn already put it
@@ -321,6 +335,7 @@ class IndexStore:
                         "doc_id", "content_sha256"
                     ),
                     "corpus_manifest",
+                    _no_stats("content_sha256"),
                 ),
             ),
             ("sizes", plain(idx.sizes, "sizes")),
@@ -437,8 +452,13 @@ class IndexStore:
         return json.loads((self.root / "_index.json").read_text())
 
     def verify_sha256(self, corpus: DataFrame, content_col: str = "content") -> int:
-        """Rows whose stored sha256 differs from the live source (must be 0)."""
+        """Rows whose stored sha256 differs from the live source (must be 0).
+        Digests compare as binary; a store written before the binary
+        column existed stores hex strings, which are unhexed first."""
         stored = self.load_table(corpus.sparkSession, "corpus_manifest")
+        if isinstance(stored.schema["content_sha256"].dataType, StringType):
+            stored = stored.withColumn(
+                "content_sha256", F.unhex("content_sha256"))
         live = with_sha256(corpus, content_col).select(
             "doc_id", F.col("content_sha256").alias("live_sha")
         )

@@ -120,7 +120,7 @@ _UB_MARGIN = 1.0 + 1e-9
 # A driver-tier batch whose terms span at most this many blocks (estimated
 # from lexicon df) is fetched whole — metadata AND payloads, one collect —
 # and scored in the driver.  Sized to driver memory, not to any workload:
-# 4096 blocks × 128 postings × ~8 B ≈ 4 MB of payload.
+# 4096 blocks × 128 postings × ~3 B of doc, tf and length blobs ≈ 1.5 MB.
 _DRIVER_FETCH_BLOCKS = 4096
 
 

@@ -93,7 +93,7 @@ def test_sha256_invariant(spark):
     for r in df.collect():
         assert r["content_sha256"] == hashlib.sha256(
             r["content"].encode()
-        ).hexdigest()
+        ).digest()
 
 
 def test_sizes_cover_empty_docs(synth_idx):

@@ -382,3 +382,112 @@ def test_schemaless_store_refused_then_rewritten(tmp_path, spark, synth_idx):
     assert store.write_checkpointed(
         synth_idx, source="synth", n_buckets=N_BUCKETS
     ) == 0
+
+
+def _parquet_files(root) -> list:
+    return sorted(p for p in root.rglob("*.parquet") if p.is_file())
+
+
+def test_store_footprint(tmp_path, spark, synth_idx):
+    """A fresh store writes only what the codecs encode: ``term_id``
+    keeps its min/max stats in every blocks file (the ``term_id IN``
+    row-group pruning), the payload blobs carry no statistics and no
+    column index, every doc-length blob is OptPFD, and the corpus
+    manifest stores each sha256 as a 32-byte binary digest."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    from ds2s.codecs import CODEC_IDS
+
+    store = IndexStore(str(tmp_path / "footprint"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
+    block_files = _parquet_files(store.root / "blocks")
+    assert block_files
+    for f in block_files:
+        md = pq.ParquetFile(f).metadata
+        names = [md.schema.column(j).name for j in range(md.num_columns)]
+        for rg in range(md.num_row_groups):
+            cols = {names[j]: md.row_group(rg).column(j)
+                    for j in range(md.num_columns)}
+            tid = cols["term_id"]
+            assert tid.is_stats_set and tid.statistics.has_min_max, f
+            for payload in ("doc_bytes", "tf_bytes", "len_bytes"):
+                c = cols[payload]
+                assert not c.is_stats_set, (f, payload)
+                assert not c.has_column_index, (f, payload)
+        lens = pq.ParquetFile(f).read(columns=["len_bytes"]).column(0)
+        assert {b[0] for b in lens.to_pylist()} == {CODEC_IDS["optpfd"]}, f
+
+    content = dict(synth_idx.corpus.select("doc_id", "content").toPandas()
+                   .itertuples(index=False))
+    for f in _parquet_files(store.root / "corpus_manifest"):
+        pf = pq.ParquetFile(f)
+        field = pf.schema_arrow.field("content_sha256")
+        assert str(field.type) == "binary", field
+        for rg in range(pf.metadata.num_row_groups):
+            assert not pf.metadata.row_group(rg).column(1).is_stats_set, f
+        for r in pf.read().to_pylist():
+            assert r["content_sha256"] == hashlib.sha256(
+                content[r["doc_id"]].encode()).digest(), r["doc_id"]
+
+
+def test_older_store_format_loads_and_serves(tmp_path, spark, synth_idx):
+    """A store in the format written before OptPFD lengths and binary
+    digests — one bucket's ``len_bytes`` in group varint, the corpus
+    manifest's sha256 as 64-char hex strings under a ``string`` schema
+    record — loads uncached with no rewrite, serves bmw/maxscore/wand
+    equal to ``ranked_or_topk``, verifies clean and still catches a
+    tampered row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from ds2s.codecs import CODEC_IDS, decode_tfs, encode_tfs
+    from ds2s.serve import ServingIndex
+
+    store = IndexStore(str(tmp_path / "older"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
+
+    def rewrite(f, name: str, values, typ) -> None:
+        t = pq.ParquetFile(f).read()
+        t = t.set_column(t.schema.get_field_index(name), name,
+                         pa.array(values, type=typ))
+        pq.write_table(t, f)
+        f.with_name(f".{f.name}.crc").unlink(missing_ok=True)
+
+    # the bucket holding "def", the first term of every batch below
+    tid = synth_idx.lexicon.filter(F.col("term") == "def").first()["term_id"]
+    bucket = store.root / "blocks" / f"bucket={tid % N_BUCKETS}"
+    for f in _parquet_files(bucket):
+        blobs = pq.ParquetFile(f).read(columns=["len_bytes"]).column(0)
+        rewrite(f, "len_bytes",
+                [encode_tfs(decode_tfs(b)[0], "gvb") for b in blobs.to_pylist()],
+                pa.binary())
+        assert {b[0] for b in pq.ParquetFile(f).read(columns=["len_bytes"])
+                .column(0).to_pylist()} == {CODEC_IDS["gvb"]}
+    for f in _parquet_files(store.root / "corpus_manifest"):
+        digests = pq.ParquetFile(f).read(columns=["content_sha256"]).column(0)
+        rewrite(f, "content_sha256", [d.hex() for d in digests.to_pylist()],
+                pa.string())
+    units = store.completed_units()
+    for field in units["corpus_manifest"]["schema"]["fields"]:
+        if field["name"] == "content_sha256":
+            field["type"] = "string"
+    store._rewrite_manifest(units)
+
+    assert store.write_checkpointed(
+        synth_idx, source="synth", n_buckets=N_BUCKETS) == 0
+    sidx = ServingIndex.from_store(spark, store, cache_blocks=False)
+    try:
+        _exact_equals_store(spark, synth_idx, sidx,
+                            [(0, 0, "def"), (0, 1, "return"), (1, 0, "def"),
+                             (1, 1, "class"), (2, 0, "def"), (2, 1, "var0")])
+    finally:
+        sidx.unpersist()
+    assert store.verify_sha256(synth_idx.corpus) == 0
+    tampered = synth_idx.corpus.withColumn(
+        "content",
+        F.when(F.col("doc_id") == 3, F.lit("EVIL")).otherwise(F.col("content")),
+    )
+    assert store.verify_sha256(tampered) == 1
