@@ -46,11 +46,14 @@ UB(d) ≥ θ₀ lies in a surviving interval at both granularities, and every
 block containing d overlaps that interval, so a pruned block cannot hold
 a top-k doc and survivor scores stay complete.
 
-The scoring kernel applies the per-algorithm refinement (block intervals
-for BMW, term intervals for MaxScore, adaptive-θ chunked interval sweep
-for WAND) and returns the exact top-k — rank-identical to the exhaustive
-ranked-OR oracle, with the same rounding and (score DESC, doc ASC) tie
-discipline.
+One scoring kernel serves every algorithm: a static-θ₀ interval sweep
+(``_sweep_topk``) whose only per-algorithm input is its pruning intervals
+— block maxima for BMW and WAND, one term interval per term for MaxScore.
+WAND therefore runs exactly the BMW sweep; ds2i's adaptive-θ cursor pivot
+decoded the same blocks at this granularity and cost more CPU in numpy,
+so it is not a separate loop.  The kernel returns the exact top-k —
+rank-identical to the exhaustive ranked-OR oracle, with the same rounding
+and (score DESC, doc ASC) tie discipline.
 
 Doc lengths travel WITH each block (``len_bytes``, encoded at build time,
 ds2s.blocks) — no driver-side dense lens array and no broadcast
@@ -135,15 +138,16 @@ _SURV_SCHEMA = (
 )
 
 
-def _decode_block_scores(db, tb, lb, w, idf, k1, b, avg):
-    """One block → (docs int64, per-posting BM25 contribution float64)."""
-    d, _ = decode_docs(bytes(db))
+def _bm25(tb, lb, scale, k1, b, avg):
+    """One block's tf and length blobs → per-posting BM25 scores
+    ``scale · tf / (tf + k1·(1 − b + b·len/avg))`` (float64): the one
+    formula the scoring kernel (scale w·idf) and the θ₀ seed (scale 1,
+    weighted per qid) share."""
     tf, _ = decode_tfs(bytes(tb))
     ln, _ = decode_tfs(bytes(lb))
     tf = tf.astype(np.float64)
     ln = ln.astype(np.float64)
-    c = w * idf * tf / (tf + k1 * (1.0 - b + b * ln / avg))
-    return d.astype(np.int64), c
+    return scale * tf / (tf + k1 * (1.0 - b + b * ln / avg))
 
 
 def _interval_grid(per_term):
@@ -200,7 +204,10 @@ def _grid_survivors(per_term, theta0):
 
 
 def _sweep_topk(per_term, k, theta0, avg, scorer, rank_round):
-    """Static-θ upper-bound interval sweep (BMW / MaxScore kernels).
+    """The one scoring kernel of every algorithm (bmw, maxscore and wand):
+    a static-θ upper-bound interval sweep.  Only the pruning intervals
+    differ — block maxima for bmw and wand, one term interval per term for
+    maxscore; θ stays θ₀ for the whole sweep.
 
     per_term entries: {firsts, lasts, ubs (pruning intervals), block_first,
     block_last, payloads [(doc_bytes, tf_bytes, len_bytes)], idf, w}."""
@@ -212,15 +219,12 @@ def _sweep_topk(per_term, k, theta0, avg, scorer, rank_round):
     k1, b = scorer.k1, scorer.b
     for t in per_term:
         lo, hi = _spans(points, t["block_first"], t["block_last"])
-        take = _overlap_take(psurv, lo, hi)
-        if not take.any():
-            continue
-        for i in np.flatnonzero(take):
-            d, c = _decode_block_scores(
-                *t["payloads"][i], t["w"], t["idf"], k1, b, avg
+        for i in np.flatnonzero(_overlap_take(psurv, lo, hi)):
+            db, tb, lb = t["payloads"][i]
+            doc_parts.append(decode_docs(bytes(db))[0].astype(np.int64))
+            contrib_parts.append(
+                _bm25(tb, lb, t["w"] * t["idf"], k1, b, avg)
             )
-            doc_parts.append(d)
-            contrib_parts.append(c)
 
     if not doc_parts:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
@@ -234,106 +238,6 @@ def _sweep_topk(per_term, k, theta0, avg, scorer, rank_round):
     keep = surv[np.clip(ii, 0, len(surv) - 1)]
     ud, scores = ud[keep], scores[keep]
     return _rank(ud, scores, k, rank_round)
-
-
-def _wand_topk(per_term, k, theta0, avg, scorer, rank_round):
-    """Classic WAND ([U] ds2i/queries.cpp wand_query): docID-ordered
-    cursor pivoting with an ADAPTIVE threshold, at block granularity,
-    processed in vectorized CHUNKS of consecutive intervals.
-
-    Intervals of the block grid are visited in docID order; θ is raised to
-    the running k-th best true score as the heap fills, so late intervals
-    are pruned against the scores found in early ones — the classic
-    algorithm's defining property.  Between θ raises the sweep is one
-    numpy pass over a chunk (doubling up to 4096 intervals), not a Python
-    loop per interval, and the running top-k is a bounded merge (size
-    ≤ k + chunk candidates), never a re-partition of all candidates.
-
-    Exactness: every doc lies in one interval; a doc counted in a live
-    interval has ALL its blocks decoded (any block containing it overlaps
-    the interval), so its score is complete.  A skipped interval's docs
-    have raw UB < θ = (k-th ranked raw − quantum); rounding is translation-
-    invariant by whole quanta, so their rounded score falls strictly below
-    the k-th rounded score and they cannot enter the rounded top-k."""
-    points, ub = _interval_grid(per_term)
-    n_int = len(points)
-    k1, b = scorer.k1, scorer.b
-    quantum = 10.0 ** (-rank_round) if rank_round is not None else 0.0
-
-    # per-term block → interval-index spans, computed once
-    spans = [_spans(points, t["block_first"], t["block_last"]) for t in per_term]
-
-    theta = theta0
-    best_docs = np.zeros(0, dtype=np.int64)
-    best_scores = np.zeros(0, dtype=np.float64)
-    decoded: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-
-    i0, chunk = 0, 32
-    while i0 < n_int:
-        j = min(i0 + chunk, n_int)
-        chunk = min(chunk * 2, 4096)
-        live, pl = _surv_psurv(ub[i0:j], theta)
-        if not live.any():
-            i0 = j
-            continue
-        lo_doc = points[i0]
-        hi_doc = points[j] - 1 if j < n_int else np.iinfo(np.int64).max
-
-        d_parts, c_parts = [], []
-        for ti, t in enumerate(per_term):
-            blo, bhi = spans[ti]
-            # blocks whose interval span intersects a LIVE interval of
-            # [i0, j): one vectorized overlap test per term
-            a = np.clip(blo - i0, 0, j - i0)
-            z = np.clip(bhi - i0 + 1, 0, j - i0)
-            need = np.flatnonzero((z > a) & (pl[z] - pl[a] > 0))
-            for bi in need:
-                key = (ti, int(bi))
-                if key not in decoded:
-                    decoded[key] = _decode_block_scores(
-                        *t["payloads"][bi], t["w"], t["idf"], k1, b, avg
-                    )
-                d, c = decoded[key]
-                sl = slice(
-                    np.searchsorted(d, lo_doc, side="left"),
-                    np.searchsorted(d, hi_doc, side="right"),
-                )
-                if sl.start < sl.stop:
-                    d_parts.append(d[sl])
-                    c_parts.append(c[sl])
-        if not d_parts:
-            i0 = j
-            continue
-        docs = np.concatenate(d_parts)
-        contribs = np.concatenate(c_parts)
-        ud, inv = np.unique(docs, return_inverse=True)
-        sc = np.bincount(inv, weights=contribs)
-        # keep docs whose interval is live (scores complete by
-        # construction; the slice bounds guarantee ii ∈ [i0, j))
-        ii = np.searchsorted(points, ud, side="right") - 1
-        keep = live[ii - i0]
-        ud, sc = ud[keep], sc[keep]
-        i0 = j
-        if not len(ud):
-            continue
-        # bounded running top-k merge with the frozen tie discipline.
-        # Rank (sort+trim) whenever the candidate set has REACHED k —
-        # including exactly k — before reading best_scores[-1]: without
-        # the sort the arrays are in docID order from np.unique and the
-        # last entry is an arbitrary candidate's score, which could
-        # inflate θ above the true k-th best and prune true top-k docs.
-        best_docs = np.concatenate((best_docs, ud))
-        best_scores = np.concatenate((best_scores, sc))
-        if len(best_docs) >= k:
-            rs = (
-                round_half_up(best_scores, rank_round)
-                if rank_round is not None else best_scores
-            )
-            order = np.lexsort((best_docs, -rs))[:k]
-            best_docs, best_scores = best_docs[order], best_scores[order]
-            theta = max(theta, float(best_scores[-1]) - quantum)
-
-    return _rank(best_docs, best_scores, k, rank_round)
 
 
 def _rank(ud, scores, k, rank_round):
@@ -369,8 +273,8 @@ def _make_kernel(k, algo, scorer, avg_len, rank_round):
                     idf=idf, w=w,
                 )
             )
-        fn = _wand_topk if algo == "wand" else _sweep_topk
-        docs, scores = fn(per_term, k, theta0, avg_len, scorer, rank_round)
+        docs, scores = _sweep_topk(per_term, k, theta0, avg_len, scorer,
+                                   rank_round)
         out_scores = round_half_up(scores, 4) if rank_round is not None else scores
         return pd.DataFrame(
             {
@@ -551,11 +455,12 @@ class ServingIndex:
         self.superblocks = superblocks.persist()
 
     def unpersist(self) -> None:
-        """Release the two cached serving tables (blocks, superblocks).  Without this, every ServingIndex constructed on a
-        session — rebuilds with other codecs, from_store twins, per-sf
-        instances — pins its block cache (the largest table in the
-        system) in executor storage for the session lifetime (round-5
-        review finding).  Idempotent; the index is unusable afterwards."""
+        """Release the two cached serving tables (blocks, superblocks).
+        Without this, every ServingIndex constructed on a session —
+        rebuilds with other codecs, from_store twins, per-sf instances —
+        pins its block cache (the largest table in the system) in executor
+        storage for the session lifetime (round-5 review finding).
+        Idempotent; the index is unusable afterwards."""
         for df in (self.blocks, self.superblocks):
             try:
                 df.unpersist()
@@ -588,9 +493,10 @@ class ServingIndex:
         # partially-committed parquet dir visible (task-commit committers)
         # with no manifest line — loading it would silently drop terms
         # from pruning metadata and corrupt top-k.  The derivable tier
-        # (superblocks) falls back to recomputation from blocks, exactly the resume protocol's reading; REQUIRED tables (lexicon,
-        # every blocks bucket) have no fallback, so an incomplete one is a
-        # loud error, never a silent partial index.  A table that IS
+        # (superblocks) falls back to recomputation from blocks, exactly
+        # the resume protocol's reading; REQUIRED tables (lexicon, every
+        # blocks bucket) have no fallback, so an incomplete one is a loud
+        # error, never a silent partial index.  A table that IS
         # manifest-complete but unreadable (I/O error, schema drift) still
         # propagates, not silently rebuilt.
         units = store.completed_units()
@@ -744,14 +650,15 @@ class ServingIndex:
         wr = Window.partitionBy("term_id").orderBy(
             F.desc("block_max_score"), F.asc("block_id")
         )
-        seeds = self._term_scan(seed_tids).select(
-            "term_id", "block_id", "block_max_score", "tf_bytes", "len_bytes"
+        return (
+            self._term_scan(seed_tids)
+            .select("term_id", "block_id", "block_max_score", "tf_bytes",
+                    "len_bytes")
+            .withColumn("rn", F.row_number().over(wr))
+            .filter(F.col("rn") <= self.seed_max_blocks)
+            .drop("rn")
+            .withColumn("is_seed", F.lit(True))
         )
-        if self.seed_max_blocks > 0:
-            seeds = seeds.withColumn("rn", F.row_number().over(wr)).filter(
-                F.col("rn") <= self.seed_max_blocks
-            ).drop("rn")
-        return seeds.withColumn("is_seed", F.lit(True))
 
     def _theta0_from_rows(self, cur: list[tuple], seed_pdf: pd.DataFrame,
                           k: int, quantum: float) -> dict[int, float]:
@@ -763,12 +670,9 @@ class ServingIndex:
         for tid_v, tb, lb in zip(
             seed_pdf["term_id"], seed_pdf["tf_bytes"], seed_pdf["len_bytes"]
         ):
-            tf, _ = decode_tfs(bytes(tb))
-            ln, _ = decode_tfs(bytes(lb))
-            tf = tf.astype(np.float64)
-            ln = ln.astype(np.float64)
-            raw = tf / (tf + k1 * (1.0 - b + b * ln / self.avg_len))
-            raw_by_tid.setdefault(int(tid_v), []).append(raw)
+            raw_by_tid.setdefault(int(tid_v), []).append(
+                _bm25(tb, lb, 1.0, k1, b, self.avg_len)
+            )
         raw_by_tid = {
             t: np.concatenate(v) for t, v in raw_by_tid.items()
         }
@@ -987,9 +891,10 @@ class ServingIndex:
         """(qid, rank, doc_id, score) — rank-identical to ranked_or_topk.
 
         ``algo``: "bmw" (block-max intervals, [U] ds2i
-        block_max_wand_query), "maxscore" (term-bound intervals, [U] ds2i
-        maxscore_query), or "wand" (adaptive-θ docID-ordered pivoting,
-        [U] ds2i wand_query).
+        block_max_wand_query), "maxscore" (one term-bound interval per
+        term, [U] ds2i maxscore_query) or "wand" ([U] ds2i wand_query).
+        All three score through the one static-θ ``_sweep_topk``; "wand"
+        runs exactly the "bmw" sweep, block-max intervals included.
 
         The result is BOUNDED (≤ batch qids × k rows), so when it fits
         the plan_collect_cap driver-state contract a local-relation
@@ -1043,5 +948,6 @@ def maxscore_topk(sidx: ServingIndex, qdf: DataFrame, k: int = 10) -> DataFrame:
 
 
 def wand_topk(sidx: ServingIndex, qdf: DataFrame, k: int = 10) -> DataFrame:
-    """Classic WAND cursor-pivot pruning ([U] ds2i wand_query)."""
+    """WAND ([U] ds2i wand_query), served by the same static-θ block-max
+    sweep as ``bmw_topk``: same plan, same kernel, same answers."""
     return sidx.topk(qdf, k=k, algo="wand")
