@@ -159,7 +159,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "and_count": _q(lambda idx, s: Q.and_count(idx, Q.queries_df(s))),
         "or_count": _q(lambda idx, s: Q.or_count(idx, Q.queries_df(s))),
         # wand/block-max metadata is emitted by the ENCODE pass itself
-        # (ds2s.blocks.blocks_from_tf scored path) — these entries verify
+        # (ds2s.blocks.blocks_from_tf) — these entries verify
         # the engine's stored metadata against the independent SQL oracle
         # (the per-term max is the max of the term's block maxima)
         "wand_max": lambda spark, sf: _sindex(spark, sf)

@@ -119,9 +119,9 @@ def _encode_one(docs: np.ndarray, tfs: np.ndarray, universe: int, codec: str) ->
     return encode_docs(docs, universe, codec), encode_tfs(tfs, codec)
 
 
-def _blocks_record_batch(out: dict, out_cols: list, scored: bool):
+def _blocks_record_batch(out: dict):
     """One Arrow RecordBatch of encoded blocks from the merge kernel's
-    accumulator lists, in BLOCKS_SCHEMA[_SCORED] column order and dtypes."""
+    accumulator lists, in BLOCKS_SCHEMA_SCORED column order and dtypes."""
     import pyarrow as pa
 
     arrays = [
@@ -132,13 +132,10 @@ def _blocks_record_batch(out: dict, out_cols: list, scored: bool):
         pa.array(np.asarray(out["last_doc"], dtype=np.int64)),
         pa.array(out["doc_bytes"], type=pa.binary()),
         pa.array(out["tf_bytes"], type=pa.binary()),
+        pa.array(out["len_bytes"], type=pa.binary()),
+        pa.array(np.asarray(out["block_max_score"], dtype=np.float64)),
     ]
-    if scored:
-        arrays += [
-            pa.array(out["len_bytes"], type=pa.binary()),
-            pa.array(np.asarray(out["block_max_score"], dtype=np.float64)),
-        ]
-    return pa.RecordBatch.from_arrays(arrays, names=out_cols)
+    return pa.RecordBatch.from_arrays(arrays, names=list(out))
 
 
 def encode_blocks(
@@ -151,9 +148,11 @@ def encode_blocks(
     """postings(term_id, df, postings array<struct<doc,tf>>) → block rows.
 
     ``block_size`` postings per block (default cfg.block_size = 128, the
-    ds2i block length); the last block of a list is short.  Serving joins
-    these rows 1:1 with the block-max table (ds2s.wand.build_block_max)
-    on (term_id, block_id).
+    ds2i block length); the last block of a list is short.  This is the
+    array route: it emits the ``BLOCKS_SCHEMA`` columns only, for the
+    codec scoreboard (bench.py) and as the reference ``blocks_from_tf``
+    is tested against.  Serving encodes through ``blocks_from_tf``, whose
+    rows also carry ``len_bytes`` and ``block_max_score``.
     """
     codec = codec or cfg.block_codec
     bs = int(block_size or cfg.block_size)
@@ -196,14 +195,13 @@ def encode_blocks(
 def blocks_from_tf(
     tf: DataFrame,
     n_docs: int,
+    avg_len: float,
     cfg: IndexConfig = DEFAULT_CONFIG,
     codec: str | None = None,
-    block_size: int | None = None,
-    n_salt: int | None = None,
-    avg_len: float | None = None,
 ) -> DataFrame:
-    """Flat postings (term_id, doc_id, tf) → encoded block rows WITHOUT the
-    monolithic per-term array intermediate.
+    """Flat postings (term_id, doc_id, tf, len, df) → encoded block rows
+    (``BLOCKS_SCHEMA_SCORED``) WITHOUT the monolithic per-term array
+    intermediate.
 
     The array route (build_postings → encode_blocks) materializes one row
     per term; a hot term's full posting list in a single row is exactly
@@ -211,13 +209,14 @@ def blocks_from_tf(
     whose vocabulary is 31 ultra-hot terms; GC-bound and worse with more
     threads).  This is the scale path:
 
-    1. range-salt doc space into ``n_salt`` disjoint strides — positions
-       are computable per (term, salt) locally;
+    1. range-salt the doc space of every term with df above
+       ``cfg.hot_term_df`` into ``cfg.n_salt`` disjoint strides —
+       positions are computable per (term, salt) locally;
     2. ONE shuffle of the posting table, hash-partitioned by (term, salt)
        and UNSORTED — the split kernel buffers its partition and sorts
        with one numpy lexsort (the JVM row-comparator sort of the full
        posting table was the single largest CPU sink at high parallelism),
-       then cuts each complete run into ≤block_size fragments;
+       then cuts each complete run into ≤cfg.block_size fragments;
     3. global fragment positions and per-term df via window sums over the
        ~128×-smaller FRAGMENT table (salts are ascending disjoint docID
        ranges, so (salt, local_start) order ≡ docID order) — no second
@@ -227,15 +226,15 @@ def blocks_from_tf(
        skew-free — and stream through a partition-wise merge+encode
        kernel.
 
-    When the input carries ``len`` (doc length) and ``df`` columns and
-    ``avg_len`` is given, the kernel additionally emits a per-block
-    encoded length payload (``len_bytes``) and the block-max BM25 score
-    (``block_max_score``) — ds2i's wand_data/block-max metadata derived in
-    the SAME pass that encodes the block ([U] ds2i/wand_data.hpp), so no
-    second scan of the postings and no per-term window is ever needed.
+    Besides the encoded docs and tfs, the kernel emits a per-block encoded
+    length payload (``len_bytes``) and the block-max BM25 score
+    (``block_max_score``, scored with ``cfg.scorer`` and ``avg_len``) —
+    ds2i's wand_data/block-max metadata derived in the SAME pass that
+    encodes the block ([U] ds2i/wand_data.hpp), so no second scan of the
+    postings and no per-term window is ever needed.
 
-    Exactly equal to encode_blocks(build_postings(tf)) (tested), row for
-    row, block for block.
+    Its ``BLOCKS_SCHEMA`` columns equal encode_blocks(build_postings(tf))
+    (tested), row for row, block for block, salted or not.
 
     This salted plan is the only one, settled by measurement
     (MERGE_AB.jsonl, interleaved rounds at 100.8M postings, 32 cores): a
@@ -244,12 +243,10 @@ def blocks_from_tf(
     Zipf-hot term's encode over many tasks.
     """
     codec = codec or cfg.block_codec
-    bs = int(block_size or cfg.block_size)
-    ns = int(n_salt or max(cfg.n_salt, 1))
+    bs = int(cfg.block_size)
     universe = int(n_docs)
-    stride = range_salt_stride(universe, ns)
+    stride = range_salt_stride(universe, max(cfg.n_salt, 1))
     spark = tf.sparkSession
-    scored = avg_len is not None and "len" in tf.columns and "df" in tf.columns
     scorer = cfg.scorer
 
     try:
@@ -259,21 +256,18 @@ def blocks_from_tf(
 
     # salt only where it pays: a cold term's run needs no splitting, and
     # salting EVERY term multiplies the run count by n_salt (416k runs on
-    # a 52k-term probe — per-run overhead and offset-table size 8×).  With
-    # a df column the salt applies to hot terms only (same conditional as
-    # build_postings); without one (oracle-surface callers) salting stays
-    # unconditional — outputs are identical either way (tested).
-    # The shuffle carries (term_id, doc_id, tf [, len], salt) and NOTHING
+    # a 52k-term probe — per-run overhead and offset-table size 8×), so
+    # the salt applies to hot terms only (same conditional as
+    # build_postings); outputs are identical either way (tested).
+    # The shuffle carries (term_id, doc_id, tf, len, salt) and NOTHING
     # else: df is NOT shipped per posting (4 B × n_postings of pure
     # redundancy) — it is recovered later as a window sum over the ~128×
     # smaller fragment table (df ≡ the term's total posting count).
-    cols = ["term_id", "doc_id", "tf"] + (["len"] if scored else [])
-    range_salt = (F.col("doc_id") / stride).cast("int")
-    salt_col = (
-        F.when(F.col("df") > cfg.hot_term_df, range_salt).otherwise(F.lit(0))
-        if "df" in tf.columns else range_salt
-    )
-    salted = tf.select(*cols, salt_col.alias("salt"))
+    salt_col = F.when(
+        F.col("df") > cfg.hot_term_df, (F.col("doc_id") / stride).cast("int")
+    ).otherwise(F.lit(0))
+    salted = tf.select("term_id", "doc_id", "tf", "len",
+                       salt_col.alias("salt"))
 
     # ONE shuffle of the posting table, UNSORTED: hash partitioning by
     # (term, salt) already co-locates every run, and the split kernel
@@ -294,10 +288,8 @@ def blocks_from_tf(
 
     frag_schema = (
         "term_id int, salt int, local_start long, "
-        "docs_bin binary, tfs_bin binary"
+        "docs_bin binary, tfs_bin binary, lens_bin binary"
     )
-    if scored:
-        frag_schema += ", lens_bin binary"
     max_rows = _SPLIT_MAX_PARTITION_ROWS  # read at plan time, on the driver
 
     def split_iter(batches) -> Iterator:
@@ -324,8 +316,7 @@ def blocks_from_tf(
             s_p.append(cols["salt"].to_numpy(zero_copy_only=True))
             d_p.append(cols["doc_id"].to_numpy(zero_copy_only=True))
             f_p.append(cols["tf"].to_numpy(zero_copy_only=True))
-            if scored:
-                l_p.append(cols["len"].to_numpy(zero_copy_only=True))
+            l_p.append(cols["len"].to_numpy(zero_copy_only=True))
         if not t_p:
             return
         # Sizing-contract guard (round-3 advice): this kernel buffers the
@@ -345,14 +336,13 @@ def blocks_from_tf(
         s_arr = np.concatenate(s_p)
         d_arr = np.concatenate(d_p).astype("<i8", copy=False)
         f_arr = np.concatenate(f_p).astype("<i4")
-        l_arr = np.concatenate(l_p).astype("<i4") if scored else None
+        l_arr = np.concatenate(l_p).astype("<i4")
         del t_p, s_p, d_p, f_p, l_p
         order = np.lexsort((d_arr, s_arr, t_arr))
-        t_arr, s_arr, d_arr, f_arr = (
-            t_arr[order], s_arr[order], d_arr[order], f_arr[order]
+        t_arr, s_arr, d_arr, f_arr, l_arr = (
+            t_arr[order], s_arr[order], d_arr[order], f_arr[order],
+            l_arr[order],
         )
-        if scored:
-            l_arr = l_arr[order]
         change = np.flatnonzero(
             (np.diff(t_arr) != 0) | (np.diff(s_arr) != 0)
         ) + 1
@@ -370,8 +360,7 @@ def blocks_from_tf(
                 o_ls.append(i - s0)
                 o_db.append(d_arr[i:j].tobytes())
                 o_tb.append(f_arr[i:j].tobytes())
-                if scored:
-                    o_lb.append(l_arr[i:j].tobytes())
+                o_lb.append(l_arr[i:j].tobytes())
         if not o_t:
             return
         arrays = [
@@ -380,11 +369,10 @@ def blocks_from_tf(
             pa.array(np.asarray(o_ls, dtype=np.int64)),
             pa.array(o_db, type=pa.binary()),
             pa.array(o_tb, type=pa.binary()),
+            pa.array(o_lb, type=pa.binary()),
         ]
-        names = ["term_id", "salt", "local_start", "docs_bin", "tfs_bin"]
-        if scored:
-            arrays.append(pa.array(o_lb, type=pa.binary()))
-            names.append("lens_bin")
+        names = ["term_id", "salt", "local_start", "docs_bin", "tfs_bin",
+                 "lens_bin"]
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     local_frags = shuffled.mapInArrow(split_iter, frag_schema)
@@ -402,12 +390,9 @@ def blocks_from_tf(
     sz_col = F.expr("length(docs_bin) div 8")
     gfrags = local_frags.withColumn("sz", sz_col.cast("int")).withColumn(
         "gstart", (F.sum("sz").over(w_run) - F.col("sz")).cast("long")
+    ).withColumn(
+        "df", F.sum("sz").over(Window.partitionBy("term_id")).cast("long")
     )
-    if scored:
-        w_term = Window.partitionBy("term_id")
-        gfrags = gfrags.withColumn(
-            "df", F.sum("sz").over(w_term).cast("long")
-        )
 
     # re-cut ENTIRELY JVM-side on the flat binaries (byte-offset substring
     # — no per-element work anywhere): a ≤block_size fragment spans at
@@ -425,14 +410,8 @@ def blocks_from_tf(
 
     def piece_expr(which: str) -> F.Column:
         if which == "single":
-            b, d, t, ln = "bid0", "docs_bin", "tfs_bin", "lens_bin"
-            fields = [
-                F.col(b).alias("block_id"), F.col("gstart").alias("gstart"),
-                F.col(d).alias("docs_bin"), F.col(t).alias("tfs_bin"),
-            ]
-            if scored:
-                fields += [F.col(ln).alias("lens_bin"), F.col("df").alias("df")]
-            return F.struct(*fields)
+            return F.struct(F.col("bid0").alias("block_id"), "gstart",
+                            "docs_bin", "tfs_bin", "lens_bin", "df")
         if which == "a":
             sel = ("bid0", "substring(docs_bin, 1, 8*cut)",
                    "substring(tfs_bin, 1, 4*cut)",
@@ -442,25 +421,20 @@ def blocks_from_tf(
                    "substring(tfs_bin, 4*cut+1, 4*(sz-cut))",
                    "substring(lens_bin, 4*cut+1, 4*(sz-cut))",
                    "gstart + cut")
-        fields = [
+        return F.struct(
             F.col(sel[0]).alias("block_id"), F.expr(sel[4]).alias("gstart"),
             F.expr(sel[1]).alias("docs_bin"), F.expr(sel[2]).alias("tfs_bin"),
-        ]
-        if scored:
-            fields += [F.expr(sel[3]).alias("lens_bin"), F.col("df").alias("df")]
-        return F.struct(*fields)
+            F.expr(sel[3]).alias("lens_bin"), F.col("df").alias("df"),
+        )
 
     pieces = F.when(
         F.col("bid1") > F.col("bid0"),
         F.array(piece_expr("a"), piece_expr("b")),
     ).otherwise(F.array(piece_expr("single")))
-    pcols = ["term_id", F.col("p.block_id").alias("block_id"),
-             F.col("p.gstart").alias("gstart"),
-             F.col("p.docs_bin").alias("docs_bin"),
-             F.col("p.tfs_bin").alias("tfs_bin")]
-    if scored:
-        pcols += [F.col("p.lens_bin").alias("lens_bin"), F.col("p.df").alias("df")]
-    frags = gf.select("term_id", F.explode(pieces).alias("p")).select(*pcols)
+    frags = gf.select("term_id", F.explode(pieces).alias("p")).select(
+        "term_id", "p.block_id", "p.gstart", "p.docs_bin", "p.tfs_bin",
+        "p.lens_bin", "p.df",
+    )
 
     # merge + encode partition-wise (NOT one applyInPandas group per block:
     # per-group pandas overhead × n_blocks dwarfs the actual encode).  The
@@ -472,9 +446,7 @@ def blocks_from_tf(
     ).sortWithinPartitions("term_id", "block_id", "gstart")
 
     out_cols = ["term_id", "block_id", "n", "first_doc", "last_doc",
-                "doc_bytes", "tf_bytes"]
-    if scored:
-        out_cols += ["len_bytes", "block_max_score"]
+                "doc_bytes", "tf_bytes", "len_bytes", "block_max_score"]
     k1, b_p = scorer.k1, scorer.b
     n_f = float(universe)
     avg = float(avg_len) if avg_len else 1.0
@@ -504,24 +476,23 @@ def blocks_from_tf(
             out["last_doc"].append(int(d[-1]))
             out["doc_bytes"].append(db)
             out["tf_bytes"].append(tb)
-            if scored:
-                ln = pend_l[0] if len(pend_l) == 1 else np.concatenate(pend_l)
-                ln = ln.astype(np.uint64, copy=False)
-                # lens are positive ints like tfs, so they take the tf
-                # codec path; OptPFD over group varint, on the sf0.1-shaped
-                # fixture's 931 blocks: 151 -> 110 KB, encode 74 -> 54 µs
-                # and decode 78 -> 13 µs per block (one 4-vCPU host).  The
-                # blob's first byte names its codec, so gvb lengths from
-                # older stores still decode
-                out["len_bytes"].append(encode_tfs(ln, "optpfd"))
-                # same float64 expression shape as the serve kernel and the
-                # DuckDB oracle (round-4 stable)
-                idf = scorer.idf(float(pend_df), n_f)
-                tf_f = t.astype(np.float64)
-                contrib = idf * tf_f / (
-                    tf_f + k1 * (1.0 - b_p + b_p * ln.astype(np.float64) / avg)
-                )
-                out["block_max_score"].append(float(contrib.max()))
+            ln = pend_l[0] if len(pend_l) == 1 else np.concatenate(pend_l)
+            ln = ln.astype(np.uint64, copy=False)
+            # lens are positive ints like tfs, so they take the tf codec
+            # path; OptPFD over group varint, on the sf0.1-shaped fixture's
+            # 931 blocks: 151 -> 110 KB, encode 74 -> 54 µs and decode
+            # 78 -> 13 µs per block (one 4-vCPU host).  The blob's first
+            # byte names its codec, so gvb lengths from older stores still
+            # decode
+            out["len_bytes"].append(encode_tfs(ln, "optpfd"))
+            # same float64 expression shape as the serve kernel and the
+            # DuckDB oracle (round-4 stable)
+            idf = scorer.idf(float(pend_df), n_f)
+            tf_f = t.astype(np.float64)
+            contrib = idf * tf_f / (
+                tf_f + k1 * (1.0 - b_p + b_p * ln.astype(np.float64) / avg)
+            )
+            out["block_max_score"].append(float(contrib.max()))
 
         for b in batches:
             if b.num_rows == 0:
@@ -531,10 +502,8 @@ def blocks_from_tf(
             b_arr = cols["block_id"].to_numpy(zero_copy_only=True)
             docs_l = cols["docs_bin"].to_pylist()
             tfs_l = cols["tfs_bin"].to_pylist()
-            lens_l = cols["lens_bin"].to_pylist() if scored else tfs_l
-            df_arr = (
-                cols["df"].to_numpy(zero_copy_only=True) if scored else t_arr
-            )
+            lens_l = cols["lens_bin"].to_pylist()
+            df_arr = cols["df"].to_numpy(zero_copy_only=True)
             for i in range(len(t_arr)):
                 key = (int(t_arr[i]), int(b_arr[i]))
                 if key != pend_key:
@@ -544,18 +513,16 @@ def blocks_from_tf(
                     pend_df = int(df_arr[i])
                 pend_d.append(np.frombuffer(docs_l[i], dtype="<i8"))
                 pend_t.append(np.frombuffer(tfs_l[i], dtype="<i4"))
-                if scored:
-                    pend_l.append(np.frombuffer(lens_l[i], dtype="<i4"))
+                pend_l.append(np.frombuffer(lens_l[i], dtype="<i4"))
             if out["term_id"]:
-                yield _blocks_record_batch(out, out_cols, scored)
+                yield _blocks_record_batch(out)
                 out = {k: [] for k in out}
         if pend_key is not None:
             flush()
         if out["term_id"]:
-            yield _blocks_record_batch(out, out_cols, scored)
+            yield _blocks_record_batch(out)
 
-    schema = BLOCKS_SCHEMA_SCORED if scored else BLOCKS_SCHEMA
-    return sorted_frags.mapInArrow(merge_iter, schema=schema)
+    return sorted_frags.mapInArrow(merge_iter, schema=BLOCKS_SCHEMA_SCORED)
 
 
 def decode_blocks_flat(blocks: DataFrame) -> DataFrame:

@@ -742,7 +742,7 @@ def dup_groups(
     one dup candidate), and each distributed round costs ~5 shuffles of
     fixed scheduling overhead.  When |symmetric edges| ≤ ``collect_cap``
     (default 2M rows ≈ 32 MB driver transfer — same bounded-driver-state
-    contract as ServingIndex.plan_collect_cap) the closure is computed
+    contract as ds2s.serve._PLAN_COLLECT_CAP) the closure is computed
     with a driver-side union-find on the collected edge list, which is
     exact and identical to the converged propagation.  Larger graphs run
     the distributed rounds unchanged; pass ``collect_cap=0`` to force

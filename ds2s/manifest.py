@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
+from . import serve
 from .blocks import blocks_from_tf, superblock_agg
 from .config import IndexConfig
 from .corpus import with_sha256
@@ -72,9 +73,9 @@ def _no_stats(*cols: str) -> dict[str, str]:
 
 
 def _config_fingerprint(cfg: IndexConfig, extra: dict | None = None) -> str:
-    """Unit-completeness fingerprint.  ``extra`` carries write-call
-    arguments that change the bytes on disk but live OUTSIDE IndexConfig
-    (codec override, n_buckets, sb_size) — round-5 review: hashing only
+    """Unit-completeness fingerprint.  ``extra`` carries the write
+    settings that change the bytes on disk but live OUTSIDE IndexConfig
+    (codec override, n_buckets, superblock size) — round-5 review: hashing only
     asdict(cfg) made ``write_checkpointed(..., codec='gvb')`` over a
     pef-written store a silent no-op (same fp ⇒ every unit 'done')."""
     import hashlib
@@ -166,12 +167,13 @@ class IndexStore:
         source: str,
         codec: str | None = None,
         n_buckets: int = 8,
-        sb_size: int = 128,
         fail_after_units: int | None = None,
-        content_col: str = "content",
         blocks: DataFrame | None = None,
     ) -> int:
         """Write all index tables; returns number of units written THIS run.
+
+        The superblocks unit is cut at ``serve._SB_SIZE`` blocks, recorded
+        in _index.json and hashed into the fingerprint.
 
         ``fail_after_units`` injects a crash after N fresh units (test hook
         for the kill/rerun resume property, SURVEY.md §7 Milestone 5).
@@ -185,6 +187,7 @@ class IndexStore:
         """
         cfg = idx.cfg
         eff_codec = codec or cfg.block_codec
+        sb_size = serve._SB_SIZE
         fp = _config_fingerprint(
             cfg,
             extra={
@@ -275,7 +278,7 @@ class IndexStore:
             if blocks is None:
                 blocks = blocks_from_tf(
                     idx.tf.select("term_id", "doc_id", "tf", "len", "df"),
-                    idx.n_docs, cfg, codec=codec, avg_len=idx.avg_len,
+                    idx.n_docs, idx.avg_len, cfg, codec=codec,
                 )
             bucketed = blocks.withColumn(
                 "bucket", F.pmod(F.col("term_id"), F.lit(n_buckets))
@@ -331,7 +334,7 @@ class IndexStore:
             (
                 "corpus_manifest",
                 plain(
-                    with_sha256(idx.corpus, content_col).select(
+                    with_sha256(idx.corpus).select(
                         "doc_id", "content_sha256"
                     ),
                     "corpus_manifest",
@@ -451,7 +454,7 @@ class IndexStore:
     def load_meta(self) -> dict:
         return json.loads((self.root / "_index.json").read_text())
 
-    def verify_sha256(self, corpus: DataFrame, content_col: str = "content") -> int:
+    def verify_sha256(self, corpus: DataFrame) -> int:
         """Rows whose stored sha256 differs from the live source (must be 0).
         Digests compare as binary; a store written before the binary
         column existed stores hex strings, which are unhexed first."""
@@ -459,7 +462,7 @@ class IndexStore:
         if isinstance(stored.schema["content_sha256"].dataType, StringType):
             stored = stored.withColumn(
                 "content_sha256", F.unhex("content_sha256"))
-        live = with_sha256(corpus, content_col).select(
+        live = with_sha256(corpus).select(
             "doc_id", F.col("content_sha256").alias("live_sha")
         )
         return (

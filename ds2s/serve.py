@@ -12,7 +12,7 @@ partition hint on the store layout).
 
 Phase 1 — θ₀ seed (tiny): the rarest query term's highest-block-max blocks
 are top-N-capped (a per-term window over block metadata; driver numpy when
-the batch's blocks were fetched whole), so at most ``seed_max_blocks``
+the batch's blocks were fetched whole), so at most ``_SEED_MAX_BLOCKS``
 payload rows per term leave the scan; θ₀ = k-th best single-term lower
 bound (0 if fewer than k).  Any subset of true scores is a valid lower
 bound on the final k-th score, so the cap is always safe.
@@ -22,15 +22,15 @@ Phase 2 — metadata-only pruning through ONE interval grid
 interval), in three tiers by query-term block volume (``n_blocks ≈ Σ
 df/128`` estimated from the lexicon, no extra scan):
 
-- driver (≤ plan_collect_cap): the batch terms' block metadata collects
+- driver (≤ ``_PLAN_COLLECT_CAP``): the batch terms' block metadata collects
   to the driver, fused with the θ₀ seed rows in one job, and the grid
   prunes there.  A batch of at most ``_DRIVER_FETCH_BLOCKS`` estimated
   blocks (a few MB) instead fetches every block of its terms, payloads
   included, in ONE collect; ``topk`` then scores it in the driver, once
   per qid — no Python workers.
-- superblock: the grid first runs on per (term, superblock of ``sb_size``
+- superblock: the grid first runs on per (term, superblock of ``_SB_SIZE``
   blocks) rows — the Variable-BMW / wand_data_compressed analogue (PISA
-  lineage), 1/sb_size the metadata, so a 10^9-posting term contributes
+  lineage), 1/_SB_SIZE the metadata, so a 10^9-posting term contributes
   ~61k rows, not 8M — then on the surviving superblocks' block metadata.
 - kernel (superblock survivors still over the cap): the same grid runs
   per qid in ``applyInPandas``, on input bounded by the surviving
@@ -70,6 +70,10 @@ Upper bounds are inflated by 1+1e-9 before pruning: metadata sums are
 float math in two runtimes; the margin keeps pruning safe across last-ulp
 differences (both paths rank on values rounded to 6 decimals, so the
 margin cannot change results).
+
+Serving has one configuration, like ds2i's compile-time constants: the
+caps, the superblock size and the rank rounding are the module constants
+below, and the scorer is the one the index was built with.
 """
 
 from __future__ import annotations
@@ -120,6 +124,19 @@ def _no_aqe(spark):
             spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 _UB_MARGIN = 1.0 + 1e-9
+# θ₀ seed: at most this many blocks of a qid's rarest term, by block max,
+# ship their payloads to the driver.  Any cap only weakens θ₀; it never
+# changes results.
+_SEED_MAX_BLOCKS = 64
+# Driver-state bound: a batch whose block (or surviving superblock)
+# metadata exceeds this many rows is planned per qid in applyInPandas.
+_PLAN_COLLECT_CAP = 131072
+# Blocks per superblock, for live serving and for a newly written store; a
+# loaded store keeps the size its ``superblocks`` unit was cut with.
+_SB_SIZE = 128
+# Ranking compares scores rounded to this many decimals (the frozen tie
+# discipline of query.ranked_or_topk); returned scores keep 4.
+_RANK_ROUND = 6
 # A driver-tier batch whose terms span at most this many blocks (estimated
 # from lexicon df) is fetched whole — metadata AND payloads, one collect —
 # and scored in the driver.  Sized to driver memory, not to any workload:
@@ -203,7 +220,7 @@ def _grid_survivors(per_term, theta0):
     ]
 
 
-def _sweep_topk(per_term, k, theta0, avg, scorer, rank_round):
+def _sweep_topk(per_term, k, theta0, avg, scorer):
     """The one scoring kernel of every algorithm (bmw, maxscore and wand):
     a static-θ upper-bound interval sweep.  Only the pruning intervals
     differ — block maxima for bmw and wand, one term interval per term for
@@ -237,17 +254,17 @@ def _sweep_topk(per_term, k, theta0, avg, scorer, rank_round):
     ii = np.searchsorted(points, ud, side="right") - 1
     keep = surv[np.clip(ii, 0, len(surv) - 1)]
     ud, scores = ud[keep], scores[keep]
-    return _rank(ud, scores, k, rank_round)
+    return _rank(ud, scores, k)
 
 
-def _rank(ud, scores, k, rank_round):
+def _rank(ud, scores, k):
     """Frozen tie discipline: (round6(score) DESC, doc ASC), half-up."""
-    rs = round_half_up(scores, rank_round) if rank_round is not None else scores
+    rs = round_half_up(scores, _RANK_ROUND)
     order = np.lexsort((ud, -rs))[:k]
     return ud[order], scores[order]
 
 
-def _make_kernel(k, algo, scorer, avg_len, rank_round):
+def _make_kernel(k, algo, scorer, avg_len):
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(key[0])
         theta0 = float(pdf["theta0"].iloc[0])
@@ -273,15 +290,13 @@ def _make_kernel(k, algo, scorer, avg_len, rank_round):
                     idf=idf, w=w,
                 )
             )
-        docs, scores = _sweep_topk(per_term, k, theta0, avg_len, scorer,
-                                   rank_round)
-        out_scores = round_half_up(scores, 4) if rank_round is not None else scores
+        docs, scores = _sweep_topk(per_term, k, theta0, avg_len, scorer)
         return pd.DataFrame(
             {
                 "qid": np.full(len(docs), qid, dtype=np.int32),
                 "rank": np.arange(1, len(docs) + 1, dtype=np.int32),
                 "doc_id": docs,
-                "score": out_scores,
+                "score": round_half_up(scores, 4),
             }
         )
 
@@ -374,7 +389,7 @@ class ServingIndex:
 
     Holds DataFrames only — no driver-side arrays of any corpus-
     proportional size; query-time driver state is bounded by
-    ``plan_collect_cap`` metadata rows, ``seed_max_blocks`` payloads per
+    ``_PLAN_COLLECT_CAP`` metadata rows, ``_SEED_MAX_BLOCKS`` payloads per
     seed term and, for a batch scored in the driver,
     ``_DRIVER_FETCH_BLOCKS`` payload blocks (kept from ``survivor_blocks``
     until the next batch).
@@ -384,42 +399,31 @@ class ServingIndex:
     upper level).  A term's max score is the max of its block maxima,
     taken where it is needed.
 
-    Two constructions:
+    Two constructions, each scoring with the index's own build-time
+    config (block maxima are baked with that scorer; any other would
+    desync pruning bounds from kernel scores):
     - ``ServingIndex(idx)`` — from a live build: ONE pass over the
-      postings (blocks_from_tf with scoring) emits payloads + block-max
-      together; no separate wand_data scan of the postings;
+      postings (blocks_from_tf) emits payloads + block-max together; no
+      separate wand_data scan of the postings;
     - ``ServingIndex.from_store(spark, store)`` — from a persisted
       IndexStore alone (the mmap-load analogue: no corpus, no re-invert),
-      scoring with the BUILD-TIME config frozen in the store manifest.
+      with the config frozen in the store manifest.
     """
 
-    def __init__(self, idx: InvertedIndex, codec: str | None = None,
-                 cfg: IndexConfig | None = None, blocks: DataFrame | None = None,
-                 seed_max_blocks: int = 64, sb_size: int = 128,
-                 plan_collect_cap: int = 131072):
-        self.cfg = cfg or idx.cfg
-        if blocks is None:
-            # len rides inside tf (ds2s.invert.build_tf) — ONE cache scan,
-            # no doc-keyed join of the posting table
-            postings = idx.tf.select("term_id", "doc_id", "tf", "len", "df")
-            blocks = blocks_from_tf(
-                postings, idx.n_docs, self.cfg, codec=codec,
-                avg_len=idx.avg_len,
-            )
-        self._init_tables(
-            lexicon=idx.lexicon,
-            n_docs=idx.n_docs,
-            avg_len=idx.avg_len,
-            blocks=blocks,
-            seed_max_blocks=seed_max_blocks,
-            sb_size=sb_size,
-            plan_collect_cap=plan_collect_cap,
+    def __init__(self, idx: InvertedIndex, codec: str | None = None):
+        self.cfg = idx.cfg
+        # len rides inside tf (ds2s.invert.build_tf) — ONE cache scan, no
+        # doc-keyed join of the posting table
+        blocks = blocks_from_tf(
+            idx.tf.select("term_id", "doc_id", "tf", "len", "df"),
+            idx.n_docs, idx.avg_len, self.cfg, codec=codec,
         )
+        self._init_tables(idx.lexicon, idx.n_docs, idx.avg_len, blocks,
+                          sb_size=_SB_SIZE)
 
     def _init_tables(self, lexicon: DataFrame, n_docs: int, avg_len: float,
-                     blocks: DataFrame, superblocks: DataFrame | None = None,
-                     seed_max_blocks: int = 64, sb_size: int = 128,
-                     plan_collect_cap: int = 131072,
+                     blocks: DataFrame, sb_size: int,
+                     superblocks: DataFrame | None = None,
                      cache_blocks: bool = True) -> None:
         self.lexicon = lexicon
         self.n_docs = int(n_docs)
@@ -429,19 +433,7 @@ class ServingIndex:
         # sets it from _index.json) — _term_scan then prunes whole
         # bucket directories on uncached store-backed serving
         self._n_buckets = 0
-        self.seed_max_blocks = int(seed_max_blocks)
-        if self.seed_max_blocks < 1:
-            # 0/negative would silently DISABLE the seed payload cap and
-            # ship every block of a qid's rarest term to the driver —
-            # the unbounded state the class contract forbids.  θ₀ cannot
-            # be turned off (any cap only weakens it, exactness is
-            # unaffected), so reject rather than reinterpret.
-            raise ValueError(
-                f"seed_max_blocks={seed_max_blocks} must be ≥ 1 (driver "
-                "seed state is bounded by seed_max_blocks payload rows)"
-            )
         self.sb_size = int(sb_size)
-        self.plan_collect_cap = int(plan_collect_cap)
         # cache_blocks=False is the 100 TB store-serving shape: a block
         # table that dwarfs executor storage is served straight off
         # parquet, where the per-batch term/bucket predicates reach the
@@ -468,9 +460,7 @@ class ServingIndex:
                 pass  # already released / session gone
 
     @classmethod
-    def from_store(cls, spark, store, cfg: IndexConfig | None = None,
-                   seed_max_blocks: int = 64, sb_size: int = 128,
-                   plan_collect_cap: int = 131072,
+    def from_store(cls, spark, store,
                    cache_blocks: bool = True) -> "ServingIndex":
         """Serve from a persisted IndexStore (ds2s.manifest) — the
         ``succinct::mapper::map`` analogue ([U] succinct/mapper.hpp): the
@@ -484,7 +474,7 @@ class ServingIndex:
         inference), and the caches it sets up fill on first use."""
         self = cls.__new__(cls)
         meta = store.load_meta()
-        self.cfg = cfg or (
+        self.cfg = (
             IndexConfig.from_dict(meta["config"])
             if "config" in meta else DEFAULT_CONFIG
         )
@@ -536,10 +526,9 @@ class ServingIndex:
             n_docs=meta["n_docs"],
             avg_len=meta["avg_len"],
             blocks=store.load_table(spark, "blocks", units),
+            # the stored superblocks unit was cut with the recorded size
+            sb_size=int(meta.get("sb_size", _SB_SIZE)),
             superblocks=superblocks,
-            seed_max_blocks=seed_max_blocks,
-            sb_size=int(meta.get("sb_size", sb_size)),
-            plan_collect_cap=plan_collect_cap,
             cache_blocks=cache_blocks,
         )
         self._n_buckets = int(meta.get("n_buckets", 0))
@@ -622,7 +611,7 @@ class ServingIndex:
 
     def _seed_rows(self, cur: list[tuple], rows: pd.DataFrame) -> pd.DataFrame:
         """``_seed_df``'s selection over already-fetched block rows: each
-        qid's rarest term's top-``seed_max_blocks`` blocks in (block_max
+        qid's rarest term's top-``_SEED_MAX_BLOCKS`` blocks in (block_max
         DESC, block_id ASC) order — the same rows, so θ₀ is the same."""
         seed_tids = [tid for tid, _ in self._rarest_by_qid(cur).values()]
         tid = rows["term_id"].to_numpy(np.int64)
@@ -634,11 +623,11 @@ class ServingIndex:
         ))]
         t = tid[order]
         rank = np.arange(len(t)) - np.searchsorted(t, t, side="left")
-        return rows.iloc[order[rank < self.seed_max_blocks]]
+        return rows.iloc[order[rank < _SEED_MAX_BLOCKS]]
 
     def _seed_df(self, cur: list[tuple]) -> DataFrame:
         """The θ₀ seed rows: each qid's rarest term's top-
-        ``seed_max_blocks`` blocks, selected RELATIONALLY (window over
+        ``_SEED_MAX_BLOCKS`` blocks, selected RELATIONALLY (window over
         block metadata, block_max DESC) so only those rows' tf/len
         payloads ever leave the block scan — no hot term ships its full
         payloads (judge-advice fix).  Carries ``is_seed = true`` so it can
@@ -655,7 +644,7 @@ class ServingIndex:
             .select("term_id", "block_id", "block_max_score", "tf_bytes",
                     "len_bytes")
             .withColumn("rn", F.row_number().over(wr))
-            .filter(F.col("rn") <= self.seed_max_blocks)
+            .filter(F.col("rn") <= _SEED_MAX_BLOCKS)
             .drop("rn")
             .withColumn("is_seed", F.lit(True))
         )
@@ -686,7 +675,7 @@ class ServingIndex:
             w, idf = widf[(qid, tid)]
             scores = w * idf * raw
             th = float(np.partition(scores, -k)[-k])
-            # ranking compares scores ROUNDED to rank_round decimals, so a
+            # ranking compares scores ROUNDED to _RANK_ROUND decimals, so a
             # doc with raw score up to one quantum below θ₀ can still tie
             # and win on (doc ASC) — loosen the threshold accordingly
             theta0[qid] = max(0.0, th - quantum)
@@ -716,8 +705,7 @@ class ServingIndex:
             "block_id", "first_doc", "last_doc", "block_max_score",
         )
 
-    def survivor_blocks(self, qdf: DataFrame, k: int = 10,
-                        rank_round: int | None = 6) -> DataFrame:
+    def survivor_blocks(self, qdf: DataFrame, k: int = 10) -> DataFrame:
         """The pre-pruned (qid × block) rows — metadata + payloads — that
         the scoring kernel receives: in every tier ONE relation, the
         surviving (qid, term, block) keys joined to ``_term_scan``'s
@@ -726,7 +714,7 @@ class ServingIndex:
         superblock tiers, against the unpruned qid × term-blocks join.
 
         Tiers (module docstring): the driver grid under
-        ``plan_collect_cap`` metadata rows, the superblock pre-prune above
+        ``_PLAN_COLLECT_CAP`` metadata rows, the superblock pre-prune above
         it, the per-qid plan kernel only when even superblock survivors
         exceed the cap.  A driver-tier batch of at most
         ``_DRIVER_FETCH_BLOCKS`` estimated blocks fetches every block of
@@ -737,7 +725,8 @@ class ServingIndex:
         self._driver_batch = None
         cur = self._resolve_cursors(qdf)
         bs = int(self.cfg.block_size)
-        quantum = 10.0 ** (-rank_round) if rank_round is not None else 0.0
+        quantum = 10.0 ** -_RANK_ROUND
+        cap = _PLAN_COLLECT_CAP
 
         qid_terms: dict[int, list] = {}
         for qid, tid, w, df, idf in cur:
@@ -755,7 +744,7 @@ class ServingIndex:
 
         if not cur:
             pass  # no batch term is in the vocabulary: no survivors
-        elif est_blocks <= min(self.plan_collect_cap, _DRIVER_FETCH_BLOCKS):
+        elif est_blocks <= min(cap, _DRIVER_FETCH_BLOCKS):
             # every block of the batch's terms in ONE job; the θ₀ seed
             # rows, the grid and the survivors are all driver numpy
             with _no_aqe(spark):
@@ -772,7 +761,7 @@ class ServingIndex:
                 tier="driver", scoring="driver", collected_rows=len(fetched),
                 survivors=len(surv_rows),
             )
-        elif est_blocks <= self.plan_collect_cap:
+        elif est_blocks <= cap:
             # exact block grid entirely in the driver
             meta, theta0 = self._fetch_seeded(
                 self._term_scan(tids).select(
@@ -821,7 +810,7 @@ class ServingIndex:
                 sb_rows=len(sbm), kernel_input_bound=est_kernel,
                 driver_fetch_bound=est2,
             )
-            if est2 <= self.plan_collect_cap:
+            if est2 <= cap:
                 # exact block grid in the driver over SURVIVING superblocks;
                 # their keys join shuffle-hash inside the fetch's own job
                 n_meta = 0
@@ -850,7 +839,7 @@ class ServingIndex:
             else:
                 # kernel tier: the same grid per qid in applyInPandas, over
                 # the surviving superblocks' blocks.  Its survivor keys are
-                # UNBOUNDED by design (est2 > plan_collect_cap): broadcasting
+                # UNBOUNDED by design (est2 > the cap): broadcasting
                 # them would collect them through the driver, the state
                 # this tier exists to avoid (round-5 review), so the join
                 # strategy is left to Catalyst/AQE.
@@ -875,7 +864,7 @@ class ServingIndex:
                 self._driver_batch = fetched.merge(
                     spdf, on=["term_id", "block_id"]
                 )
-            # a LOCAL relation bounded by plan_collect_cap: a shuffle-hash
+            # a LOCAL relation bounded by _PLAN_COLLECT_CAP: a shuffle-hash
             # join (keys as the build side) runs inside the kernel's own
             # job, where a broadcast would spend a separate job on them
             surv_keys = spark.createDataFrame(
@@ -886,8 +875,8 @@ class ServingIndex:
             surv_keys, ["term_id", "block_id"]
         )
 
-    def topk(self, qdf: DataFrame, k: int = 10, algo: str = "bmw",
-             rank_round: int | None = 6) -> DataFrame:
+    def topk(self, qdf: DataFrame, k: int = 10,
+             algo: str = "bmw") -> DataFrame:
         """(qid, rank, doc_id, score) — rank-identical to ranked_or_topk.
 
         ``algo``: "bmw" (block-max intervals, [U] ds2i
@@ -897,7 +886,7 @@ class ServingIndex:
         runs exactly the "bmw" sweep, block-max intervals included.
 
         The result is BOUNDED (≤ batch qids × k rows), so when it fits
-        the plan_collect_cap driver-state contract a local-relation
+        the ``_PLAN_COLLECT_CAP`` driver-state contract a local-relation
         DataFrame is returned: the caller's later action then costs zero
         extra jobs (the queries-tool shape — ds2i's queries.cpp also
         materializes each batch's results).  Every batch enters through
@@ -910,8 +899,8 @@ class ServingIndex:
         serving no-AQE guard, so its exchange isn't split into per-stage
         AQE jobs."""
         spark = qdf.sparkSession
-        surv = self.survivor_blocks(qdf, k=k, rank_round=rank_round)
-        kernel = _make_kernel(k, algo, self.cfg.scorer, self.avg_len, rank_round)
+        surv = self.survivor_blocks(qdf, k=k)
+        kernel = _make_kernel(k, algo, self.cfg.scorer, self.avg_len)
         batch, self._driver_batch = self._driver_batch, None
         if batch is not None:
             # θ₀ never exceeds a true score in the batch: some block survives
@@ -928,7 +917,7 @@ class ServingIndex:
         # tier exists for, and hold _AQE_LOCK for the job's full duration
         # (round-5 review).  Those batches return the lazy plan instead.
         if (
-            n_qids * k <= self.plan_collect_cap
+            n_qids * k <= _PLAN_COLLECT_CAP
             and self.last_plan.get("tier") != "kernel"
         ):
             with _no_aqe(spark):

@@ -33,13 +33,9 @@ def get_spark(
     # reuse (mmap threshold 64 MiB, trim 128 MiB, 2 arenas).  Retained heap per worker is bounded by the trim
     # threshold (~128 MiB x 32 workers ~= 4 GiB, fine on this box; tune
     # down via the env vars on small-memory executors).
-    _malloc_env = {
-        "MALLOC_MMAP_THRESHOLD_": "67108864",
-        "MALLOC_TRIM_THRESHOLD_": "134217728",
-        "MALLOC_ARENA_MAX": "2",
-    }
-    for k, v in _malloc_env.items():
-        os.environ.setdefault(k, v)
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "67108864")
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "134217728")
+    os.environ.setdefault("MALLOC_ARENA_MAX", "2")
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -65,16 +61,15 @@ def get_spark(
         # byte cap guards against.
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(2**31 - 1))
-        # Arrow batch ROW cap for python stages (default 10k).  The build
-        # kernels (split/merge/encode, ds2s.blocks) buffer whole shuffle
+        # Arrow batch ROW cap for python stages (Spark's default: 10k).  The
+        # build kernels (split/merge/encode, ds2s.blocks) buffer whole shuffle
         # partitions anyway, so larger input batches only cut per-batch
         # overhead (RecordBatch framing, python iterator churn, allocator
         # traffic).  Rows through those stages are ≤ ~24 B; the widest
         # Python-stage rows anywhere in the engine are document payloads
         # (~2 KB) → 65536 rows ≈ 128 MB worst-case batch, far under
         # Arrow's 2 GB limit (see ds2s/multimodal.py sizing invariant).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("DS2S_ARROW_MAX_RECORDS", "65536"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL",
                 os.environ.get("ARROW_DEFAULT_MEMORY_POOL", "system"))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_",
@@ -93,12 +88,6 @@ def get_spark(
     # when DS2S_LOCAL_DIR is set or the sandbox fixture tree is present —
     # on a real deployment a RAM-backed shuffle dir could exhaust host
     # memory instead of spilling (round-2 advice).
-    # lab escape hatch: DS2S_EXTRA_CONF="k=v;k2=v2" (A/B experiments on
-    # launch-time confs like spark.storage.memoryMapThreshold)
-    extra = os.environ.get("DS2S_EXTRA_CONF", "")
-    for kv in filter(None, extra.split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     local_dir = os.environ.get("DS2S_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/root/testdata"):
         local_dir = "/dev/shm/ds2s-spark"

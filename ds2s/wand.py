@@ -8,8 +8,8 @@ math.
 
 NOTE: these are the REFERENCE builders (independent relational derivation,
 kept for oracle symmetry + equality tests).  The ENGINE derives the same
-metadata in the block-encode pass itself (ds2s.blocks.blocks_from_tf with
-``avg_len`` — block_max_score is a column of the block table, and the
+metadata in the block-encode pass itself (ds2s.blocks.blocks_from_tf —
+block_max_score is a column of the block table, and the
 per-term wand max is a one-line aggregation over it), which avoids the
 second postings scan and this module's per-term window (skewed on hot
 terms at 10^12-doc scale).

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ds2s import query as Q
 from ds2s.blocks import (
+    BLOCKS_SCHEMA,
     blocks_from_tf,
     decode_blocks_flat,
     encode_blocks,
@@ -64,10 +65,20 @@ def test_block_structure(synth_idx):
         assert (g["n"].values[:-1] == 128).all()
 
 
+def _tf_postings(idx):
+    """The flat posting columns every ``blocks_from_tf`` caller passes."""
+    return idx.tf.select("term_id", "doc_id", "tf", "len", "df")
+
+
 @pytest.mark.parametrize("codec", ["pef", "optpfd"])
 def test_blocks_from_tf_equals_array_route(synth_idx, codec):
     """The scale path (flat tf → blocks, no monolithic arrays) is row-for-
-    row identical to encode_blocks(build_postings(tf))."""
+    row identical to encode_blocks(build_postings(tf)) on the
+    ``BLOCKS_SCHEMA`` columns — with every term range-salted
+    (``hot_term_df=0``), so runs split at salt boundaries and re-merge."""
+    from ds2s.config import IndexConfig
+
+    cols = [c.split()[0] for c in BLOCKS_SCHEMA.split(", ")]
     via_arrays = (
         encode_blocks(synth_idx.postings, synth_idx.n_docs, codec=codec)
         .orderBy("term_id", "block_id")
@@ -75,19 +86,17 @@ def test_blocks_from_tf_equals_array_route(synth_idx, codec):
         .reset_index(drop=True)
     )
     via_tf = (
-        blocks_from_tf(
-            synth_idx.tf.select("term_id", "doc_id", "tf"),
-            synth_idx.n_docs,
-            codec=codec,
-        )
+        blocks_from_tf(_tf_postings(synth_idx), synth_idx.n_docs,
+                       synth_idx.avg_len, IndexConfig(hot_term_df=0),
+                       codec=codec)
+        .select(*cols)
         .orderBy("term_id", "block_id")
         .toPandas()
         .reset_index(drop=True)
     )
-    via_arrays["doc_bytes"] = via_arrays["doc_bytes"].map(bytes)
-    via_arrays["tf_bytes"] = via_arrays["tf_bytes"].map(bytes)
-    via_tf["doc_bytes"] = via_tf["doc_bytes"].map(bytes)
-    via_tf["tf_bytes"] = via_tf["tf_bytes"].map(bytes)
+    for df in (via_arrays, via_tf):
+        df["doc_bytes"] = df["doc_bytes"].map(bytes)
+        df["tf_bytes"] = df["tf_bytes"].map(bytes)
     pd.testing.assert_frame_equal(via_tf, via_arrays)
 
 
@@ -100,7 +109,7 @@ def test_split_kernel_partition_bound_guard(synth_idx, monkeypatch):
     monkeypatch.setattr(blocks, "_SPLIT_MAX_PARTITION_ROWS", 10)
     with pytest.raises(Exception, match="spark.sql.shuffle.partitions") as ei:
         blocks_from_tf(
-            synth_idx.tf.select("term_id", "doc_id", "tf"), synth_idx.n_docs
+            _tf_postings(synth_idx), synth_idx.n_docs, synth_idx.avg_len
         ).count()
     assert "RuntimeError" in str(ei.value), ei.value
 
@@ -424,12 +433,28 @@ def hot_idx(spark):
     return build_index(corpus, cfg=cfg, build_arrays=False)
 
 
-def test_superblock_tier_bounds_plan_input(spark, hot_idx):
+@pytest.fixture(scope="module")
+def hot_sidx(hot_idx):
+    sidx = ServingIndex(hot_idx)
+    yield sidx
+    sidx.unpersist()
+
+
+# plan caps that force the two large tiers on hot_idx's 'rare' + 'hot'
+# batch: 2000 lets the surviving superblocks' blocks into the driver grid,
+# 50 does not
+_TIER_CAPS = (("superblock", 2000), ("kernel", 50))
+
+
+def test_superblock_tier_bounds_plan_input(spark, hot_idx, hot_sidx,
+                                           monkeypatch):
     """Round-2 verdict item 3: with a ≥10^4-block hot term, the plan never
     consumes the term's full block metadata — the superblock tier bounds
     it to the surviving superblocks' blocks, in BOTH the driver-grid and
     the fallback plan-kernel tiers, and results stay rank-identical."""
-    sidx = ServingIndex(hot_idx, plan_collect_cap=2000)
+    import ds2s.serve as serve
+
+    sidx = hot_sidx
     qdf = Q.queries_df(spark, rows=[(0, 0, "rare"), (0, 1, "hot")])
     exact = (
         Q.ranked_or_topk(hot_idx, qdf, k=10)
@@ -442,44 +467,36 @@ def test_superblock_tier_bounds_plan_input(spark, hot_idx):
     ).count()
     assert total_blocks >= 10_000
 
-    # mid tier: superblock grid prunes, then the driver block grid
-    got = (
-        sidx.topk(qdf, k=10, algo="bmw")
-        .orderBy("qid", "rank").toPandas().reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got.astype({"qid": "int64", "rank": "int64"}),
-        exact.astype({"qid": "int64", "rank": "int64"}),
-        check_exact=False, atol=1e-8,
-    )
-    assert sidx.last_plan["tier"] == "superblock"
-    assert sidx.last_plan["kernel_input_bound"] <= 300, sidx.last_plan
-
-    # huge tier: cap below the superblock survivors forces the plan
+    # superblock tier: superblock grid prunes, then the driver block grid;
+    # kernel tier: a cap below the superblock survivors forces the plan
     # KERNEL — its input is still bounded by surviving superblocks
-    sidx2 = ServingIndex(hot_idx, blocks=sidx.blocks, plan_collect_cap=50)
-    got2 = (
-        sidx2.topk(qdf, k=10, algo="bmw")
-        .orderBy("qid", "rank").toPandas().reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got2.astype({"qid": "int64", "rank": "int64"}),
-        exact.astype({"qid": "int64", "rank": "int64"}),
-        check_exact=False, atol=1e-8,
-    )
-    assert sidx2.last_plan["tier"] == "kernel"
-    assert sidx2.last_plan["kernel_input_bound"] <= 300, sidx2.last_plan
+    for tier, cap in _TIER_CAPS:
+        monkeypatch.setattr(serve, "_PLAN_COLLECT_CAP", cap)
+        got = (
+            sidx.topk(qdf, k=10, algo="bmw")
+            .orderBy("qid", "rank").toPandas().reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(
+            got.astype({"qid": "int64", "rank": "int64"}),
+            exact.astype({"qid": "int64", "rank": "int64"}),
+            check_exact=False, atol=1e-8,
+        )
+        assert sidx.last_plan["tier"] == tier
+        assert sidx.last_plan["kernel_input_bound"] <= 300, sidx.last_plan
 
 
-def test_superblock_and_kernel_tiers_share_survivors(spark, hot_idx):
+def test_superblock_and_kernel_tiers_share_survivors(spark, hot_sidx,
+                                                     monkeypatch):
     """The superblock tier's driver grid and the kernel tier's per-qid
     plan kernel are the same grid over the same surviving superblocks'
     blocks, so for BMW they keep the same (qid, term_id, block_id) set."""
+    import ds2s.serve as serve
+
     qdf = Q.queries_df(spark, rows=[(0, 0, "rare"), (0, 1, "hot")])
-    sidx = ServingIndex(hot_idx, plan_collect_cap=2000)
-    sidx2 = ServingIndex(hot_idx, blocks=sidx.blocks, plan_collect_cap=50)
+    s = hot_sidx
     keys = {}
-    for s, tier in ((sidx, "superblock"), (sidx2, "kernel")):
+    for tier, cap in _TIER_CAPS:
+        monkeypatch.setattr(serve, "_PLAN_COLLECT_CAP", cap)
         rows = s.survivor_blocks(qdf, k=10).select(
             "qid", "term_id", "block_id").collect()
         assert s.last_plan["tier"] == tier, s.last_plan
@@ -488,16 +505,19 @@ def test_superblock_and_kernel_tiers_share_survivors(spark, hot_idx):
     assert keys["superblock"] and keys["superblock"] == keys["kernel"]
 
 
-def test_superblock_and_kernel_tier_job_counts(spark, hot_idx):
+def test_superblock_and_kernel_tier_job_counts(spark, hot_sidx,
+                                               monkeypatch):
     """Steady-state jobs per BMW batch in the two large tiers, forced via
-    ``plan_collect_cap``: the superblock tier's block-metadata fetch joins
+    ``_PLAN_COLLECT_CAP``: the superblock tier's block-metadata fetch joins
     the surviving (term, superblock) keys shuffle-hash, inside the fetch's
     own job (≤ 4: lexicon, superblock + seed fetch, block metadata,
     kernel); the kernel tier's lazy plan stays ≤ 7."""
+    import ds2s.serve as serve
+
     qdf = Q.queries_df(spark, rows=[(0, 0, "rare"), (0, 1, "hot")])
-    sidx = ServingIndex(hot_idx, plan_collect_cap=2000)
-    sidx2 = ServingIndex(hot_idx, blocks=sidx.blocks, plan_collect_cap=50)
-    for s, tier, bound in ((sidx, "superblock", 4), (sidx2, "kernel", 7)):
+    s = hot_sidx
+    for (tier, cap), bound in zip(_TIER_CAPS, (4, 7)):
+        monkeypatch.setattr(serve, "_PLAN_COLLECT_CAP", cap)
         s.topk(qdf, k=10, algo="bmw").collect()  # warm-up
         n = _jobs(spark, f"jobcount-{tier}",
                   lambda: s.topk(qdf, k=10, algo="bmw").collect())
@@ -505,11 +525,14 @@ def test_superblock_and_kernel_tier_job_counts(spark, hot_idx):
         assert 0 < n <= bound, (tier, n)
 
 
-def test_seed_cap_preserves_exactness(spark, idx001):
+def test_seed_cap_preserves_exactness(spark, idx001, sidx001, monkeypatch):
     """θ₀ seeding is top-N-capped relationally (only the cap's payload
     rows leave the block scan); any cap — even 2 — only weakens θ₀, never
     changes results."""
-    sidx = ServingIndex(idx001, codec="pef", seed_max_blocks=2)
+    import ds2s.serve as serve
+
+    monkeypatch.setattr(serve, "_SEED_MAX_BLOCKS", 2)
+    sidx = sidx001
     qdf = Q.queries_df(spark)
     exact = (
         Q.ranked_or_topk(idx001, qdf, k=DEFAULT_K)
@@ -594,8 +617,8 @@ def test_driver_scoring_is_semantics_free(spark, request, tmp_path,
         sidx = ServingIndex(request.getfixturevalue("skew_idx"))
         rows = [(0, 0, "rare"), (0, 1, "common"), (1, 0, "common")]
     elif case == "synth":
-        sidx = ServingIndex(request.getfixturevalue("synth_idx"),
-                            seed_max_blocks=2)
+        monkeypatch.setattr(serve, "_SEED_MAX_BLOCKS", 2)
+        sidx = ServingIndex(request.getfixturevalue("synth_idx"))
         k, rows = 5, _SYNTH_ROWS
     else:
         store = IndexStore(str(tmp_path / "nocache"))

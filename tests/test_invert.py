@@ -118,12 +118,14 @@ def test_tokenizer_edge_cases(spark):
 def test_persist_tf_false_identical(spark):
     """The build→encode fast path (persist_tf=False, lazy tf join) is
     row-for-row identical to the default build — tf table, stats, and
-    encoded blocks."""
-    from ds2s.blocks import blocks_from_tf
+    encoded blocks, which also equal the array route's on the
+    ``BLOCKS_SCHEMA`` columns with every term range-salted."""
+    from ds2s.blocks import BLOCKS_SCHEMA, blocks_from_tf, encode_blocks
+    from ds2s.config import IndexConfig
     from ds2s.corpus import synth_corpus
     from ds2s.invert import build_index
 
-    a = build_index(synth_corpus(spark), build_arrays=False)
+    a = build_index(synth_corpus(spark))
     b = build_index(synth_corpus(spark), build_arrays=False, persist_tf=False)
     assert (a.n_docs, a.avg_len, a.n_postings) == (b.n_docs, b.avg_len, b.n_postings)
     assert a.n_postings == a.tf.count() == b.tf.count()
@@ -131,13 +133,16 @@ def test_persist_tf_false_identical(spark):
     ra = [tuple(r) for r in a.tf.select(cols).orderBy(cols).collect()]
     rb = [tuple(r) for r in b.tf.select(cols).orderBy(cols).collect()]
     assert ra == rb
-    ba = blocks_from_tf(a.tf.select("term_id", "doc_id", "tf"), a.n_docs).select(
-        "term_id", "block_id", "n", "first_doc", "last_doc"
-    ).orderBy("term_id", "block_id").collect()
-    bb = blocks_from_tf(b.tf.select("term_id", "doc_id", "tf"), b.n_docs).select(
-        "term_id", "block_id", "n", "first_doc", "last_doc"
-    ).orderBy("term_id", "block_id").collect()
-    assert [tuple(r) for r in ba] == [tuple(r) for r in bb]
+    bcols = [c.split()[0] for c in BLOCKS_SCHEMA.split(", ")]
+
+    def rows_of(blocks):
+        return [tuple(r) for r in blocks.select(bcols)
+                .orderBy("term_id", "block_id").collect()]
+
+    salted = IndexConfig(hot_term_df=0)
+    ba, bb = (rows_of(blocks_from_tf(x.tf.select(cols), x.n_docs, x.avg_len,
+                                     salted)) for x in (a, b))
+    assert ba == bb == rows_of(encode_blocks(a.postings, a.n_docs))
 
 
 def test_load_code_corpus_bare_relative_dir(spark):

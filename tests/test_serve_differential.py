@@ -1,6 +1,6 @@
 """Differential serving harness: every pruned algorithm, through every
-serving tier, off a cached and an uncached store, equals exhaustive
-ranked-OR on seeded adversarial batches.
+serving tier, off a cached and an uncached store and from the live build
+in memory, equals exhaustive ranked-OR on seeded adversarial batches.
 
 One seeded generator (stdlib ``random`` + numpy) writes the corpus and
 the query batches.  The corpus has:
@@ -14,18 +14,21 @@ the query batches.  The corpus has:
 
 The batches mix hot-only, rare + hot, single-posting-only (k larger than
 the matches), out-of-vocabulary and duplicate query terms, at k=10 and
-k=1.  Every combination of {bmw, maxscore, wand} × four tiers × {cached,
-uncached} store serves one of the two batches, rotated so that each batch
-meets every algorithm, tier and cache mode (24 runs, not 48, to stay
-within a minute):
+k=1.  Every combination of {bmw, maxscore, wand} × four tiers × {cached
+store, uncached store, in-memory ``ServingIndex(idx)``} serves one of the
+two batches, rotated so that each batch meets every algorithm, tier and
+mode (36 runs, not 72, to stay within a minute).  Tiers are forced by
+patching the serving module's constants:
 
 - fetched driver tier (default caps: one fetch, kernel in the driver);
 - unfetched driver tier (``_DRIVER_FETCH_BLOCKS`` = 0: Spark kernel);
-- superblock tier (``plan_collect_cap`` one below the batch's estimated
+- superblock tier (``_PLAN_COLLECT_CAP`` one below the batch's estimated
   blocks, so only the superblock grid's pruning brings it under the cap);
-- kernel tier (``plan_collect_cap`` = 0).
+- kernel tier (``_PLAN_COLLECT_CAP`` = 0).
 
-Every run must land in its tier and equal ``ranked_or_topk``.
+Every index cuts superblocks of ``SB`` blocks (``_SB_SIZE`` patched while
+the store is written and the in-memory index is built).  Every run must
+land in its tier and equal ``ranked_or_topk``.
 """
 
 from __future__ import annotations
@@ -44,8 +47,10 @@ from ds2s.serve import ServingIndex
 SEED = 20251
 N_DOCS = 1200
 BLOCK = 8
+SB = 4
 N_HOT, N_MID, N_SINGLE = 8, 40, 30
 TIERS = ("fetched", "unfetched", "superblock", "kernel")
+MODES = ("cached", "uncached", "memory")
 
 
 def gen_corpus(seed: int = SEED) -> list[tuple[int, str]]:
@@ -102,6 +107,7 @@ def gen_batches(seed: int = SEED) -> list[tuple[str, int, list[tuple]]]:
 
 @pytest.fixture(scope="module")
 def diff_store(spark, tmp_path_factory):
+    import ds2s.serve as serve
     from ds2s.invert import build_index
     from ds2s.manifest import IndexStore
 
@@ -111,8 +117,9 @@ def diff_store(spark, tmp_path_factory):
                                                       block_size=BLOCK),
                       build_arrays=False)
     store = IndexStore(str(tmp_path_factory.mktemp("diff") / "store"))
-    store.write_checkpointed(idx, source="differential", n_buckets=4,
-                             sb_size=4)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(serve, "_SB_SIZE", SB)
+        store.write_checkpointed(idx, source="differential", n_buckets=4)
     return idx, store
 
 
@@ -136,8 +143,8 @@ def test_generator_is_seeded_and_adversarial():
     assert {k for _, k, _ in gen_batches()} == {1, 10}
 
 
-@pytest.mark.parametrize("cache", ["cached", "uncached"])
-def test_every_tier_equals_ranked_or(spark, diff_store, monkeypatch, cache):
+@pytest.mark.parametrize("mode", MODES)
+def test_every_tier_equals_ranked_or(spark, diff_store, monkeypatch, mode):
     import ds2s.serve as serve
 
     idx, store = diff_store
@@ -150,25 +157,31 @@ def test_every_tier_equals_ranked_or(spark, diff_store, monkeypatch, cache):
         exact = _frame(Q.ranked_or_topk(idx, qdf, k=k))
         assert len(exact) > 0, name
         batches.append((name, k, qdf, est_blocks, exact))
-    sidx = ServingIndex.from_store(spark, store,
-                                   cache_blocks=cache == "cached")
-    fetch, cap = serve._DRIVER_FETCH_BLOCKS, sidx.plan_collect_cap
+    if mode == "memory":
+        monkeypatch.setattr(serve, "_SB_SIZE", SB)
+        sidx = ServingIndex(idx)
+    else:
+        sidx = ServingIndex.from_store(spark, store,
+                                       cache_blocks=mode == "cached")
+    assert sidx.sb_size == SB
+    fetch, cap = serve._DRIVER_FETCH_BLOCKS, serve._PLAN_COLLECT_CAP
     try:
         for ai, algo in enumerate(("bmw", "maxscore", "wand")):
             for ti, tier in enumerate(TIERS):
                 name, k, qdf, est_blocks, exact = batches[
-                    (ai + ti + (cache == "uncached")) % len(batches)
+                    (ai + ti + MODES.index(mode)) % len(batches)
                 ]
-                tier_fetch, sidx.plan_collect_cap = {
+                tier_fetch, tier_cap = {
                     "fetched": (fetch, cap),
                     "unfetched": (0, cap),
                     "superblock": (fetch, est_blocks - 1),
                     "kernel": (fetch, 0),
                 }[tier]
                 monkeypatch.setattr(serve, "_DRIVER_FETCH_BLOCKS", tier_fetch)
+                monkeypatch.setattr(serve, "_PLAN_COLLECT_CAP", tier_cap)
                 got = _frame(sidx.topk(qdf, k=k, algo=algo))
                 plan = sidx.last_plan
-                where = (name, algo, tier, cache, plan)
+                where = (name, algo, tier, mode, plan)
                 landed = ("fetched" if plan["scoring"] == "driver"
                           else "unfetched" if plan["tier"] == "driver"
                           else plan["tier"])

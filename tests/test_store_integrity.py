@@ -2,9 +2,10 @@
 from_store completeness gating, cache-handle release, u32 format guard.
 
 The store protocol under test:
-  * the unit-completeness fingerprint covers the WRITE ARGUMENTS that
-    change bytes on disk (codec override, n_buckets, sb_size), not just
-    IndexConfig — a codec-override rerun must rewrite, never no-op;
+  * the unit-completeness fingerprint covers the WRITE SETTINGS that
+    change bytes on disk (codec override, n_buckets, the superblock size
+    ``serve._SB_SIZE``), not just IndexConfig — a codec-override rerun
+    must rewrite, never no-op — and its default value is pinned;
   * units about to be rewritten lose their manifest lines BEFORE their
     data dirs are overwritten — a crash mid-rewrite must read as
     "never completed" under every config;
@@ -58,6 +59,27 @@ def test_codec_override_rerun_rewrites(tmp_path, spark, synth_idx):
     assert store.write_checkpointed(
         synth_idx, source="synth", codec="gvb", n_buckets=N_BUCKETS
     ) == 0
+
+
+def test_default_write_fingerprint_pinned(tmp_path, spark, synth_idx):
+    """The fingerprint of a default-config pef store at 8 buckets is
+    pinned, in the hash and in what the writer records: a writer change
+    that re-hashes it would mark every store on disk stale, and a resume
+    would rewrite whole stores."""
+    from ds2s.config import DEFAULT_CONFIG
+    from ds2s.manifest import _config_fingerprint
+
+    fp = "8fa92910af02cb85"
+    assert _config_fingerprint(
+        DEFAULT_CONFIG, {"codec": "pef", "n_buckets": 8, "sb_size": 128}
+    ) == fp
+    assert synth_idx.cfg == DEFAULT_CONFIG
+    store = IndexStore(str(tmp_path / "pinned"))
+    store.write_checkpointed(synth_idx, source="synth", codec="pef",
+                             n_buckets=8)
+    meta = store.load_meta()
+    assert (meta["config_fingerprint"], meta["sb_size"]) == (fp, 128)
+    assert {r["config"] for r in store.completed_units().values()} == {fp}
 
 
 def test_crashed_rewrite_invalidates_stale_lines(tmp_path, spark, synth_idx):

@@ -76,14 +76,14 @@ def test_sweep_equals_exhaustive_at_exact_k(intervals, theta0):
 
     # oracle: exhaustive scoring of every posting, same tie discipline
     all_scores = w * bmax
-    exp_docs, exp_scores = _rank(docs.copy(), all_scores.copy(), k, 6)
+    exp_docs, exp_scores = _rank(docs.copy(), all_scores.copy(), k)
     assert 32 in exp_docs and 0 not in exp_docs  # the trap is armed
 
     # θ₀ as the seed sets it: the true k-th score less one quantum, the
     # tightest static threshold the driver can hand the kernel
     th = 0.0 if theta0 == "zero" else float(exp_scores[-1]) - 1e-6
     got_docs, got_scores = _sweep_topk(
-        per_term, k, theta0=th, avg=avg, scorer=scorer, rank_round=6
+        per_term, k, theta0=th, avg=avg, scorer=scorer
     )
 
     np.testing.assert_array_equal(got_docs, exp_docs)
