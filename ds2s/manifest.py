@@ -24,12 +24,19 @@ Payload columns carry no parquet statistics: ``doc_bytes``, ``tf_bytes``,
 min/max blobs or a column index no reader filters on.  ``term_id`` keeps
 its stats: uncached serving's ``term_id IN`` prunes row groups with them.
 
-Resume protocol: a bucket is complete iff its manifest line exists —
-manifest lines are appended via atomic rename AFTER the bucket's parquet
-write succeeds, so a crash mid-bucket leaves no line and the bucket is
-rewritten idempotently (overwrite) on the next run.  Each line carries
-lineage (source path, config hash) + metrics (rows, bytes, wall seconds),
-the "_metrics table" of SURVEY.md §2.7.
+Resume protocol: ``IndexStore`` alone knows where a unit lives
+(``unit_path``) and whether it is complete (``complete_units``, read by
+the writer's done set and by ``ServingIndex.from_store``).  A unit is
+complete when its manifest line is current under the config fingerprint
+and, if it recorded rows, its files exist.  Lines are appended via atomic
+rename AFTER the unit's parquet write succeeds, so a crash mid-unit
+leaves no line, and a unit whose directory was lost has a line that no
+longer counts; either way the next run rewrites it (overwrite).  The
+blocks buckets are one physical write: if any is incomplete, every bucket
+line is dropped before the overwrite.  Each line carries lineage (source
+path, config hash) + metrics (rows summed from the written files' parquet
+footers, bytes of every file in the unit's directory, wall seconds), the
+"_metrics table" of SURVEY.md §2.7.
 
 Schema record: every table unit's line also carries ``schema``, the Spark
 schema (``StructType.jsonValue()``) of the table as written — the
@@ -52,9 +59,12 @@ import json
 import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict
 from pathlib import Path
 
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
@@ -97,6 +107,7 @@ class IndexStore:
 
     # -- manifest ----------------------------------------------------------
     def completed_units(self) -> dict[str, dict]:
+        """Every manifest line by unit name, current or stale."""
         units: dict[str, dict] = {}
         if self.manifest_path.exists():
             for line in self.manifest_path.read_text().splitlines():
@@ -105,15 +116,31 @@ class IndexStore:
                     units[row["unit"]] = row
         return units
 
-    @staticmethod
-    def unit_current(name: str, row: dict, fp: str | None) -> bool:
-        """Whether manifest line ``row`` vouches for unit ``name`` under
-        config fingerprint ``fp`` (None: a store too old to record one).
-        A line from another config is stale, and so is a table unit's
-        line without a schema record: it predates the record."""
-        return (fp is None or row.get("config") == fp) and (
-            "schema" in row or name == "_index"
-        )
+    def unit_path(self, name: str) -> Path:
+        """Where unit ``name`` lives: ``blocks_bucket_K`` is the blocks
+        table's ``bucket=K`` directory, ``_index`` is ``_index.json``,
+        any other unit the directory of its name."""
+        bucket = name.removeprefix("blocks_bucket_")
+        if bucket != name:
+            return self.root / "blocks" / f"bucket={bucket}"
+        return self.root / ("_index.json" if name == "_index" else name)
+
+    def complete_units(self, fp: str | None) -> dict[str, dict]:
+        """The units complete under config fingerprint ``fp`` (None: a
+        store too old to record one) — the one rule for the writer's done
+        set and for ``from_store``.  A line from another config is stale,
+        and so is a table unit's line without a schema record (it
+        predates the record).  A current line whose unit recorded rows
+        counts only while the unit's files exist: a lost directory is
+        rewritten, never served.  Reads no parquet file."""
+        return {
+            name: row
+            for name, row in self.completed_units().items()
+            if (fp is None or row.get("config") == fp)
+            and ("schema" in row or name == "_index")
+            and (int(row.get("n_rows", 0)) == 0
+                 or self.unit_path(name).exists())
+        }
 
     def _rewrite_manifest(self, units: dict) -> None:
         """The ONE atomic manifest rewrite (tmp + POSIX rename) — both
@@ -167,16 +194,22 @@ class IndexStore:
         source: str,
         codec: str | None = None,
         n_buckets: int = 8,
-        fail_after_units: int | None = None,
         blocks: DataFrame | None = None,
     ) -> int:
-        """Write all index tables; returns number of units written THIS run.
+        """Write every unit ``complete_units`` does not already hold;
+        returns the number of units written THIS run.
 
         The superblocks unit is cut at ``serve._SB_SIZE`` blocks, recorded
         in _index.json and hashed into the fingerprint.
 
-        ``fail_after_units`` injects a crash after N fresh units (test hook
-        for the kill/rerun resume property, SURVEY.md §7 Milestone 5).
+        One write order: corpus_manifest, sizes, lexicon and the blocks
+        group are independent tables, written concurrently from a thread
+        pool whose threads inherit the caller's Spark job group; the
+        superblocks unit (derived from the stored blocks) and ``_index``
+        follow.  If one of the pool's units fails, the others still run to
+        completion and record their lines before the failure propagates.
+        Each unit's line records rows summed from its parquet footers and
+        bytes of every file in its directory — no table is read back.
 
         ``blocks`` optionally supplies an ALREADY-ENCODED block table (e.g.
         ``ServingIndex.blocks``, typically persisted): the write then skips
@@ -203,12 +236,13 @@ class IndexStore:
         # incomplete and rewrites them (a mixed-config index would silently
         # corrupt top-k: e.g. old-block_size blocks no longer align with
         # fresh metadata).
-        done = {
-            name: row
-            for name, row in self.completed_units().items()
-            if self.unit_current(name, row, fp)
-        }
+        done = self.complete_units(fp)
         bucket_names = [f"blocks_bucket_{k}" for k in range(n_buckets)]
+        blocks_pending = any(name not in done for name in bucket_names)
+        if blocks_pending:
+            # one physical write overwrites every bucket
+            for name in bucket_names:
+                done.pop(name, None)
         # Invalidate-before-overwrite: any unit this run will (re)write
         # loses its old manifest line NOW, in one atomic rewrite, before
         # any data dir is touched — a crash mid-rewrite then reads as
@@ -224,48 +258,37 @@ class IndexStore:
         mlock = threading.Lock()  # _append_manifest is read-modify-write
 
         def record(name: str, n_rows: int, nbytes: int, wall_s: float,
-                   schema: StructType) -> None:
-            with mlock:
-                self._append_manifest(
-                    {
-                        "unit": name,
-                        "source": source,
-                        "config": fp,
-                        "n_rows": int(n_rows),
-                        "bytes": int(nbytes),
-                        "wall_s": round(wall_s, 3),
-                        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                        "schema": schema.jsonValue(),
-                    }
-                )
-
-        def unit(name: str, fn) -> None:
+                   schema: StructType | None) -> None:
             nonlocal written
-            if name in done:
-                return
-            if fail_after_units is not None and written >= fail_after_units:
-                raise RuntimeError(f"injected failure before unit {name}")
-            t0 = time.perf_counter()
-            n_rows, nbytes, schema = fn()
-            record(name, n_rows, nbytes, time.perf_counter() - t0, schema)
+            row = {
+                "unit": name,
+                "source": source,
+                "config": fp,
+                "n_rows": int(n_rows),
+                "bytes": int(nbytes),
+                "wall_s": round(wall_s, 3),
+                "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            }
+            if schema is not None:
+                row["schema"] = schema.jsonValue()
             with mlock:
+                self._append_manifest(row)
                 written += 1
 
-        def plain(df_or_fn, sub: str, options: dict | None = None):
-            """``df_or_fn`` may be a zero-arg callable building the frame:
-            unit() skips done units BEFORE running it, so a resumed no-op
-            pass must not pay (or crash on) the plan-construction reads of
+        def plain(name: str, build, options: dict | None = None) -> None:
+            """Write unit ``name`` from the frame ``build()`` returns.  A
+            done unit returns before ``build`` runs, so a resumed no-op
+            pass does not pay (or crash on) the plan-construction reads of
             already-written tables (round-5 review finding)."""
-            def run():
-                df = df_or_fn() if callable(df_or_fn) else df_or_fn
-                df.write.mode("overwrite").options(**(options or {})).parquet(
-                    str(self.root / sub))
-                # count from the written files (parquet footer metadata) —
-                # never re-executes the producing pipeline
-                n = self._read(spark, sub, df.schema).count()
-                return n, _dir_bytes(self.root / sub), df.schema
-
-            return run
+            if name in done:
+                return
+            t0 = time.perf_counter()
+            df = build()
+            path = self.unit_path(name)
+            df.write.mode("overwrite").options(**(options or {})).parquet(
+                str(path))
+            record(name, *_unit_size(path), time.perf_counter() - t0,
+                   df.schema)
 
         def blocks_group() -> None:
             # ONE pass writes every bucket (write.partitionBy): the
@@ -273,7 +296,7 @@ class IndexStore:
             # bucket.  Bucket units commit together; a crash mid-write
             # leaves no bucket lines and the whole blocks dir is rewritten
             # (overwrite) idempotently on resume.
-            nonlocal written, blocks
+            nonlocal blocks
             t0 = time.perf_counter()
             if blocks is None:
                 blocks = blocks_from_tf(
@@ -295,108 +318,68 @@ class IndexStore:
             )
             bucketed.write.partitionBy("bucket").mode("overwrite").options(
                 **_no_stats("doc_bytes", "tf_bytes", "len_bytes")
-            ).parquet(str(self.root / "blocks"))
+            ).parquet(str(self.unit_path("blocks")))
             wall = time.perf_counter() - t0
             # partitionBy stores `bucket` in the directory names; a read
-            # lists it last, where withColumn already put it
-            schema = bucketed.schema
-            # ONE footer-metadata count job for all buckets, not one per
-            # bucket (the per-bucket variant was n_buckets driver jobs)
-            counts = {
-                int(r["bucket"]): int(r["n"])
-                for r in self._read(spark, "blocks", schema)
-                .groupBy("bucket")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            for k, name in enumerate(bucket_names):
-                sub = self.root / "blocks" / f"bucket={k}"
-                record(name, counts.get(k, 0),
-                       _dir_bytes(sub) if sub.exists() else 0,
-                       wall / n_buckets, schema)
-                with mlock:
-                    written += 1
+            # lists it last, where withColumn already put it.  A bucket
+            # no term hashes to has no directory: 0 rows, 0 bytes.
+            for name in bucket_names:
+                record(name, *_unit_size(self.unit_path(name)),
+                       wall / n_buckets, bucketed.schema)
 
         # The four leading outputs are INDEPENDENT tables (corpus sha
         # manifest, sizes, lexicon, blocks) — their write jobs run
         # concurrently from worker threads against the shared scheduler
         # (idle-executor overlap; the same shape a cluster writer uses).
-        # The sequential path is kept for fail_after_units: crash
-        # injection needs a deterministic unit order (resume pytest).
+        # The pool's exit waits for every submitted unit, so a failing
+        # unit never cuts a sibling's write short.
         # INVARIANT: do not run a ds2s.serve query batch on this session
         # while these threads are in flight — serve's _no_aqe guard flips
         # the session-global spark.sql.adaptive.enabled (serialized among
         # serve callers by serve._AQE_LOCK, but a build stage launched
         # inside that window would run without AQE; the lexicon write
         # relies on AQE coalescing its range partitions).
-        indep: list[tuple[str, object]] = [
-            # per-row sha256 invariant vs the source (BASELINE.json:15)
-            (
-                "corpus_manifest",
-                plain(
-                    with_sha256(idx.corpus).select(
-                        "doc_id", "content_sha256"
-                    ),
-                    "corpus_manifest",
-                    _no_stats("content_sha256"),
-                ),
-            ),
-            ("sizes", plain(idx.sizes, "sizes")),
-            # lexicon is written TERM-SORTED (range partition + in-file
-            # sort): serving's `term IN (...)` lookup then prunes whole
-            # files via parquet min/max stats instead of scanning a
-            # billions-row code vocabulary per query batch (round-2
-            # verdict item 4).  No explicit partition count:
-            # repartitionByRange defaults to spark.sql.shuffle.partitions
-            # (AQE coalesces small ranges) and avoids the .rdd
-            # conversion-job probe.
-            (
-                "lexicon",
-                plain(
-                    idx.lexicon.repartitionByRange("term")
-                    .sortWithinPartitions("term"),
-                    "lexicon",
-                ),
-            ),
-        ]
-        blocks_pending = any(name not in done for name in bucket_names)
+        with ThreadPoolExecutor(max_workers=4) as ex:
 
-        if fail_after_units is not None:
-            for name, fn in indep:
-                unit(name, fn)
+            def submit(fn, *args):
+                # wrapped per call: each worker gets its own copy of this
+                # thread's local properties, the job group included
+                return ex.submit(inheritable_thread_target(spark)(fn), *args)
+
+            futs = [
+                # per-row sha256 invariant vs the source (BASELINE.json:15)
+                submit(plain, "corpus_manifest",
+                       lambda: with_sha256(idx.corpus).select(
+                           "doc_id", "content_sha256"),
+                       _no_stats("content_sha256")),
+                submit(plain, "sizes", lambda: idx.sizes),
+                # lexicon is written TERM-SORTED (range partition + in-file
+                # sort): serving's `term IN (...)` lookup then prunes whole
+                # files via parquet min/max stats instead of scanning a
+                # billions-row code vocabulary per query batch (round-2
+                # verdict item 4).  No explicit partition count:
+                # repartitionByRange defaults to spark.sql.shuffle.partitions
+                # (AQE coalesces small ranges) and avoids the .rdd
+                # conversion-job probe.
+                submit(plain, "lexicon",
+                       lambda: idx.lexicon.repartitionByRange("term")
+                       .sortWithinPartitions("term")),
+            ]
             if blocks_pending:
-                if written >= fail_after_units:
-                    raise RuntimeError("injected failure before unit blocks")
-                blocks_group()
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=4) as ex:
-                futs = [
-                    ex.submit(unit, name, fn)
-                    for name, fn in indep
-                    if name not in done
-                ]
-                if blocks_pending:
-                    futs.append(ex.submit(blocks_group))
-                for f in futs:
-                    f.result()  # re-raise the first failure
+                futs.append(submit(blocks_group))
+            for f in futs:
+                f.result()  # re-raise the first failure
 
         # superblock tier (Variable-BMW upper level, round-3): shared
         # definition with live serving (blocks.superblock_agg) — a
         # metadata-only scan of the stored blocks; serving grid-prunes
         # this 1/sb_size table before ever touching per-block metadata of
         # hot terms
-        unit(
-            "superblocks",
-            plain(
-                lambda: superblock_agg(self.load_table(spark, "blocks"),
-                                       sb_size),
-                "superblocks",
-            ),
-        )
+        plain("superblocks",
+              lambda: superblock_agg(self.load_table(spark, "blocks"), sb_size))
 
         if "_index" not in done:
+            t0 = time.perf_counter()
             stats = {
                 "n_docs": idx.n_docs,
                 "avg_len": idx.avg_len,
@@ -411,21 +394,11 @@ class IndexStore:
             }
             # tmp + rename: a crash mid-write must leave either the old
             # complete _index.json or none — never truncated JSON
-            tmp = self.root / "_index.json.tmp"
+            path = self.unit_path("_index")
+            tmp = path.with_suffix(".json.tmp")
             tmp.write_text(json.dumps(stats, indent=2))
-            os.replace(tmp, self.root / "_index.json")
-            self._append_manifest(
-                {
-                    "unit": "_index",
-                    "source": source,
-                    "config": fp,
-                    "n_rows": 1,
-                    "bytes": 0,
-                    "wall_s": 0.0,
-                    "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                }
-            )
-            written += 1
+            os.replace(tmp, path)
+            record("_index", 1, 0, time.perf_counter() - t0, None)
         return written
 
     # -- load --------------------------------------------------------------
@@ -434,9 +407,9 @@ class IndexStore:
         """Stored table ``name`` (``blocks`` included, with its ``bucket``
         partition column), read under the schema its manifest line
         recorded at write time — no schema-inference job, and an empty
-        table reads as an empty frame.  ``units`` is a
-        ``completed_units()`` snapshot to take the record from (default:
-        the manifest now).  A table with no schema record — never
+        table reads as an empty frame.  ``units`` is a manifest snapshot
+        (``completed_units()`` or ``complete_units(fp)``) to take the
+        record from (default: the manifest now).  A table with no schema record — never
         completed, or written before the record existed — raises."""
         units = self.completed_units() if units is None else units
         row = units.get("blocks_bucket_0" if name == "blocks" else name)
@@ -445,11 +418,8 @@ class IndexStore:
                 f"store at {self.root} has no schema record for table "
                 f"{name!r} — rerun write_checkpointed"
             )
-        return self._read(spark, name, StructType.fromJson(row["schema"]))
-
-    def _read(self, spark: SparkSession, name: str,
-              schema: StructType) -> DataFrame:
-        return spark.read.schema(schema).parquet(str(self.root / name))
+        return spark.read.schema(StructType.fromJson(row["schema"])).parquet(
+            str(self.unit_path(name)))
 
     def load_meta(self) -> dict:
         return json.loads((self.root / "_index.json").read_text())
@@ -476,5 +446,11 @@ class IndexStore:
         )
 
 
-def _dir_bytes(p: Path) -> int:
-    return sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
+def _unit_size(p: Path) -> tuple[int, int]:
+    """(rows, bytes) of the unit directory ``p``: rows summed from its
+    parquet footers, bytes over every file in it (``.crc`` and
+    ``_SUCCESS`` included); (0, 0) when the write made no directory."""
+    if not p.exists():
+        return 0, 0
+    rows = sum(pq.read_metadata(f).num_rows for f in p.rglob("*.parquet"))
+    return rows, sum(f.stat().st_size for f in p.rglob("*") if f.is_file())

@@ -478,39 +478,22 @@ class ServingIndex:
             IndexConfig.from_dict(meta["config"])
             if "config" in meta else DEFAULT_CONFIG
         )
-        # Completeness is the MANIFEST's verdict, not the directory's
-        # (round-5 review): a writer that crashed mid-write can leave a
-        # partially-committed parquet dir visible (task-commit committers)
-        # with no manifest line — loading it would silently drop terms
-        # from pruning metadata and corrupt top-k.  The derivable tier
-        # (superblocks) falls back to recomputation from blocks, exactly
-        # the resume protocol's reading; REQUIRED tables (lexicon, every
+        # Completeness is the store's verdict (IndexStore.complete_units,
+        # the writer's own done set): a line current under the fingerprint
+        # _index recorded, over files that exist.  A writer that crashed
+        # mid-write can leave a partially-committed parquet dir visible
+        # (task-commit committers) with no manifest line — loading it
+        # would silently drop terms from pruning metadata and corrupt
+        # top-k.  The derivable tier (superblocks) falls back to
+        # recomputation from blocks; REQUIRED tables (lexicon, every
         # blocks bucket) have no fallback, so an incomplete one is a loud
-        # error, never a silent partial index.  A table that IS
-        # manifest-complete but unreadable (I/O error, schema drift) still
-        # propagates, not silently rebuilt.
-        units = store.completed_units()
-        want_fp = meta.get("config_fingerprint")
-
-        def complete(name: str) -> bool:
-            row = units.get(name)
-            if row is None:
-                return False
-            # an empty bucket (0 rows recorded) legitimately has no dir
-            if int(row.get("n_rows", 0)) > 0 and not (
-                store.root
-                / name.replace("blocks_bucket_", "blocks/bucket=")
-            ).exists():
-                return False
-            # _index records the fingerprint its run wrote under; a unit
-            # line from another config vouches for data this meta does
-            # not describe
-            return store.unit_current(name, row, want_fp)
-
+        # error naming it, never a silent partial index.  A complete unit
+        # that is unreadable (I/O error, schema drift) still propagates.
+        units = store.complete_units(meta.get("config_fingerprint"))
         required = ["lexicon"] + [
             f"blocks_bucket_{k}" for k in range(int(meta.get("n_buckets", 0)))
         ]
-        missing = [u for u in required if not complete(u)]
+        missing = [u for u in required if u not in units]
         if missing:
             raise RuntimeError(
                 f"store at {store.root} is incomplete (missing/stale "
@@ -519,7 +502,7 @@ class ServingIndex:
             )
         superblocks = (
             store.load_table(spark, "superblocks", units)
-            if complete("superblocks") else None
+            if "superblocks" in units else None
         )
         self._init_tables(
             lexicon=store.load_table(spark, "lexicon", units),
@@ -597,8 +580,8 @@ class ServingIndex:
         every serving path makes.  ``term_id IN`` is the semantic filter,
         so an empty term set reads no rows; it reaches the SCAN, where
         cached-batch or parquet row-group stats prune before any payload
-        byte is materialized.  On the store layout (``blocks/bucket=k``,
-        ``bucket = term_id % n_buckets``, manifest.write_checkpointed) a
+        byte is materialized.  On the store layout (a ``bucket`` hive
+        partition, ``bucket = term_id % n_buckets``, manifest.py) a
         ``bucket IN`` hint from the same terms also prunes whole partition
         directories at planning time, so uncached serving lists and reads
         only the batch's buckets."""

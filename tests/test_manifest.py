@@ -18,15 +18,21 @@ N_BUCKETS = 4
 TOTAL_UNITS = 3 + N_BUCKETS + 1 + 1
 
 
-def test_checkpoint_resume_roundtrip(tmp_path, spark, synth_idx):
+def _failing_encode(*args, **kwargs):
+    raise RuntimeError("injected failure in the blocks encode")
+
+
+def test_checkpoint_resume_roundtrip(tmp_path, spark, synth_idx, monkeypatch):
     store = IndexStore(str(tmp_path / "idx"))
 
-    # first run dies after 3 units (before the blocks write)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        store.write_checkpointed(
-            synth_idx, source="synth", codec="pef", n_buckets=N_BUCKETS,
-            fail_after_units=3,
-        )
+    # first run dies in the blocks write; the pool still completes the
+    # three independent units before the failure propagates
+    with monkeypatch.context() as m:
+        m.setattr("ds2s.manifest.blocks_from_tf", _failing_encode)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            store.write_checkpointed(
+                synth_idx, source="synth", codec="pef", n_buckets=N_BUCKETS
+            )
     assert len(store.completed_units()) == 3
 
     # resume: only the remaining units are written

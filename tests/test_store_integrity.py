@@ -82,7 +82,8 @@ def test_default_write_fingerprint_pinned(tmp_path, spark, synth_idx):
     assert {r["config"] for r in store.completed_units().values()} == {fp}
 
 
-def test_crashed_rewrite_invalidates_stale_lines(tmp_path, spark, synth_idx):
+def test_crashed_rewrite_invalidates_stale_lines(tmp_path, spark, synth_idx,
+                                                 monkeypatch):
     """Full store under config A; a rerun under config B crashes before
     the blocks overwrite completes.  A subsequent rerun under A must treat
     EVERY unit as incomplete (the stale A lines were invalidated before
@@ -90,17 +91,21 @@ def test_crashed_rewrite_invalidates_stale_lines(tmp_path, spark, synth_idx):
     for a dir B had already destroyed."""
     import dataclasses
 
-
     store = IndexStore(str(tmp_path / "crashb"))
     store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
     assert len(store.completed_units()) == TOTAL_UNITS
 
     cfg_b = dataclasses.replace(synth_idx.cfg, block_size=32)
     idx_b = dataclasses.replace(synth_idx, cfg=cfg_b)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        store.write_checkpointed(
-            idx_b, source="synth", n_buckets=N_BUCKETS, fail_after_units=3
-        )
+
+    def failing_encode(*args, **kwargs):
+        raise RuntimeError("injected failure in the blocks encode")
+
+    with monkeypatch.context() as m:
+        m.setattr("ds2s.manifest.blocks_from_tf", failing_encode)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            store.write_checkpointed(idx_b, source="synth",
+                                     n_buckets=N_BUCKETS)
     # no unit may still claim config-A completeness
     rewritten = store.write_checkpointed(
         synth_idx, source="synth", n_buckets=N_BUCKETS
@@ -513,3 +518,134 @@ def test_older_store_format_loads_and_serves(tmp_path, spark, synth_idx):
         F.when(F.col("doc_id") == 3, F.lit("EVIL")).otherwise(F.col("content")),
     )
     assert store.verify_sha256(tampered) == 1
+
+
+@pytest.mark.parametrize("lost", ["blocks_bucket", "lexicon"])
+def test_lost_unit_dir_refused_then_rewritten(tmp_path, spark, synth_idx,
+                                              lost):
+    """A unit whose line is current but whose directory is gone is not
+    complete, for the writer and for ``from_store`` alike: the load
+    refuses the store naming the unit, ONE rerun rewrites it (every
+    bucket, for a blocks bucket: one physical write), the healed store
+    serves bmw/maxscore/wand equal to ``ranked_or_topk``, and a further
+    rerun writes nothing."""
+    import shutil
+
+    from ds2s.serve import ServingIndex
+
+    store = IndexStore(str(tmp_path / "lost"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
+    units = store.completed_units()
+    if lost == "blocks_bucket":
+        name = next(f"blocks_bucket_{k}" for k in range(N_BUCKETS)
+                    if units[f"blocks_bucket_{k}"]["n_rows"] > 0)
+        rewrites = N_BUCKETS
+    else:
+        name, rewrites = "lexicon", 1
+    shutil.rmtree(store.unit_path(name))
+
+    with pytest.raises(RuntimeError, match=f"incomplete.*{name}"):
+        ServingIndex.from_store(spark, store)
+    assert store.write_checkpointed(
+        synth_idx, source="synth", n_buckets=N_BUCKETS) == rewrites
+    assert store.completed_units()[name]["n_rows"] == units[name]["n_rows"]
+    sidx = ServingIndex.from_store(spark, store)
+    try:
+        _exact_equals_store(spark, synth_idx, sidx,
+                            [(0, 0, "def"), (0, 1, "return"), (1, 0, "class"),
+                             (2, 0, "var0")])
+    finally:
+        sidx.unpersist()
+    assert store.write_checkpointed(
+        synth_idx, source="synth", n_buckets=N_BUCKETS) == 0
+
+
+def _assert_rows_recorded(spark, store: IndexStore) -> None:
+    """Every table unit's recorded ``n_rows`` equals its table's row
+    count, read through ``load_table`` (blocks per bucket)."""
+    per_bucket = dict(store.load_table(spark, "blocks")
+                      .groupBy("bucket").count().collect())
+    for name, row in store.completed_units().items():
+        if name == "_index":
+            continue
+        if name.startswith("blocks_bucket_"):
+            n = per_bucket.get(int(name.rsplit("_", 1)[1]), 0)
+        else:
+            n = store.load_table(spark, name).count()
+        assert row["n_rows"] == n, (name, row["n_rows"], n)
+
+
+def test_recorded_rows_equal_table_rows(tmp_path, spark, synth_idx):
+    """The writer takes ``n_rows`` from the parquet footers of the files
+    it wrote; they must equal the tables' row counts on the synth store,
+    on a store with empty buckets (2 terms over 4 buckets: an empty
+    bucket records 0 rows and 0 bytes) and on the no-token store."""
+    from ds2s.invert import build_index
+
+    store = IndexStore(str(tmp_path / "synth"))
+    store.write_checkpointed(synth_idx, source="synth", n_buckets=N_BUCKETS)
+    _assert_rows_recorded(spark, store)
+
+    two_terms = build_index(spark.createDataFrame(
+        [(0, "alpha beta"), (1, "beta")], schema="doc_id long, content string"),
+        build_arrays=False)
+    store = IndexStore(str(tmp_path / "two_terms"))
+    store.write_checkpointed(two_terms, source="two_terms", n_buckets=4)
+    _assert_rows_recorded(spark, store)
+    buckets = [store.completed_units()[f"blocks_bucket_{k}"]
+               for k in range(4)]
+    assert sum(r["n_rows"] for r in buckets) == 2
+    assert any(r["n_rows"] == 0 == r["bytes"] for r in buckets)
+
+    no_tokens = build_index(spark.createDataFrame(
+        [(0, ""), (1, " ... ")], schema="doc_id long, content string"),
+        build_arrays=False)
+    store = IndexStore(str(tmp_path / "no_tokens"))
+    store.write_checkpointed(no_tokens, source="empty", n_buckets=N_BUCKETS)
+    _assert_rows_recorded(spark, store)
+    assert store.completed_units()["sizes"]["n_rows"] == 2
+
+
+def test_store_write_jobs_run_in_callers_group(tmp_path, spark, synth_idx):
+    """Every Spark job of a store write, the ones its pool threads submit
+    included, lands in the caller's job group: the jobs between two marker
+    jobs are exactly the group's.  A synth store write of an encoded
+    block table runs at most 8 jobs (5 table writes; the lexicon's range
+    sample and shuffle; the superblock aggregate's shuffle), and at most
+    12 when it encodes the blocks itself.  ``idx.sizes`` is a lazy cache
+    whose first reader fills it; it is filled first, so only the write's
+    own jobs are counted."""
+    from ds2s.serve import ServingIndex
+
+    sc = spark.sparkContext
+
+    def marker() -> int:
+        sc.setJobGroup("store-write-marker", "job-id marker")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup("store-write-marker"))
+
+    synth_idx.sizes.count()
+    sidx = ServingIndex(synth_idx, codec="pef")
+    sidx.blocks.count()
+    try:
+        for blocks, bound in ((sidx.blocks, 8), (None, 12)):
+            store = IndexStore(str(tmp_path / f"jobs_{bound}"))
+            group = f"store-write-{bound}"
+            first = marker()
+            sc.setJobGroup(group, "store write")
+            try:
+                assert store.write_checkpointed(
+                    synth_idx, source="synth", codec="pef",
+                    blocks=blocks) == 13
+            finally:
+                sc.setJobGroup(None, None)
+            last = marker()
+            jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+            assert jobs == set(range(first + 1, last)), (jobs, first, last)
+            assert 0 < len(jobs) <= bound, (bound, len(jobs))
+    finally:
+        sidx.unpersist()
